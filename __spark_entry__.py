@@ -4554,7 +4554,19 @@ def entry(spark: SparkSession) -> DataFrame:
 #: window (age 0, hashed twice running) and the remaining r15 cohort
 #: (age 3, leads the next rotation); all stay hash-checked by
 #: tools/check_correctness full-registry runs every session.
+#:
+#: Scorecard-render rotation: the scorecard scoring and PSI-monitor
+#: expressions are now rendered as one parsed SQL string, so the five
+#: queries that score through them (scorecard_scores ..
+#: psi_variable_report) lead the window; the last three r15-cohort
+#: slots (psi, repetition_flags, scorecard_table_rebased) move to the
+#: head of the tail.
 _WINDOW = [
+    "scorecard_scores",
+    "scorecard_scores_logistic",
+    "scorecard_scores_linear",
+    "scorecard_scores_huber",
+    "psi_variable_report",
     "semantic_dedup",
     "incremental_dedup",
     "exact_dedup",
@@ -4566,14 +4578,12 @@ _WINDOW = [
     "jaccard_pairs",
     "training_sequences",
     "ann_topk",
-    "scorecard_scores_huber",
     "event_window_stats",
     "ks",
     "multiclass_binning_table",
     "outlier_zscore",
     "quantile_splits",
     "regression_metrics",
-    "scorecard_scores_logistic",
     "uniform_binning_table",
     "binning_2d_pinned",
     "class_weight_agg",
@@ -4602,9 +4612,6 @@ _WINDOW = [
     "multimodal_frames",
     "pack_sequences_bpe",
     "pii_redaction",
-    "psi",
-    "repetition_flags",
-    "scorecard_table_rebased",
 ]
 
 #: Tail: the remaining r15-green entries (age 3 — they lead the next
@@ -4613,6 +4620,9 @@ _WINDOW = [
 #: tools/check_correctness full-registry runs even while out of the
 #: driver window.
 _TAIL = [
+    "psi",
+    "repetition_flags",
+    "scorecard_table_rebased",
     "shard_assignment",
     "simhash_pairs",
     "sketch_categorical_merge",
@@ -4677,16 +4687,13 @@ _TAIL = [
     "continuous_bin_stats",
     "categorical_optimal_binning",
     "scorecard_table",
-    "scorecard_scores",
     "multiclass_bin_counts",
     "scenario_binning_table",
     "woe_transform",
     "mean_transform",
     "binning_process_summary",
-    "scorecard_scores_linear",
     "binning_2d_table",
     "continuous_binning_2d_table",
-    "psi_variable_report",
     "near_dup_cosine",
     "doc_token_stats",
     "near_dup_cosine_bucketed",

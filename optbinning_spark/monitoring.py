@@ -54,9 +54,10 @@ class ScorecardMonitoring:
             )
         )
         self._score_edges = edges
-        from .operators.preprocessing import numeric_bin_expr
+        from .operators.fastlit import sql_ident
+        from .operators.preprocessing import numeric_bin_sql
 
-        b = numeric_bin_expr(F.col("__score"), edges)
+        b = F.expr(numeric_bin_sql(sql_ident("__score"), edges))
         binary = sc._target_type == "binary"
         aggs = [F.count("*").alias("n")]
         if binary:

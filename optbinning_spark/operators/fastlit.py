@@ -112,6 +112,31 @@ def sql_str_lit(s: str) -> str:
 # backwards-compatible internal alias (pre-r18 name)
 _fmt_str = sql_str_lit
 
+def sql_lit(v) -> str:
+    """SQL literal typed as ``F.lit(v)``/``isin(v)`` types the value
+    (py4j: int32-range int -> INT, wider -> BIGINT; float -> DOUBLE via
+    the round-trip repr; NumPy scalars unwrapped), so rendered
+    comparisons coerce like Column-built ones. Other types raise."""
+    if hasattr(v, "item"):
+        v = v.item()
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v) if -2 ** 31 <= v < 2 ** 31 else f"{v}L"
+    if isinstance(v, float):
+        return _fmt_scalar(v)
+    if isinstance(v, str):
+        return sql_str_lit(v)
+    raise TypeError(f"no SQL literal rendering for {type(v).__name__}: {v!r}")
+
+
+def sql_ident(name: str) -> str:
+    """Backtick-quoted identifier; a dotted name quotes each segment,
+    so it resolves as a nested/qualified reference the way F.col does.
+    The ONE quoting implementation for every SQL-string builder."""
+    return ".".join(
+        "`" + part.replace("`", "``") + "`" for part in name.split("."))
+
 
 def str_int_map_sql(mapping: dict) -> str:
     """The SQL ``map(...)`` rendering behind ``str_int_map_lit`` —

@@ -21,6 +21,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.fastlit import sql_ident
+
 # observability for use_window="auto" (tests + post-hoc diagnosis):
 # caller name -> {"estimated_hottest": int, "use_window": bool}.
 # Diagnostic only, last-call-wins per caller name — concurrent calls
@@ -194,15 +196,6 @@ def shingles_expr(text: Column, n: int = 3) -> Column:
     return shingles_from_words(F.split(text, " "), n)
 
 
-def _q(name: str) -> str:
-    """Backtick-quoted SQL identifier. Dotted names quote each path
-    segment (like F.col), so a qualified/nested reference such as
-    'meta.text' keeps resolving instead of becoming one literal
-    identifier."""
-    return ".".join(
-        "`" + part.replace("`", "``") + "`" for part in name.split("."))
-
-
 def shingles_from_words_sql(words_sql: str, n: int = 3) -> str:
     """SQL rendering of shingles_from_words over an already-projected
     words column — the driver-latency fast path (one parsed F.expr
@@ -260,7 +253,7 @@ def staged_minhash_arrays(
     ]
     return (
         df.select(*keep_cols,
-                  F.expr(f"split({_q(text_col)}, ' ')").alias("__w"))
+                  F.expr(f"split({sql_ident(text_col)}, ' ')").alias("__w"))
         .select(
             *keep_cols,
             F.expr(shingles_from_words_sql("`__w`", shingle_n))
