@@ -1054,7 +1054,7 @@ LAST_CC_STATS: dict = {}
 def q_dedup_clusters_dist(spark, sf_dir):
     """dedup_clusters with the DISTRIBUTED closure forced
     (driver_threshold=0): the large-star/small-star loop itself runs
-    and is timed/regression-guarded, instead of the driver union-find
+    and is timed/regression-guarded, instead of the driver closure
     fast path the small candidate set would normally take. Same
     result set, same oracle, different physical path — this is the
     100 TB shape."""
@@ -4561,7 +4561,16 @@ def entry(spark: SparkSession) -> DataFrame:
 #: psi_variable_report) lead the window; the last three r15-cohort
 #: slots (psi, repetition_flags, scorecard_table_rebased) move to the
 #: head of the tail.
+#:
+#: Driver-closure rotation: the driver closure of connected_components
+#: now fetches its edge list as Arrow columns and labels it with the
+#: vectorized min-label kernel, so the two queries that close duplicate
+#: clusters (dedup_clusters on the driver path, dedup_clusters_dist on
+#: the distributed path, which shares the kernel) lead the window;
+#: pii_redaction, the last window slot, moves to the head of the tail.
 _WINDOW = [
+    "dedup_clusters",
+    "dedup_clusters_dist",
     "scorecard_scores",
     "scorecard_scores_logistic",
     "scorecard_scores_linear",
@@ -4573,7 +4582,6 @@ _WINDOW = [
     "dsir_logweights",
     "lm_perplexity",
     "paragraph_dedup",
-    "dedup_clusters",
     "nb_quality_score",
     "jaccard_pairs",
     "training_sequences",
@@ -4611,7 +4619,6 @@ _WINDOW = [
     "mixture_rates",
     "multimodal_frames",
     "pack_sequences_bpe",
-    "pii_redaction",
 ]
 
 #: Tail: the remaining r15-green entries (age 3 — they lead the next
@@ -4620,6 +4627,7 @@ _WINDOW = [
 #: tools/check_correctness full-registry runs even while out of the
 #: driver window.
 _TAIL = [
+    "pii_redaction",
     "psi",
     "repetition_flags",
     "scorecard_table_rebased",
@@ -4660,7 +4668,6 @@ _TAIL = [
     "outlier_yquantile",
     "special_missing_stats",
     "counterfactual_pinned",
-    "dedup_clusters_dist",
     "bm25_topk",
     "classification_metrics",
     "event_type_psi",

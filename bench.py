@@ -61,7 +61,7 @@ HEADLINE = [
     # the same closure with the DISTRIBUTED large-star/small-star loop
     # forced (driver_threshold=0) — times the 100 TB path itself, so a
     # regression in the star rounds can't hide behind the driver
-    # union-find fast path
+    # closure fast path
     "dedup_clusters_dist",
     # exact substring-duplicate span detection (scan + window over the
     # hashed n-gram key — the newest scan-heavy pipeline family)

@@ -169,9 +169,12 @@ def _qp_rescue(H, f, Aeq, G, h, sweeps=20000):
     equality-KKT polish whose KKT conditions are VERIFIED (primal
     feasibility, dual nonnegativity, stationarity). For a convex QP a
     verified KKT point is the global optimum, so a polished return is
-    exact, not approximate. Returns None when it cannot certify
-    (indefinite H, unconverged dual) — the caller keeps its loud
-    refusal for that case."""
+    exact, not approximate. If the polish does not verify, the dual
+    iterate itself is returned only when it passes the same three
+    checks (stationarity under the polish's bound, feasibility and
+    complementarity under the caller's 1e-6 bound). Returns None when
+    it cannot certify (indefinite H, unconverged dual) — the caller
+    keeps its loud refusal for that case."""
     n = H.shape[0]
     h_scale = max(float(np.abs(H).max()), 1.0)
     Hs = H / h_scale
@@ -197,8 +200,8 @@ def _qp_rescue(H, f, Aeq, G, h, sweeps=20000):
     D = np.einsum("ij,ji->i", C_s, W)       # C_i Hs^-1 C_i' >= 0
     x = np.linalg.solve(Hs, fs)
     lam = np.zeros(M)
-    # x == Hs^-1 (fs - C_s' lam) is maintained exactly through the
-    # incremental updates, so stationarity holds by construction.
+    # x == Hs^-1 (fs - C_s' lam) is maintained by the incremental
+    # updates, up to rounding.
     for _ in range(sweeps):
         delta = 0.0
         for i in range(M):
@@ -243,9 +246,10 @@ def _qp_rescue(H, f, Aeq, G, h, sweeps=20000):
             1.0 + float(np.abs(fs).max()) + float(np.abs(lam_p).max()))
         if feas and eq_ok and dual_ok and stat_ok:
             return x_p
-    # polish unverified: the dual iterate itself is feasible-to-
-    # tolerance and stationary by construction; accept it under the
-    # caller's own feasibility bound, else give up loudly.
+    # polish unverified: accept the dual iterate only as a verified
+    # KKT point (see docstring) — the incremental updates keep
+    # stationarity only in exact arithmetic, so after up to `sweeps`
+    # rounds of rounding it is checked, not assumed; else give up.
     viol_ok = (G is None or not len(G)
                or float((G @ x - h).max()) <= 1e-6 * xn)
     eq_ok = not k_eq or float(np.abs(Aeq @ x).max()) <= 1e-6 * xn
@@ -253,7 +257,10 @@ def _qp_rescue(H, f, Aeq, G, h, sweeps=20000):
     for i in range(k_eq, M):
         comp = max(comp, abs(lam[i] * (float(C_s[i] @ x) - d_s[i])))
     comp_ok = comp <= 1e-6 * (1.0 + float(np.abs(fs).max()))
-    if viol_ok and eq_ok and comp_ok:
+    stat = Hs @ x - fs + C_s.T @ lam
+    stat_ok = float(np.abs(stat).max()) <= 1e-8 * (
+        1.0 + float(np.abs(fs).max()) + float(np.abs(lam).max()))
+    if viol_ok and eq_ok and comp_ok and stat_ok:
         return x
     return None
 

@@ -164,6 +164,38 @@ def _driver_logistic(X, y, w, max_iter=100, tol=1e-10):
     return list(beta[:-1]), float(beta[-1])
 
 
+def _arrow_columns(df: DataFrame, cols, max_rows: int | None = None):
+    """Fetch ``df`` to the driver with ONE ``toArrow()``; return
+    ``(arrays, n_rows)`` with ``cols`` as float64 NumPy arrays in the
+    frame's row order. ``arrays`` is None when any of ``cols`` carries
+    a NULL (Arrow's per-column null counts replace a per-Row ``None``
+    scan) or when ``n_rows`` exceeds ``max_rows``. Compared with
+    ``collect()`` plus a float loop over py4j Rows the values are
+    bit-identical (float() and astype(float) round alike), and a
+    20,000 x 18 design moves in 0.05-0.08 s instead of 0.46-0.70 s
+    (4 vCPU, local[4]).
+    The Arrow table is dropped on return; only the arrays stay."""
+    tbl = df.toArrow()
+    n = tbl.num_rows
+    if (max_rows is not None and n > max_rows) or any(
+            tbl.column(c).null_count for c in cols):
+        return None, n
+    return [tbl.column(c).to_numpy().astype(float) for c in cols], n
+
+
+def _design(cols, n_rows, k, order="C"):
+    """(X, y, w) from _arrow_columns' arrays: the first k are the
+    features, stacked into an (n_rows, k) matrix in memory ``order``.
+    The layout sets the BLAS summation order, hence the last ulp of
+    the coefficients: each estimator keeps the layout it has always
+    been fitted on (C for the compressed design, F for the robust
+    sample, which was read through pandas)."""
+    X = np.empty((n_rows, k), order=order)
+    for j in range(k):
+        X[:, j] = cols[j]
+    return X, cols[k], cols[k + 1]
+
+
 def _bp_row_count_hint(bp) -> int | None:
     """Total fitted row count from an already-fitted BinningProcess's
     first binning table (clean + special + missing bins sum to every
@@ -279,7 +311,7 @@ class Scorecard:
             )
             hkey = F.xxhash64(*self.selected_, F.col("__y"), F.col("__w"))
             order_cols = [hkey, *self.selected_, "__y", "__w"]
-            # Arrow toPandas, not collect(): the 100k-row sample
+            # Arrow columns, not collect(): the 100k-row sample
             # arrives as columnar batches instead of 100k py4j Row
             # objects + a Python float loop — measured 2.2 s -> 0.24 s
             # at the sf0.1 anchor shape, bit-identical values.
@@ -301,7 +333,16 @@ class Scorecard:
             # unfiltered top-k (set equality, same order); a short
             # result (binomial shortfall at ~90 sigma, or a row count
             # near cap) falls back to the exact unfiltered pass.
-            pdf = None
+            #
+            # A null or NaN here poisons every coefficient downstream:
+            # refuse both loudly.
+            bad = (
+                "null/NaN in the robust-estimator design matrix "
+                "(WoE feature, label or weight) — refusing a "
+                "silently-poisoned fit; filter or impute the "
+                "offending rows before Scorecard.fit")
+            cols = [*self.selected_, "__y", "__w"]
+            got = None
             prefilter = bool(self.estimator_params.get(
                 "sample_prefilter", True))
             # n only sizes the filter threshold (exactness is
@@ -314,28 +355,21 @@ class Scorecard:
             if prefilter and n_rows > 2 * cap:
                 frac = 1.5 * cap / n_rows
                 t_cut = int(-(2 ** 63) + frac * 2.0 ** 64)
-                pdf = (
+                got = _arrow_columns(
                     sel.filter(hkey <= F.lit(t_cut))
-                    .orderBy(*order_cols).limit(cap).toPandas()
-                )
-                if len(pdf) < cap:
-                    pdf = None  # margin failed: exact fallback
-            if pdf is None:
-                pdf = sel.orderBy(*order_cols).limit(cap).toPandas()
-            X = pdf[list(self.selected_)].to_numpy(dtype=float)
-            yy = pdf["__y"].to_numpy(dtype=float)
-            ww = pdf["__w"].to_numpy(dtype=float)
-            # the collect()->toPandas swap silently turns a null
-            # label/weight into NaN where float(None) used to raise —
-            # a NaN here poisons every coefficient downstream, so
-            # fail as loudly as the old path did
+                    .orderBy(*order_cols).limit(cap), cols)
+                if got[1] < cap:
+                    got = None  # margin failed: exact fallback
+            if got is None:
+                got = _arrow_columns(
+                    sel.orderBy(*order_cols).limit(cap), cols)
+            if got[0] is None:
+                raise ValueError(bad)
+            X, yy, ww = _design(*got, len(self.selected_), "F")
+            del got
             if not (np.isfinite(X).all() and np.isfinite(yy).all()
                     and np.isfinite(ww).all()):
-                raise ValueError(
-                    "null/NaN in the robust-estimator design matrix "
-                    "(WoE feature, label or weight) — refusing a "
-                    "silently-poisoned fit; filter or impute the "
-                    "offending rows before Scorecard.fit")
+                raise ValueError(bad)
             if kind0 == "huber":
                 return _driver_huber(
                     X, yy, ww,
@@ -375,42 +409,47 @@ class Scorecard:
 
         # Driver solve on the collected sufficient statistics when the
         # compressed design is small (it is, by construction: at most
-        # prod(n_bins) * n_labels rows). One collect replaces the
+        # prod(n_bins) * n_labels rows). One fetch replaces the
         # per-LBFGS-iteration job storm; results match an unregularized
         # MLlib fit to optimizer tolerance. Large compressed designs
         # (high-cardinality interactions) fall back to MLlib.
         reg = float(self.estimator_params.get("regParam", 0.0))
         max_driver_rows = int(self.estimator_params.get("max_driver_rows", 100_000))
-        rows = None
+        design = None
         if reg == 0.0:
             # deterministic order: the normal-equation sums are float
             # and order-dependent at the last ulp; a stable orderBy
-            # makes consecutive fits bit-identical
-            rows = woe.orderBy(*self.selected_, y).limit(
-                max_driver_rows + 1).collect()
-            if len(rows) > max_driver_rows:
-                rows = None
-        if rows is not None:
-            # same loud-failure posture as the robust-estimator sample
-            # path above: a NULL label (e.g. the target column carries
-            # missing values) used to surface as a bare "float()
-            # argument ... NoneType" from deep inside the
-            # comprehension, and a NaN label (Spark's sum PROPAGATES
-            # NaN through the design compression) silently poisoned
-            # every coefficient — refuse both with the actionable
-            # message
-            if any(r[y] is None or r["__w"] is None
-                   or ("__badlab" in r and (r["__badlab"] or 0) > 0)
-                   or any(r[v] is None for v in self.selected_)
-                   for r in rows):
-                raise ValueError(
-                    "null in the estimator design (WoE feature, label "
-                    "or weight) — the target column carries missing "
-                    "values; filter or impute the offending rows "
-                    "before Scorecard.fit")
-            X = np.array([[float(r[v]) for v in self.selected_] for r in rows])
-            yy = np.array([float(r[y]) for r in rows])
-            ww = np.array([float(r["__w"]) for r in rows])
+            # makes consecutive fits bit-identical. Fetched as Arrow
+            # columns (_arrow_columns), not py4j Rows: the design can
+            # hold max_driver_rows rows, and at 20k rows Rows plus a
+            # float loop took ~10x the transfer time and raised the
+            # driver's memory peak by ~11 MB more (4 vCPU).
+            #
+            # Same loud-failure posture as the robust-estimator sample
+            # path above: a NULL label (for the linear estimator,
+            # counted per group by __badlab) or a NaN label (Spark's
+            # sum PROPAGATES NaN through the design compression) would
+            # bias or poison every coefficient — refuse both with the
+            # actionable message
+            null_msg = (
+                "null in the estimator design (WoE feature, label "
+                "or weight) — the target column carries missing "
+                "values; filter or impute the offending rows "
+                "before Scorecard.fit")
+            cols = [*self.selected_, y, "__w"]
+            if kind != "logistic":
+                cols.append("__badlab")
+            got, n = _arrow_columns(
+                woe.orderBy(*self.selected_, y).limit(max_driver_rows + 1),
+                cols, max_driver_rows)
+            if n <= max_driver_rows:
+                if got is None or (kind != "logistic"
+                                   and (got.pop() > 0).any()):
+                    raise ValueError(null_msg)
+                design = _design(got, n, len(self.selected_))
+            del got
+        if design is not None:
+            X, yy, ww = design
             if not (np.isfinite(X).all() and np.isfinite(yy).all()
                     and np.isfinite(ww).all()):
                 raise ValueError(

@@ -300,3 +300,59 @@ def test_qp_rescue_solves_active_set_stalls_exactly():
         xp = np.clip(x + p, -0.05, 0.05)
         xp[1] = xp[0]
         assert 0.5 * xp @ H @ xp - f @ xp >= obj - 1e-6 * (1 + abs(obj))
+
+
+@pytest.mark.parametrize("drift", [0.0, 0.01])
+def test_qp_rescue_unpolished_fallback_is_stationary_or_none(
+        monkeypatch, drift):
+    """When the KKT polish cannot verify, _qp_rescue may fall back to
+    the raw dual iterate — but only to a KKT point. The polish is
+    forced to fail (lstsq returns NaN). With drift > 0 the Hs^-1 C'
+    columns the incremental updates move x along are also perturbed
+    off their span, so the dual ascent still ends feasible and
+    complementary while x leaves stationarity. The result must be
+    either None or stationary: a multiplier fit on the active set must
+    leave a residual within the polish path's scaled bound."""
+    from optbinning_spark.piecewise import _qp_rescue
+
+    lstsq, solve = np.linalg.lstsq, np.linalg.solve
+
+    def broken_lstsq(a, b, rcond=None):
+        return np.full(a.shape[1], np.nan), None, 0, None
+
+    def drifting_solve(a, b):
+        out = solve(a, b)
+        if np.ndim(b) == 2:
+            out = out + drift * np.cos(np.arange(out.size)).reshape(
+                out.shape)
+        return out
+
+    rng = np.random.default_rng(1)
+    n = 4
+    B = rng.normal(size=(n + 2, n))
+    H = B.T @ B + np.eye(n)
+    f = rng.normal(size=n) * 2.0
+    G = np.vstack([np.eye(n), -np.eye(n)])
+    h = np.full(2 * n, 0.5)
+    Aeq = np.array([[1.0, -1.0, 0.0, 0.0]])
+    # the box binds: the unconstrained optimum lies outside it
+    assert np.abs(solve(H, f)).max() > 0.5
+
+    with monkeypatch.context() as m:
+        m.setattr(np.linalg, "lstsq", broken_lstsq)
+        m.setattr(np.linalg, "solve", drifting_solve)
+        x = _qp_rescue(H, f, Aeq, G, h)
+    if drift == 0.0:
+        assert x is not None  # an exact dual iterate is accepted
+    if x is None:
+        return
+    xn = 1.0 + np.abs(x).max()
+    assert (G @ x - h).max() <= 1e-6 * xn
+    active = G[G @ x - h >= -1e-6 * xn]
+    A = np.vstack([Aeq, active])
+    lam = lstsq(A.T, f - H @ x, rcond=None)[0]
+    resid = H @ x - f + A.T @ lam
+    assert np.abs(resid).max() <= 1e-8 * (
+        1.0 + np.abs(f).max() + np.abs(lam).max())
+    assert lam[len(Aeq):].min(initial=0.0) >= -1e-8 * (
+        1.0 + np.abs(lam).max())

@@ -19,12 +19,24 @@ the Spark UI REST API. Output: one JSON line (paste the SCALING.md
 row from it).
 
 Usage: python tools/measure_cc_scale.py [n_edges_millions (default 10)]
+
+``--driver`` mode times the DRIVER closure instead (the path every
+edge set of at most ``driver_threshold`` = 1M edges takes: one fetch
+of the edge list, labelled on the driver) on the same graph shape at
+0.1, 0.5 and 1 M edges, and records the Python process's maxrss
+before and after each size. maxrss is a high-water mark, so the sizes
+run in increasing order and the rise per size is what the fetch and
+the labelling added on top of every smaller size. One JSON line per
+size.
+
+Usage: python tools/measure_cc_scale.py --driver [repeats (default 3)]
 """
 
 from __future__ import annotations
 
 import json
 import os
+import resource
 import sys
 import time
 import urllib.request
@@ -77,7 +89,44 @@ def build_graph(spark, n_edges_m: float):
     return chain.unionByName(pl).unionByName(blobs)
 
 
+def _maxrss_mb() -> float:
+    """This process's peak resident set size so far (Linux: KiB)."""
+    return round(resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024, 1)
+
+
+def driver_main(repeats: int) -> None:
+    spark = get_spark("cc_driver")
+    spark.sparkContext.setLogLevel("ERROR")
+    for n_edges_m in (0.1, 0.5, 1.0):
+        pairs = build_graph(spark, n_edges_m).localCheckpoint(eager=True)
+        rss0 = _maxrss_mb()
+        walls = []
+        for _ in range(repeats):
+            stats: dict = {}
+            t0 = time.perf_counter()
+            cc = connected_components(pairs, stats=stats)
+            walls.append(round(time.perf_counter() - t0, 3))
+        rss1 = _maxrss_mb()
+        assert stats["path"] == "driver", stats
+        chain = (cc.where(F.col("node") < 10_000_000)
+                 .agg(F.countDistinct("component").alias("c"),
+                      F.min("component").alias("m")).first())
+        assert (chain["c"], chain["m"]) == (1, 0), chain
+        print(json.dumps({
+            "edges": stats["edges"],
+            "path": stats["path"],
+            "wall_s": walls,
+            "nodes": cc.count(),
+            "py_maxrss_mb_before": rss0,
+            "py_maxrss_mb_after": rss1,
+        }), flush=True)
+    spark.stop()
+
+
 def main():
+    if sys.argv[1:2] == ["--driver"]:
+        driver_main(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
+        return
     n_edges_m = float(sys.argv[1]) if len(sys.argv) > 1 else 10.0
     # the shuffle-byte telemetry comes from the UI REST API; the
     # session factory keeps the UI off unless this is exported
