@@ -4568,7 +4568,20 @@ def entry(spark: SparkSession) -> DataFrame:
 #: clusters (dedup_clusters on the driver path, dedup_clusters_dist on
 #: the distributed path, which shares the kernel) lead the window;
 #: pii_redaction, the last window slot, moves to the head of the tail.
+#:
+#: Process-fit rotation: BinningProcess.fit now has one route, the
+#: stacked aggregation, for every prebinning method (the multi-pass
+#: fit and the categorical salt are deleted), so the four queries that
+#: fit a process through it (binning_process_summary on the narrow
+#: path, wide_process_fit and its exact-probe and banded-contract
+#: twins on the wide path) lead the window; the last four window slots
+#: (event_psi_monitor .. pack_sequences_bpe) move to the head of the
+#: tail.
 _WINDOW = [
+    "binning_process_summary",
+    "wide_process_fit",
+    "wide_fit_exact",
+    "wide_fit_contract",
     "dedup_clusters",
     "dedup_clusters_dist",
     "scorecard_scores",
@@ -4615,10 +4628,6 @@ _WINDOW = [
     "doc_contamination",
     "doc_split_assignment",
     "embedding_dedup_clusters",
-    "event_psi_monitor",
-    "mixture_rates",
-    "multimodal_frames",
-    "pack_sequences_bpe",
 ]
 
 #: Tail: the remaining r15-green entries (age 3 — they lead the next
@@ -4627,6 +4636,10 @@ _WINDOW = [
 #: tools/check_correctness full-registry runs even while out of the
 #: driver window.
 _TAIL = [
+    "event_psi_monitor",
+    "mixture_rates",
+    "multimodal_frames",
+    "pack_sequences_bpe",
     "pii_redaction",
     "psi",
     "repetition_flags",
@@ -4681,14 +4694,11 @@ _TAIL = [
     "chi2_tests",
     "event_rate_order",
     "prebin_counts",
-    "wide_process_fit",
     "counterfactual",
     "multiclass_mean_woe_transform",
-    "wide_fit_contract",
     "binning_2d_3x3",
     "sketch_binning_table",
     "scorecard_table_linear",
-    "wide_fit_exact",
     "optimal_binning_table",
     "optimal_woe_transform",
     "continuous_bin_stats",
@@ -4698,7 +4708,6 @@ _TAIL = [
     "scenario_binning_table",
     "woe_transform",
     "mean_transform",
-    "binning_process_summary",
     "binning_2d_table",
     "continuous_binning_2d_table",
     "near_dup_cosine",

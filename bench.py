@@ -661,11 +661,9 @@ def main():
         anchor = {"error": str(e)[:200]}
     scal.end("scorecard_anchor")
 
-    # Crossover regression watch (pinned round-6 measured decisions):
-    # window <= two-phase for the n-gram count shape, and unsalted <=
-    # salted for the categorical fit (checked inside _salt_ab below).
-    # A Spark-version or data-shape change that flips either crossover
-    # must fail LOUDLY — in the compact contract line, not a buried
+    # Crossover regression watch (pinned round-6 measured decision):
+    # window <= two-phase for the n-gram count shape. A Spark-version
+    # or data-shape change that flips the crossover must fail LOUDLY — in the compact contract line, not a buried
     # artifact field.
     watch: dict = {}
     scal.begin("regression_watch")
@@ -979,18 +977,12 @@ def main():
     # line carries the verdict even if the full artifact is unread
     watch_failed = [k for k, v in watch.items()
                     if isinstance(v, dict) and v.get("inverted")]
-    if (sf1.get("salt_ab") or {}).get("inverted"):
-        watch_failed.append("salt_ab")
     # skipped watches surface as their own first-class field so a
     # budget-blown run reads "not checked", never "green"
     watch_skipped = [k for k, v in watch.items()
                      if isinstance(v, dict) and v.get("skipped")]
     if watch.get("skipped"):
         watch_skipped.append("window_vs_two_phase")
-    if (sf1.get("salt_ab") or {}).get("skipped"):
-        watch_skipped.append("salt_ab")
-    if sf1.get("skipped"):
-        watch_skipped.append("salt_ab")
     for w in watch_failed:
         print(f"REGRESSION WATCH INVERTED: {w} — a pinned crossover "
               f"flipped; see bench_out.json", file=sys.stderr)
@@ -1231,8 +1223,6 @@ def _regression_watch(spark, sf_dir, t_start, budget_s=540, reps=3):
        two-phase groupBy+join in every regime (tools/ab_window_vs_agg).
        Inverted when window > 1.15 * two_phase (min-of-N), i.e. the
        structural 2x advantage has not merely narrowed but flipped.
-    2. ``salt_vs_unsalted`` is covered by _salt_ab in the sf1 section
-       (unsalted default; margin 1.25 there — thinner measured gap).
 
     The same checks run as hard pytest asserts under SPARK_GRAFT_SLOW=1
     (tests/test_regression_watch.py)."""
@@ -1264,16 +1254,9 @@ def _sf1_organic_section(spark, qs, t_start, budget_s=420):
     vocab with 1.46M distinct 3-gram shingles, 10% boilerplate
     10-gram, real exact/near/cross-shard dup structure, 6M lineitem
     rows spanning 200k partkeys). Unlike the retired 10-copy ladder,
-    dedup here has to find organically-placed duplicates, shingle
-    cardinality grows with the corpus, and the categorical key space
-    crosses the auto-salt gate — so the slopes answer the questions
-    the self-similar ladder could not.
-
-    Also times the auto-salt A/B the gate's threshold was set from
-    synthetic fixtures for: a 1-variable categorical fit on l_partkey
-    as string (200k distinct > the 65,536 gate) with the salt engaged
-    (default) vs disabled (threshold raised past the cardinality) —
-    the crossover check at organic scale.
+    dedup here has to find organically-placed duplicates and shingle
+    cardinality grows with the corpus — so the slopes answer the
+    questions the self-similar ladder could not.
 
     NB: sf1 numbers carry HOST-level noise this harness cannot remove
     (r5 profiling: identical reps swinging 2.3s..13.4s with every
@@ -1312,17 +1295,6 @@ def _sf1_organic_section(spark, qs, t_start, budget_s=420):
     done = [v for v in out.values() if v is not None]
     section["total"] = round(sum(done), 3)
     section["n_timed"] = len(done)
-    # auto-salt A/B runs FIRST among the post-query extras (r11 ask:
-    # it was budget-skipped — a watch, unlike the descriptive corpus
-    # probe, must not be the first thing the deadline eats) and with
-    # its own raised allowance
-    if time.time() - t_start > budget_s + 240:
-        section["salt_ab"] = {"skipped": "budget"}
-    else:
-        try:
-            section["salt_ab"] = _salt_ab(spark, sf1)
-        except Exception as e:
-            section["salt_ab"] = {"error": str(e)[:120]}
     # corpus shape, so the slopes are interpretable
     try:
         docs = spark.read.parquet(f"{sf1}/documents.parquet")
@@ -1365,54 +1337,6 @@ def _sf1_organic_section(spark, qs, t_start, budget_s=420):
         except Exception as e:
             section["dedup_clusters_dist"] = {"error": str(e)[:120]}
     return section
-
-
-def _salt_ab(spark, sf1_dir):
-    """Categorical fit on a 200k-distinct key with the salt engaged
-    (explicit threshold 65,536 < 200k) vs off. Round-6 evidence that
-    led to the default flip (cat_salt_threshold=None): the per-
-    partition-constant salt only spreads reduce-side load, which
-    map-side partial aggregation already absorbs for the fit's
-    algebraic aggregations — salted measured slower in every regime
-    (uniform 200k/2M distinct AND 50%-hot-key). Re-measured each
-    round so a planner change that flips the verdict is noticed."""
-    from pyspark.sql import functions as F
-
-    from optbinning_spark import BinningProcess
-
-    li = (
-        spark.read.parquet(f"{sf1_dir}/lineitem.parquet")
-        .select(
-            F.concat(F.lit("p"), F.col("l_partkey")).alias("pk_cat"),
-            (F.col("l_returnflag") == "R").cast("int").alias("y"),
-        )
-    )
-    out = {}
-    for label, thr in (("salted", 65_536), ("unsalted", 1 << 40)):
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            bp = BinningProcess(variable_names=["pk_cat"],
-                                categorical_variables=["pk_cat"],
-                                cat_salt_threshold=thr)
-            bp.fit(li, "y")
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
-            gc.collect()
-        out[label] = round(best, 3)
-        if label == "salted":
-            out["salt_engaged"] = bool(bp._stats_salt_partitions)
-    spark._jvm.System.gc()
-    # crossover watch: the default is UNSALTED (cat_salt_threshold=
-    # None, round-6 measured decision — map-side partial aggregation
-    # absorbs hot keys for algebraic aggs). Inverted = unsalted lost
-    # by >25% (thinner measured gap than the window A/B: r7 showed
-    # unsalted 5.11 s vs salted 6.18 s), meaning the default should be
-    # re-examined.
-    out["margin"] = 1.25
-    out["inverted"] = out["unsalted"] > out["salted"] * 1.25
-    return out
 
 
 if __name__ == "__main__":

@@ -102,7 +102,6 @@ class _BaseOptimalBinning:
         fix_lb: float | None = None,
         fix_ub: float | None = None,
         prebinning_kwargs: dict | None = None,
-        cat_salt_partitions: int | None = None,
     ):
         self.name = name
         self.dtype = dtype
@@ -132,9 +131,6 @@ class _BaseOptimalBinning:
         self.outlier_params = outlier_params
         self.fix_lb = fix_lb
         self.fix_ub = fix_ub
-        # power-law skew hardening for the categorical fit aggregation
-        # (salted two-phase groupBy; see categorical_value_stats)
-        self.cat_salt_partitions = cat_salt_partitions
         # X4 (reference binning.py:427-430): pre-binning parameter
         # pass-through — overrides the derived CART/MDLP defaults
         self.prebinning_kwargs = dict(prebinning_kwargs or {})
@@ -652,7 +648,6 @@ class OptimalBinning(_BaseOptimalBinning):
         cats, missing, specials, tail = categorical_value_stats(
             df, x, y, w, special_codes=self.special_codes,
             target_type="binary",
-            salt_partitions=self.cat_salt_partitions,
         )
         self._finalize_categorical(cats, missing, specials, x, tail=tail)
 
@@ -902,7 +897,6 @@ class ContinuousOptimalBinning(_BaseOptimalBinning):
         cats, missing, specials, tail = categorical_value_stats(
             df, x, y, w, special_codes=self.special_codes,
             target_type="continuous",
-            salt_partitions=self.cat_salt_partitions,
         )
         self._finalize_categorical(cats, missing, specials, x, tail=tail)
 

@@ -2,18 +2,23 @@
 
 Reference: optbinning/binning/binning_process.py. The reference fans
 out per-variable fits across joblib threads and (in fit_disk) reads
-one column at a time. The Spark-native design replaces both with a
-CONSTANT number of jobs regardless of variable count:
+one column at a time. The Spark-native fit gets every variable's
+statistics from ONE stacked aggregation grouped by (variable, sample
+class, exact value or bucket, category), so the number of Spark
+actions does not grow with the variable count:
 
-  job 1 - multi-column approxQuantile (quantile prebins and/or CART
-          histogram edges for every numeric variable at once)
-  job 2 - (cart/mdlp only) ONE stacked histogram aggregation:
-          Bucketizer over all numeric columns -> explode structs ->
-          groupBy(variable, bucket)  [single shuffle, bounded output]
-  job 3 - ONE stacked bin-stats aggregation over all variables
-          (numeric bins and categorical values unified on a string
-          key) -> groupBy(variable, sample_class, key)
-  driver - per-variable DP solve + table build (ms each)
+  narrow  - (< _WIDE_FIT variables, probe_mode="approx") the stacked
+            aggregation alone, every numeric grouped by exact value,
+            LIMIT-guarded, with target-type inference riding along:
+            ONE action. A numeric past the exact-value cap re-routes
+            the fit through the probe below (3 actions).
+  probe   - one aggregation: per-variable cardinality and quantile
+            edges (exact min/max for uniform prebinning) plus the
+            target type
+  stacked - the stacked aggregation, with high-cardinality numerics
+            and fixed (user or uniform) splits bucketized
+  driver  - split proposal, per-prebin statistics, per-variable DP
+            solve and table build, all from the one collected table
 
 Transform emits every selected variable's CASE expression in a single
 projection — one map-only pass for the whole matrix.
@@ -22,41 +27,57 @@ projection — one map-only pass for the whole matrix.
 from __future__ import annotations
 
 import json
-import os as _os
-import time as _time
 
 import numpy as np
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .binning import ContinuousOptimalBinning, OptimalBinning, _infer_dtype
-
-
-def _dbg(phase: str, t0: float):
-    """SPARK_GRAFT_FIT_DEBUG=1: per-phase wall times of the fused fit
-    to stderr — the tool that localized the sf1 variance (see
-    tools/profile_aging.py)."""
-    if _os.environ.get("SPARK_GRAFT_FIT_DEBUG"):
-        import sys
-
-        print(f"[fit-debug] {phase}: {_time.time() - t0:.2f}s",
-              file=sys.stderr, flush=True)
 from .core.tree import cart_splits, mdlp_splits
 from .multiclass_binning import MulticlassOptimalBinning
-from .operators.aggregation import _agg_exprs, _metric_names, assemble_bin_stats
+from .operators.aggregation import (  # noqa: F401  (assemble_bin_stats is re-exported)
+    _agg_exprs,
+    _metric_names,
+    assemble_bin_stats,
+    bin_stats_from_values,
+    snap_splits_to_edges,
+    weighted_percentile,
+)
+from .operators.fastlit import double_array_lit
 from .operators.preprocessing import (
     CLEAN,
     MISSING,
     clean_value_expr,
-    numeric_bin_expr,
-    sample_class_expr,
+    normalize_special_codes,
+    sample_class_code_expr,
+    sample_class_code_names,
 )
+from .sources.tables import spread
 
-_EPS = 1e-15
+# Fits of at least _WIDE_FIT variables are CPU-bound in the exploded
+# stacked aggregation: they spread the working set over every core and
+# persist it between the probe and the stats action. Narrower fits do
+# neither (the shuffle costs more than it buys) and try the one-action
+# narrow fit first. tools/profile_aging.py re-runs the spread/persist
+# experiment by rebinding these module constants.
+_WIDE_FIT = 8
+_SPREAD = True
+_PERSIST = True
+_PERSIST_LEVEL = StorageLevel.MEMORY_AND_DISK
+# probe percentile-sketch accuracy, and the value-hash sample modulus
+# of its quantile edges (1 value in _PROBE_MOD)
+_PROBE_ACC = 1000
+_PROBE_MOD = 50
+# numerics up to _PER_VAR_CAP distinct values group by exact value;
+# past it they group by one of _N_HIST quantile buckets
+_PER_VAR_CAP = 4096
+_N_HIST = 256
+_PREBINNING_METHODS = ("cart", "mdlp", "quantile", "uniform")
 
 
 class _DictRow:
-    """Row-like dict wrapper for assemble_bin_stats."""
+    """Row-like dict wrapper for the collected stacked rows."""
 
     __slots__ = ("_d",)
 
@@ -65,21 +86,6 @@ class _DictRow:
 
     def __getitem__(self, k):
         return self._d[k]
-
-
-def _infer_target_type(df: DataFrame, y: str) -> str:
-    kind = dict(df.dtypes)[y]
-    if kind in ("double", "float", "decimal"):
-        # continuous unless the distinct values are {0,1}
-        vals = [r[0] for r in df.select(y).distinct().limit(20).collect()]
-        if set(vals) <= {0.0, 1.0, None}:
-            return "binary"
-        return "continuous"
-    vals = [r[0] for r in df.select(y).distinct().limit(200).collect()]
-    vs = {v for v in vals if v is not None}
-    if vs <= {0, 1}:
-        return "binary"
-    return "multiclass"
 
 
 class BinningProcess:
@@ -103,7 +109,6 @@ class BinningProcess:
         max_pvalue: float | None = None,
         prebinning_method: str = "cart",
         prebinning_kwargs: dict | None = None,
-        cat_salt_threshold: int | None = None,
         probe_mode: str = "approx",
     ):
         self.variable_names = list(variable_names)
@@ -121,27 +126,13 @@ class BinningProcess:
         self.max_bin_size = max_bin_size
         self.monotonic_trend = monotonic_trend
         self.max_pvalue = max_pvalue
+        if prebinning_method not in _PREBINNING_METHODS:
+            raise ValueError(
+                f"prebinning_method must be one of {_PREBINNING_METHODS}; "
+                f"got {prebinning_method!r}")
         self.prebinning_method = prebinning_method
         self.prebinning_kwargs = dict(prebinning_kwargs or {})
-        # salt gate: when set and the fused fit's probe sees a
-        # categorical whose approx distinct count exceeds it, the
-        # stacked aggregation switches to the salted two-phase plan.
-        # Default OFF (None): the salt is per-partition-CONSTANT, so
-        # it can only spread REDUCE-side load across reducers — and
-        # the fit's aggregations are all algebraic, so map-side
-        # partial aggregation already shrinks every key (hot or not)
-        # to one row per map task before the shuffle. Measured on
-        # organic 6M-row fixtures (round 6, tools + bench salt_ab):
-        # salted loses in EVERY regime — 15.2s vs 9.8s at 200k
-        # distinct uniform, 99.8s vs 88.4s at 2M distinct, 19.7s vs
-        # 9.9s with a 50%-hot key (the case it was built for). The
-        # parameter remains for explicit opt-in (e.g. a custom
-        # non-algebraic aggregation grafted onto the stacked plan,
-        # where partial aggregation cannot absorb the hot key); the
-        # salted algebra itself is exact and value-identical
-        # (test_plan_quality pins both facts).
-        self.cat_salt_threshold = cat_salt_threshold
-        # probe accuracy for the fused fit's split-proposal job.
+        # probe accuracy for the fit's split-proposal probe.
         # "approx" (production default): HLL cardinality + sampled
         # percentile_approx bucket edges — one cheap pass at any scale.
         # "exact": exact count_distinct + exact full-data percentile
@@ -163,13 +154,10 @@ class BinningProcess:
     # ------------------------------------------------------------------
     def fit(self, df: DataFrame, y: str, sample_weight: str | None = None,
             target_type: str | None = None):
-        # target-type inference is folded into the fused path's probe
-        # job (one action instead of a separate distinct() scan); the
-        # non-fused fallback infers it with its own scan below
-        fused_eligible = self.prebinning_method in ("cart", "mdlp", "quantile")
+        # target-type and class-list inference ride the fit's own
+        # actions (see _fused_fit_stats)
         self._target_type = target_type
-        if self._target_type is None and not fused_eligible:
-            self._target_type = _infer_target_type(df, y)
+        self._classes = None
         df = df.filter(F.col(y).isNotNull())
 
         dtypes = {}
@@ -181,17 +169,9 @@ class BinningProcess:
             )
         self._dtypes = dtypes
 
-        classes = None
-        if self._target_type == "multiclass" and not fused_eligible:
-            classes = [
-                r[0]
-                for r in df.select(y).distinct().orderBy(y).collect()
-                if r[0] is not None
-            ]
-        self._classes = classes
-
         numeric = [v for v in self.variable_names if dtypes[v] == "numerical"]
         categorical = [v for v in self.variable_names if dtypes[v] == "categorical"]
+        wide = len(self.variable_names) >= _WIDE_FIT
 
         # normalized working frame: cleaned numeric cols (missing/special
         # -> NULL) so downstream passes need no per-variable filters.
@@ -199,9 +179,9 @@ class BinningProcess:
         # single-row-group repartition (spread) is a measured win only
         # for WIDE fits: at 16 vars the probe + stacked aggregation are
         # CPU-bound and a one-row-group scan pins them to one core
-        # (measured 14.7s -> ~7.5s at sf0.1), while at <= 7 vars the shuffle costs
-        # more than the parallelism buys (and the narrow fit keeps the
-        # 2-action/<=4-job plan contract, test_plan_quality.py:130).
+        # (measured 14.7s -> ~7.5s at sf0.1), while at <= 7 vars the
+        # shuffle costs more than the parallelism buys (and the narrow
+        # fit keeps its one-action plan, test_plan_quality).
         # On a real cluster the input has many splits and spread() is a
         # no-op either way.
         work = df.select(
@@ -209,12 +189,7 @@ class BinningProcess:
                 [y] + ([sample_weight] if sample_weight else [])
                 + self.variable_names)
         )
-        import os as _os
-
-        if (len(self.variable_names) >= 8
-                and not _os.environ.get("SPARK_GRAFT_NO_SPREAD")):
-            from .sources.tables import spread
-
+        if wide and _SPREAD:
             work = spread(df.sparkSession, work)
         # ONE select for all clean columns — a withColumn loop re-runs
         # analysis per column (quadratic in variable count; measurable
@@ -228,79 +203,36 @@ class BinningProcess:
                 for v in numeric
             ],
         )
-        fused = None
-        if fused_eligible:
-            # raw numeric columns with NO special codes are dead weight
-            # past this point (their sample class is derivable from the
-            # clean column — see _fused_fit_stats), so dropping them
-            # here shrinks the spread shuffle and the persisted cache
-            # by roughly half on the common all-clean wide fit
-            from .operators.preprocessing import normalize_special_codes
-
-            droppable = [
-                v for v in numeric
-                if not normalize_special_codes(self._codes_for(v))
-            ]
-            if droppable:
-                work = work.drop(*droppable)
-            # The fused fit reads the working set exactly TWICE (probe
-            # action + stats action); persisting the cleaned frame at
-            # MEMORY_AND_DISK lets the second action skip the scan +
-            # broadcast join + spread exchange. Deliberately only for
-            # wide fits: that is where the recomputed join/shuffle is
-            # material, and where the fit is the whole job. (At 100 TB
-            # this is the standard two-pass persist trade — one
-            # executor-local write/read vs recomputing a joined scan;
-            # MEMORY_AND_DISK spills instead of OOMing.)
-            # Measured A/B (fresh sessions, best-of-3, 16-var fit at
-            # sf0.1): spread+persist 5.43s, no-persist 7.07s,
-            # no-spread 7.11s, neither 6.21s — each knob is a clear
-            # win WITH the other; the SPARK_GRAFT_NO_PERSIST /
-            # SPARK_GRAFT_NO_SPREAD env gates re-run the experiment.
-            # The trade HOLDS at 10x data (r5 ladder / r6 organic
-            # sf1, 6M joined rows): persist 6.72s vs no-persist
-            # 6.91s — the win
-            # narrows as the scan parallelizes better, exactly the
-            # expected asymptote (persist saves one recompute of the
-            # join+clean projection; both sides scale with cores).
-            persisted = None
-            if (len(self.variable_names) >= 8
-                    and not _os.environ.get("SPARK_GRAFT_NO_PERSIST")):
-                from pyspark import StorageLevel
-
-                level = getattr(
-                    StorageLevel,
-                    _os.environ.get("SPARK_GRAFT_PERSIST_LEVEL",
-                                    "MEMORY_AND_DISK"))
-                work = work.persist(level)
-                persisted = work
-            try:
-                fused = self._fused_fit_stats(
-                    work, numeric, categorical, y, sample_weight, classes
-                )
-            finally:
-                if persisted is not None:
-                    persisted.unpersist()
-            classes = self._classes  # probe may have resolved them
-        if fused is not None:
-            splits_by_var, stats_by_var = fused
-        else:
-            if self._target_type is None:
-                self._target_type = _infer_target_type(df, y)
-            if self._target_type == "multiclass" and classes is None:
-                classes = [
-                    r[0]
-                    for r in df.select(y).distinct().orderBy(y).collect()
-                    if r[0] is not None
-                ]
-                self._classes = classes
-            splits_by_var = self._propose_splits(
-                work, numeric, y, sample_weight, classes
-            )
-            stats_by_var = self._stacked_stats(
-                df, numeric, categorical, splits_by_var, y, sample_weight,
-                classes,
-            )
+        # raw numeric columns with NO special codes are dead weight
+        # past this point (their sample class is derivable from the
+        # clean column — see _stacked_rows), so dropping them here
+        # shrinks the spread shuffle and the persisted cache by roughly
+        # half on the common all-clean wide fit
+        droppable = [
+            v for v in numeric
+            if not normalize_special_codes(self._codes_for(v))
+        ]
+        if droppable:
+            work = work.drop(*droppable)
+        # A wide fit reads the working set exactly TWICE (probe action +
+        # stats action); persisting the cleaned frame lets the second
+        # action skip the scan + broadcast join + spread exchange.
+        # Measured A/B (fresh sessions, best-of-3, 16-var fit at
+        # sf0.1): spread+persist 5.43s, no-persist 7.07s, no-spread
+        # 7.11s, neither 6.21s — each is a clear win WITH the other.
+        # The trade holds at 10x data (organic sf1, 6M joined rows):
+        # persist 6.72s vs no-persist 6.91s, narrowing as the scan
+        # parallelizes better. MEMORY_AND_DISK spills instead of OOMing.
+        persisted = None
+        if wide and _PERSIST:
+            work = persisted = work.persist(_PERSIST_LEVEL)
+        try:
+            splits_by_var, stats_by_var = self._fused_fit_stats(
+                work, numeric, categorical, y, sample_weight, wide)
+        finally:
+            if persisted is not None:
+                persisted.unpersist()
+        classes = self._classes
 
         # driver: per-variable solve via the single-variable finalizers
         for v in self.variable_names:
@@ -362,242 +294,34 @@ class BinningProcess:
             return ContinuousOptimalBinning(**common)
         return MulticlassOptimalBinning(**common)
 
-    # ------------------------------------------------------------------
-    def _propose_splits(self, work, numeric, y, w, classes):
-        """Jobs 1-2: split proposal for every numeric variable with a
-        bounded number of passes."""
-        splits_by_var: dict[str, np.ndarray] = {}
-        if not numeric:
-            return splits_by_var
-        method = self.prebinning_method
-        task = "regression" if self._target_type == "continuous" else "classification"
-        cls = [0, 1] if self._target_type == "binary" else classes
-
-        user = {
-            v: np.unique(np.asarray(self._fit_param(v, "user_splits", None), dtype=float))
-            for v in numeric
-            if self._fit_param(v, "user_splits", None) is not None
-        }
-        todo = [v for v in numeric if v not in user]
-        splits_by_var.update(user)
-        if not todo:
-            return splits_by_var
-
-        if method == "quantile":
-            # 1e-3 rank error vs 1/max_n_prebins (~5%) bin widths is
-            # immaterial, and the GK state per column is ~10x smaller —
-            # at cluster scale the sketch merge traffic shrinks likewise
-            probs = list(np.linspace(0, 1, self.max_n_prebins + 1)[1:-1])
-            allq = work.approxQuantile([f"__clean_{v}" for v in todo], probs, 1e-3)
-            for v, qs in zip(todo, allq):
-                splits_by_var[v] = np.unique(np.asarray(qs, dtype=float))
-            return splits_by_var
-        if method == "uniform":
-            aggs = []
-            for v in todo:
-                aggs += [
-                    F.min(f"__clean_{v}").alias(f"mn_{v}"),
-                    F.max(f"__clean_{v}").alias(f"mx_{v}"),
-                ]
-            row = work.agg(*aggs).first()
-            for v in todo:
-                mn, mx = row[f"mn_{v}"], row[f"mx_{v}"]
-                if mn is None or mx is None or mn == mx:
-                    splits_by_var[v] = np.array([])
-                else:
-                    step = (mx - mn) / self.max_n_prebins
-                    splits_by_var[v] = np.unique(
-                        np.array(
-                            [mn + i * step for i in range(1, self.max_n_prebins)]
-                        )
-                    )
-            return splits_by_var
-
-        # cart / mdlp: exact distinct-value sufficient statistics first
-        # (one stacked groupBy(variable, value) aggregation, bounded
-        # collect) — a 1-feature tree depends only on per-value class
-        # weights, so this reproduces sklearn-CART thresholds exactly
-        # (golden parity); high-cardinality overflow falls back to the
-        # quantile-bucket histogram below.
-        exact_cap = 4096 * max(len(todo), 1)
-        structs_exact = [
-            F.struct(
-                F.lit(v).alias("variable"),
-                F.col(f"__clean_{v}").alias("value"),
-            )
-            for v in todo
-        ]
-        wcol_e = F.col(w) if w else F.lit(1.0)
-        expl = work.select(
-            F.explode(F.array(*structs_exact)).alias("s"),
-            F.col(y).alias("__y"), wcol_e.alias("__w"),
-        ).select("s.variable", "s.value", "__y", "__w").filter(
-            F.col("value").isNotNull()
-        )
-        if task == "classification":
-            aggs_e = [
-                F.sum(F.when(F.col("__y") == c, F.col("__w")).otherwise(0.0))
-                .alias(f"w_{i}")
-                for i, c in enumerate(cls)
-            ]
-        else:
-            aggs_e = [
-                F.sum("__w").alias("cnt"),
-                F.sum(F.col("__w") * F.col("__y")).alias("s1"),
-                F.sum(F.col("__w") * F.col("__y") * F.col("__y")).alias("s2"),
-            ]
-        rows = (
-            expl.groupBy("variable", "value").agg(*aggs_e)
-            .limit(exact_cap + 1).collect()
-        )
-        if len(rows) <= exact_cap:
-            by_var: dict[str, list] = {v: [] for v in todo}
-            for r in rows:
-                by_var[r["variable"]].append(r)
-            for v in todo:
-                rs = sorted(by_var.get(v, []), key=lambda r: r["value"])
-                if len(rs) < 2:
-                    splits_by_var[v] = np.array([])
-                    continue
-                values = np.array([r["value"] for r in rs], dtype=float)
-                if task == "classification":
-                    stats = np.array(
-                        [[r[f"w_{i}"] or 0.0 for i in range(len(cls))]
-                         for r in rs]
-                    )
-                    total_w = stats.sum()
-                else:
-                    stats = np.array(
-                        [[r["cnt"], r["s1"], r["s2"]] for r in rs], dtype=float
-                    )
-                    total_w = stats[:, 0].sum()
-                if method == "mdlp":
-                    splits_by_var[v] = mdlp_splits(
-                        values, stats, **self._prebin_kwargs(v, {}))
-                else:
-                    splits_by_var[v] = cart_splits(
-                        values, stats, task=task,
-                        **self._prebin_kwargs(v, dict(
-                            max_leaf_nodes=self.max_n_prebins,
-                            min_samples_leaf=self.min_prebin_size * total_w,
-                        )))
-            return splits_by_var
-
-        # fallback: one multi-column quantile job for histogram
-        # edges, one stacked histogram aggregation, driver trees.
-        from pyspark.ml.feature import Bucketizer
-
-        n_hist = 256
-        probs = list(np.linspace(0, 1, n_hist + 1)[1:-1])
-        allq = work.approxQuantile([f"__clean_{v}" for v in todo], probs, 1e-3)
-        edges_by_var = {}
-        for v, qs in zip(todo, allq):
-            edges_by_var[v] = sorted(set(qs))
-
-        buckable = [v for v in todo if edges_by_var[v]]
-        out_cols = [f"__bucket_{v}" for v in buckable]
-        buck = Bucketizer(
-            splitsArray=[
-                [-float("inf")] + [float(e) for e in edges_by_var[v]] + [float("inf")]
-                for v in buckable
-            ],
-            inputCols=[f"__clean_{v}" for v in buckable],
-            outputCols=out_cols,
-            handleInvalid="keep",
-        )
-        bucketed = buck.transform(work)
-        structs = [
-            F.struct(
-                F.lit(v).alias("variable"),
-                F.col(f"__bucket_{v}").alias("bucket"),
-                F.col(f"__clean_{v}").alias("value"),
-            )
-            for v in buckable
-        ]
-        wcol = F.col(w) if w else F.lit(1.0)
-        ycol = F.col(y)
-        exploded = bucketed.select(
-            F.explode(F.array(*structs)).alias("s"), ycol.alias("__y"), wcol.alias("__w")
-        ).select("s.variable", "s.bucket", "s.value", "__y", "__w")
-        # invalid bucket (null/NaN value) = len(edges)+1 per variable;
-        # cheap global filter: value is not null
-        exploded = exploded.filter(F.col("value").isNotNull())
-        if task == "classification":
-            aggs = [
-                F.sum(F.when(F.col("__y") == c, F.col("__w")).otherwise(0.0)).alias(
-                    f"w_{i}"
-                )
-                for i, c in enumerate(cls)
-            ]
-        else:
-            aggs = [
-                F.sum("__w").alias("cnt"),
-                F.sum(F.col("__w") * F.col("__y")).alias("s1"),
-                F.sum(F.col("__w") * F.col("__y") * F.col("__y")).alias("s2"),
-            ]
-        rows = (
-            exploded.groupBy("variable", "bucket")
-            .agg(F.max("value").alias("vmax"), *aggs)
-            .collect()
-        )
-        by_var: dict[str, list] = {v: [] for v in buckable}
-        for r in rows:
-            by_var[r["variable"]].append(r)
-        for v in todo:
-            rs = sorted(by_var.get(v, []), key=lambda r: r["bucket"])
-            if len(rs) < 2:
-                splits_by_var[v] = np.array([])
-                continue
-            values = np.array([r["vmax"] for r in rs], dtype=float)
-            if task == "classification":
-                stats = np.array(
-                    [[r[f"w_{i}"] or 0.0 for i in range(len(cls))] for r in rs]
-                )
-                total_w = stats.sum()
-            else:
-                stats = np.array(
-                    [[r["cnt"], r["s1"], r["s2"]] for r in rs], dtype=float
-                )
-                total_w = stats[:, 0].sum()
-            if method == "mdlp":
-                splits_by_var[v] = mdlp_splits(
-                    values, stats, **self._prebin_kwargs(v, {}))
-            else:
-                splits_by_var[v] = cart_splits(
-                    values, stats, task=task,
-                    **self._prebin_kwargs(v, dict(
-                        max_leaf_nodes=self.max_n_prebins,
-                        min_samples_leaf=self.min_prebin_size * total_w,
-                    )))
-        return splits_by_var
+    def _uniform_splits(self, mn, mx) -> np.ndarray:
+        """Equal-width prebin splits over the clean value range."""
+        if mn is None or mx is None or mn == mx:
+            return np.array([])
+        step = (mx - mn) / self.max_n_prebins
+        return np.unique(
+            np.array([mn + i * step for i in range(1, self.max_n_prebins)]))
 
     # ------------------------------------------------------------------
-    def _fused_fit_stats(self, work, numeric, categorical, y, w, classes):
-        """TWO-job whole-process fit for cart/mdlp: a probe aggregation
-        (per-variable HLL cardinality + quantile edges, no shuffle)
-        followed by ONE combined stacked aggregation grouped by
-        (variable, sample_class, distinct-value-or-bucket, category).
-        Split proposal AND per-prebin statistics both derive from that
-        single collect on the driver — the multi-variable analog of the
-        single-variable fused fit (binning.py _fused_fit).
+    def _fused_fit_stats(self, work, numeric, categorical, y, w, wide):
+        """Whole-process fit: split proposal AND per-prebin statistics
+        for every variable from ONE stacked aggregation grouped by
+        (variable, sample_class, distinct-value-or-bucket, category) —
+        the multi-variable analog of the single-variable fused fit
+        (binning.py _fused_fit).
 
-        Low-cardinality variables group by exact distinct value
-        (sklearn-CART-exact splits, golden parity); high-cardinality
-        variables group by quantile bucket with splits snapped to
-        bucket edges so the driver re-reduce stays exact. Replaces the
-        4-job path (exact attempt whose LIMIT could not prevent a full
-        shuffle of high-cardinality groups + approxQuantile + bucket
-        histogram + stacked stats).
+        Narrow fits try that aggregation alone first (one action, see
+        _optimistic_narrow_fit). Otherwise a probe aggregation
+        (per-variable cardinality + quantile edges, or exact min/max
+        for uniform prebinning) routes each numeric: low-cardinality
+        variables group by exact distinct value (sklearn-CART-exact
+        splits, golden parity); high-cardinality variables group by
+        quantile bucket with splits snapped to bucket edges so the
+        driver re-reduce stays exact; variables whose splits are known
+        before the aggregation (user or uniform) group by final bin.
 
-        Returns (splits_by_var, stats_by_var) or None to fall back.
+        Returns (splits_by_var, stats_by_var).
         """
-        from pyspark.ml.feature import Bucketizer
-
-        from .operators.aggregation import (
-            bin_stats_from_values,
-            snap_splits_to_edges,
-        )
-
         method = self.prebinning_method
 
         user = {
@@ -608,8 +332,8 @@ class BinningProcess:
         }
         todo = [v for v in numeric if v not in user]
 
-        # fold target-type / class-list inference into the probe so
-        # the whole fit stays at two actions (probe + stats agg)
+        # fold target-type / class-list inference into the fit's own
+        # actions (no separate distinct() scan)
         need_tt = self._target_type is None
         need_classes = (
             self._target_type == "multiclass" and self._classes is None
@@ -618,43 +342,28 @@ class BinningProcess:
             "double", "float") or dict(work.dtypes).get(y, "").startswith(
             "decimal")
 
-        # NOTE on local parallelism: wide fits (>= 8 variables) get a
-        # round-robin spread() at fit() entry, because there the
-        # exploded stacked aggregation is CPU-bound and a one-row-group
-        # scan pins it to one core. Narrow fits deliberately get NO
-        # repartition here: an interleaved A/B at sf0.1 showed the
-        # shuffle costing ~3x the whole fit (binning_process_summary
-        # 1.4s unshuffled vs 4.6s shuffled, scorecard fit 2.1s vs
-        # 3.7s) — the per-row work at <= 7 variables is too cheap to
-        # amortize a full-data exchange.
-        per_var_cap = 4096
-        n_hist = 256
         # ---- r18 optimistic single-action narrow fit -----------------
-        # Narrow fits (< 8 vars — no spread/persist pairing) skip the
-        # probe ACTION entirely: every todo variable is optimistically
-        # routed to the exact distinct-value path, and the stacked
-        # collect's LIMIT guard detects overflow (falling back to the
-        # probe-routed shape below — 3 actions on genuinely
-        # high-cardinality inputs, 1 on the calibrated common case).
-        # Target-type / class-list inference folds INTO the same
-        # action: float targets aggregate the continuous-metric
-        # superset plus a non-{0,1} flag (binary metrics then derive
-        # exactly on the driver: y in {0,1} makes sum(w*y) identical
-        # to sum(w | y=1)); integral targets add the raw target to the
-        # group key (per-class weighted counts merge exactly on the
-        # driver). Gated off for probe_mode="exact" (the deterministic
-        # -probe contract needs the probe) and the opt-in salt path
-        # (its decision rides the probe's HLLs).
-        if (len(self.variable_names) < 8
-                and self.probe_mode == "approx"
-                and self.cat_salt_threshold is None):
+        # Narrow fits (no spread/persist pairing) skip the probe ACTION
+        # entirely: every todo variable is optimistically routed to the
+        # exact distinct-value path, and the stacked collect's LIMIT
+        # guard detects overflow (falling back to the probe-routed
+        # shape below — 3 actions on genuinely high-cardinality inputs,
+        # 1 on the calibrated common case). Narrow fits deliberately
+        # get NO repartition: an interleaved A/B at sf0.1 showed the
+        # shuffle costing ~3x the whole fit (binning_process_summary
+        # 1.4s unshuffled vs 4.6s shuffled). Gated off for
+        # probe_mode="exact" (the deterministic-probe contract needs
+        # the probe).
+        if not wide and self.probe_mode == "approx":
             out = self._optimistic_narrow_fit(
-                work, numeric, categorical, user, todo, y, w, classes,
-                need_tt, need_classes, y_float,
-                per_var_cap=per_var_cap, n_hist=n_hist)
+                work, numeric, categorical, user, y, w,
+                need_tt, need_classes, y_float)
             if out is not None:
                 return out
-        probs = np.linspace(0, 1, n_hist + 1)[1:-1]
+        # splits known before the stacked aggregation: user splits,
+        # plus uniform splits from the probe's exact min/max
+        fixed = dict(user)
+        probs = np.linspace(0, 1, _N_HIST + 1)[1:-1]
         if todo or need_tt or need_classes:
             probe_aggs = []
             # ONE shared literal Column for the probability grid and
@@ -663,7 +372,6 @@ class BinningProcess:
             # multiplied that into ~7k driver calls (~2 s of socket
             # latency on a 16-variable fit). Columns are immutable —
             # one literal serves every percentile_approx.
-            from .operators.fastlit import double_array_lit
             probs_lit = double_array_lit(probs)
             # sketch accuracy 1000 (rank error ~0.1%, vs the 0.4%
             # bucket width the 256-edge grid needs) and a 2% value
@@ -673,13 +381,15 @@ class BinningProcess:
             # slowest corner — min-of-3 9.5s vs 6.8-7.6s for any
             # cheaper setting, with the edges only seeding bucket
             # boundaries for the high-cardinality snapping path
-            acc_lit = F.lit(int(_os.environ.get(
-                "SPARK_GRAFT_PROBE_ACC", "1000")))
-            sample_mod = F.lit(int(_os.environ.get(
-                "SPARK_GRAFT_PROBE_MOD", "50")))
+            acc_lit = F.lit(_PROBE_ACC)
+            sample_mod = F.lit(_PROBE_MOD)
             exact_probe = self.probe_mode == "exact"
             for v in todo:
                 cv = F.col(f"__clean_{v}")
+                if method == "uniform":
+                    probe_aggs.append(F.min(cv).alias(f"mn_{v}"))
+                    probe_aggs.append(F.max(cv).alias(f"mx_{v}"))
+                    continue
                 if exact_probe:
                     # exact mode: deterministic, replayable probe —
                     # exact distinct count (the small/big gate becomes
@@ -710,26 +420,12 @@ class BinningProcess:
                 # high-cardinality columns that actually use these
                 # edges, values are near-unique so this is row
                 # sampling, and it is fully deterministic.
-                cv = F.col(f"__clean_{v}")
                 probe_aggs.append(
                     F.percentile_approx(
                         F.when(F.pmod(F.hash(cv), sample_mod) == 0, cv),
                         probs_lit, acc_lit,
                     ).alias(f"q_{v}")
                 )
-            # opt-in salt probe (X7): categorical cardinality rides
-            # the SAME probe action (HLL state, no extra scan) and
-            # decides below whether the stacked aggregation takes the
-            # salted two-phase plan. Only collected when a threshold
-            # is SET (default None skips the HLLs entirely) and the
-            # probe runs anyway — a fit with no numeric proposals and
-            # a known target keeps its 1-action plan.
-            if self.cat_salt_threshold is not None:
-                for v in categorical:
-                    probe_aggs.append(
-                        F.approx_count_distinct(
-                            F.col(v), rsd=0.05).alias(f"ndc_{v}")
-                    )
             if need_tt and y_float:
                 # float target: binary iff values ⊆ {0, 1}; a single
                 # flag aggregate suffices (no distinct-value state)
@@ -741,9 +437,7 @@ class BinningProcess:
                 # classes by contract, like the reference)
                 probe_aggs.append(F.sort_array(
                     F.collect_set(F.col(y))).alias("__y_classes"))
-            _t_probe = _time.time()
             probe = work.agg(*probe_aggs).first()
-            _dbg("probe_agg", _t_probe)
             if need_tt:
                 if y_float:
                     self._target_type = (
@@ -754,81 +448,55 @@ class BinningProcess:
                         self._target_type = "binary"
                     else:
                         self._target_type = "multiclass"
-                        self._classes = classes = ycls
+                        self._classes = ycls
             elif need_classes:
-                self._classes = classes = [
+                self._classes = [
                     v for v in probe["__y_classes"] if v is not None]
-        else:
-            probe = None
 
-        # opt-in salt decision from the probe's HLL counts (rides the
-        # probe action for free): past an EXPLICIT threshold,
-        # pre-split every key across up to defaultParallelism reducers
-        # and re-reduce with the exact merge algebra (identical
-        # results; proven value-equal by test_plan_quality's
-        # salted-vs-unsalted check). Off by default — see the
-        # cat_salt_threshold comment in __init__ for the round-6
-        # measurements showing the salt loses in every regime for
-        # these algebraic aggregations.
-        salt_s = None
-        if (probe is not None and categorical
-                and self.cat_salt_threshold is not None):
-            try:
-                if any(probe[f"ndc_{v}"] > self.cat_salt_threshold
-                       for v in categorical):
-                    salt_s = min(
-                        work.sparkSession.sparkContext.defaultParallelism,
-                        16)
-            except (KeyError, ValueError):
-                salt_s = None
-        # observability: tests assert the auto decision engaged
-        self._stats_salt_partitions = salt_s
-
-        task = (
-            "regression" if self._target_type == "continuous"
-            else "classification"
-        )
-        tt = self._target_type
-        metrics = _metric_names(tt, classes)
-        small, big, edges_by_var, raw_edges_by_var = [], [], {}, {}
+        big, edges_by_var, raw_edges_by_var = [], {}, {}
         for v in todo:
+            if method == "uniform":
+                fixed[v] = self._uniform_splits(
+                    probe[f"mn_{v}"], probe[f"mx_{v}"])
+                continue
             raw = [float(e) for e in (probe[f"q_{v}"] or [])]
             edges = sorted(set(raw))
-            if probe[f"nd_{v}"] <= per_var_cap * 1.1 or not edges:
-                small.append(v)
-            else:
+            if probe[f"nd_{v}"] > _PER_VAR_CAP * 1.1 and edges:
                 big.append(v)
                 edges_by_var[v] = edges
                 raw_edges_by_var[v] = raw
-        # user-split variables ride the bucket path with the final
+        # fixed-split variables ride the bucket path with the final
         # splits AS the bucket edges: per-bucket stats ARE the per-bin
         # stats (left-closed Bucketizer == digitize right=False)
-        for v, us in user.items():
+        for v, us in fixed.items():
             if us.size:
                 big.append(v)
                 edges_by_var[v] = [float(e) for e in us]
-            else:
-                small.append(v)
 
-        rows = self._stacked_rows(
-            work, numeric, categorical, big, edges_by_var, y, w,
-            tt, classes, metrics, salt_s,
-            per_var_cap=per_var_cap, n_hist=n_hist)
+        stacked = (work, numeric, categorical, big, edges_by_var, y, w,
+                   self._target_type, self._classes)
+        rows = self._stacked_rows(*stacked)
         if rows is None:
-            return None
+            # numerics are bounded by the probe's routing, so only a
+            # categorical past the LIMIT's 100k-categories allowance
+            # lands here: re-run the same aggregation unbounded
+            rows = self._stacked_rows(*stacked, bounded=False)
         return self._reduce_stacked(
-            rows, numeric, categorical, user, edges_by_var,
-            raw_edges_by_var, metrics, tt, task, method, n_hist)
+            rows, numeric, categorical, fixed, edges_by_var,
+            raw_edges_by_var)
 
     # ------------------------------------------------------------------
     def _optimistic_narrow_fit(self, work, numeric, categorical, user,
-                               todo, y, w, classes, need_tt,
-                               need_classes, y_float, *, per_var_cap,
-                               n_hist):
+                               y, w, need_tt, need_classes, y_float):
         """Single-action narrow fit (see the call site comment).
         Returns (splits_by_var, stats_by_var) or None when the LIMIT
-        guard trips — the caller then runs the probe-routed shape."""
-        self._stats_salt_partitions = None
+        guard trips — the caller then runs the probe-routed shape.
+        Target-type / class-list inference folds INTO the same action:
+        float targets aggregate the continuous-metric superset plus a
+        non-{0,1} flag (binary metrics then derive exactly on the
+        driver: y in {0,1} makes sum(w*y) identical to sum(w | y=1));
+        integral targets add the raw target to the group key
+        (per-class weighted counts merge exactly on the driver)."""
         big, edges_by_var = [], {}
         # user-split variables ride the bucket path with the final
         # splits AS the bucket edges — they never need the probe
@@ -847,7 +515,7 @@ class BinningProcess:
 
         def _too_wide(rows):
             # per-variable routing gate, mirroring the probe's
-            # nd <= 1.1 * per_var_cap rule (true cardinality here
+            # nd <= 1.1 * _PER_VAR_CAP rule (true cardinality here
             # instead of the rsd=0.05 HLL estimate — they differ only
             # when HLL misses by >10%): any non-bucketized numeric
             # variable past the cap re-routes the WHOLE fit through
@@ -861,27 +529,20 @@ class BinningProcess:
                         and r["sample_class"] == 0
                         and r["gv"] is not None):
                     seen.setdefault(vid, set()).add(r["gv"])
-            lim = per_var_cap * 1.1
+            lim = _PER_VAR_CAP * 1.1
             return any(len(s) > lim for s in seen.values())
 
+        stacked = (work, numeric, categorical, big, edges_by_var, y, w)
         if mode == "std":
-            metrics = _metric_names(tt, classes)
-            rows = self._stacked_rows(
-                work, numeric, categorical, big, edges_by_var, y, w,
-                tt, classes, metrics, None,
-                per_var_cap=per_var_cap, n_hist=n_hist)
+            rows = self._stacked_rows(*stacked, tt, None)
             if rows is None or _too_wide(rows):
                 return None
         elif mode == "float_infer":
-            cont = _metric_names("continuous")
             agg_cols = _agg_exprs("__y", "__w", "continuous") + [
                 F.max(F.when(~F.col("__y").isin(0.0, 1.0), 1)
                       .otherwise(0)).alias("__non01")]
             rows = self._stacked_rows(
-                work, numeric, categorical, big, edges_by_var, y, w,
-                "continuous", None, cont, None,
-                per_var_cap=per_var_cap, n_hist=n_hist,
-                agg_cols=agg_cols)
+                *stacked, "continuous", None, agg_cols=agg_cols)
             if rows is None or _too_wide(rows):
                 return None
             if any(r["__non01"] for r in rows):
@@ -901,9 +562,7 @@ class BinningProcess:
             agg_cols = [
                 F.coalesce(F.sum(F.col("__w")), F.lit(0.0)).alias("__cw")]
             rows = self._stacked_rows(
-                work, numeric, categorical, big, edges_by_var, y, w,
-                None, None, ["__cw"], None,
-                per_var_cap=per_var_cap, n_hist=n_hist,
+                *stacked, None, None,
                 agg_cols=agg_cols, group_y=True, cap_mult=8)
             if rows is None or _too_wide(rows):
                 return None
@@ -918,8 +577,8 @@ class BinningProcess:
                 classes = None
             self._target_type = tt
             # exact driver-side merge of the per-(group, target-class)
-            # weighted counts into the standard metric rows — the same
-            # two-stage sum algebra the salted re-reduce uses
+            # weighted counts into the standard metric rows (every
+            # metric here is a sum, so the two-stage sum is exact)
             merged: dict = {}
             for r in rows:
                 k = (r["variable"], r["sample_class"], r["gv"], r["key"])
@@ -941,23 +600,20 @@ class BinningProcess:
                         d[f"n_event_{i}"] = slot["cw"].get(c, 0.0)
                 out_rows.append(_DictRow(d))
             rows = out_rows
-        metrics = _metric_names(tt, classes)
-        task = "regression" if tt == "continuous" else "classification"
         return self._reduce_stacked(
-            rows, numeric, categorical, user, edges_by_var, {},
-            metrics, tt, task, self.prebinning_method, n_hist)
+            rows, numeric, categorical, user, edges_by_var, {})
 
     # ------------------------------------------------------------------
     def _stacked_rows(self, work, numeric, categorical, big,
-                      edges_by_var, y, w, tt, classes, metrics, salt_s,
-                      *, per_var_cap=4096, n_hist=256, agg_cols=None,
-                      group_y=False, cap_mult=1):
+                      edges_by_var, y, w, tt, classes, *, agg_cols=None,
+                      group_y=False, cap_mult=1, bounded=True):
         """Build and collect the combined stacked aggregation (the fit's
         stats action). Returns the collected rows, or None when the
-        LIMIT guard trips (caller falls back). ``agg_cols`` overrides
-        the per-group aggregate expressions and ``group_y`` adds the
-        raw target to the group key — the optimistic narrow path uses
-        both to fold target-type inference into this single action."""
+        LIMIT guard trips (never when ``bounded`` is False).
+        ``agg_cols`` overrides the per-group aggregate expressions and
+        ``group_y`` adds the raw target to the group key — the
+        optimistic narrow path uses both to fold target-type inference
+        into this single action."""
         from pyspark.ml.feature import Bucketizer
 
         if big:
@@ -976,14 +632,8 @@ class BinningProcess:
         # the exploded structs (per-row string allocation across
         # n_vars x n_rows exploded records measurably dominates the
         # aggregation hash cost); they decode back to names once on
-        # the tiny collected result below
-        from .operators.preprocessing import (
-            normalize_special_codes,
-            sample_class_code_expr,
-        )
-
-        var_list = list(numeric) + list(categorical)
-        var_id = {v: i for i, v in enumerate(var_list)}
+        # the tiny collected result in _reduce_stacked
+        var_id = {v: i for i, v in enumerate(list(numeric) + list(categorical))}
         structs = []
         for v in numeric:
             cv = F.col(f"__clean_{v}")
@@ -1026,57 +676,38 @@ class BinningProcess:
             F.col(y).alias("__y"), wcol.alias("__w"),
         ).select("s.variable", "s.sample_class", "s.gv", "s.key",
                  "s.cval", "__y", "__w")
+        keys = ["variable", "sample_class", "gv", "key"] + (
+            ["__y"] if group_y else [])
+        grouped = exploded.groupBy(*keys).agg(
+            F.max("cval").alias("vmax"),
+            *(agg_cols if agg_cols is not None
+              else _agg_exprs("__y", "__w", tt, classes)))
+        if not bounded:
+            return grouped.collect()
         # bounded collect: exact values are LIMIT-backstopped; buckets
         # and special/missing groups are bounded by construction; the
-        # allowance covers categorical cardinality (unbounded today in
-        # the fallback too — cat_cutoff is the scale guard there)
+        # allowance covers 100k categories per categorical
         small_n = len(numeric) - len(big)
         cap = (
-            per_var_cap * 2 * max(small_n, 1)
-            + (n_hist + 2) * max(len(big), 1)
+            _PER_VAR_CAP * 2 * max(small_n, 1)
+            + (_N_HIST + 2) * max(len(big), 1)
             + 100_000 * max(len(categorical), 1)
             + 4 * len(self.variable_names)
         ) * cap_mult
-        keys = ["variable", "sample_class", "gv", "key"] + (
-            ["__y"] if group_y else [])
-        if salt_s and salt_s > 1:
-            from .operators.aggregation import _merge_exprs
-
-            grouped = (
-                exploded.groupBy(
-                    *keys,
-                    F.pmod(F.spark_partition_id(), F.lit(salt_s))
-                    .alias("__salt"))
-                .agg(F.max("cval").alias("vmax"),
-                     *_agg_exprs("__y", "__w", tt, classes))
-                .groupBy(*keys)
-                .agg(F.max("vmax").alias("vmax"), *_merge_exprs(metrics))
-            )
-        else:
-            grouped = exploded.groupBy(*keys).agg(
-                F.max("cval").alias("vmax"),
-                *(agg_cols if agg_cols is not None
-                  else _agg_exprs("__y", "__w", tt, classes)))
-        _t_stats = _time.time()
         rows = grouped.limit(cap + 1).collect()
-        _dbg("stats_agg", _t_stats)
-        if len(rows) > cap:
-            return None
-        return rows
+        return None if len(rows) > cap else rows
 
     # ------------------------------------------------------------------
-    def _reduce_stacked(self, rows, numeric, categorical, user,
-                        edges_by_var, raw_edges_by_var, metrics, tt,
-                        task, method, n_hist):
+    def _reduce_stacked(self, rows, numeric, categorical, fixed,
+                        edges_by_var, raw_edges_by_var):
         """Driver-side reduction of the collected stacked rows into
         (splits_by_var, stats_by_var) — split proposal AND per-prebin
-        statistics from the one collect."""
-        from .core.tree import cart_splits, mdlp_splits
-        from .operators.aggregation import (
-            bin_stats_from_values,
-            snap_splits_to_edges,
-        )
-        from .operators.preprocessing import sample_class_code_names
+        statistics from the one collect. ``fixed`` maps the variables
+        whose splits were known before the aggregation to them."""
+        tt = self._target_type
+        metrics = _metric_names(tt, self._classes)
+        task = "regression" if tt == "continuous" else "classification"
+        method = self.prebinning_method
 
         # decode int keys back to the name/string view the per-variable
         # reducers consume (one pass over the tiny collected result)
@@ -1148,10 +779,13 @@ class BinningProcess:
                 )
                 for m in metrics
             }
-            if v in user:
-                splits = user[v]
+            if v in fixed:
+                splits = fixed[v]
             elif len(values) < 2:
                 splits = np.array([])
+            elif method == "uniform":
+                splits = self._uniform_splits(
+                    float(values[0]), float(values[-1]))
             elif method == "quantile":
                 tgt = np.linspace(0, 1, self.max_n_prebins + 1)[1:-1]
                 if v in raw_edges_by_var:
@@ -1159,11 +793,9 @@ class BinningProcess:
                     # re-reduce below stays exact without snapping
                     raw = raw_edges_by_var[v]
                     idx = np.clip(
-                        np.round(tgt * n_hist).astype(int), 1, len(raw))
+                        np.round(tgt * _N_HIST).astype(int), 1, len(raw))
                     splits = np.unique([raw[i - 1] for i in idx])
                 else:
-                    from .operators.aggregation import weighted_percentile
-
                     cnts = (
                         sum(per_value[m] for m in metrics)
                         if task == "classification"
@@ -1211,82 +843,6 @@ class BinningProcess:
                     specials[r["sample_class"].split(":", 1)[1]] = _vals(r)
             stats_by_var[v] = (cats, missing, specials)
         return splits_by_var, stats_by_var
-
-    # ------------------------------------------------------------------
-    def _stacked_stats(self, df, numeric, categorical, splits_by_var, y, w, classes):
-        """Job 3: ONE aggregation for every variable's bin/category
-        statistics, numeric bins and categorical values unified on a
-        string key."""
-        structs = []
-        for v in numeric:
-            c = F.col(v).cast("double")
-            sclass = sample_class_expr(c, "numerical", self._codes_for(v))
-            bin_e = numeric_bin_expr(c, list(splits_by_var.get(v, [])))
-            structs.append(
-                F.struct(
-                    F.lit(v).alias("variable"),
-                    sclass.alias("sample_class"),
-                    F.when(sclass == CLEAN, bin_e.cast("string")).alias("key"),
-                )
-            )
-        for v in categorical:
-            c = F.col(v)
-            sclass = sample_class_expr(c, "categorical", self._codes_for(v))
-            structs.append(
-                F.struct(
-                    F.lit(v).alias("variable"),
-                    sclass.alias("sample_class"),
-                    F.when(sclass == CLEAN, c.cast("string")).alias("key"),
-                )
-            )
-        wcol = F.col(w) if w else F.lit(1.0)
-        exploded = df.select(
-            F.explode(F.array(*structs)).alias("s"),
-            F.col(y).alias("__y"),
-            wcol.alias("__w"),
-        ).select("s.variable", "s.sample_class", "s.key", "__y", "__w")
-        tt = self._target_type
-        rows = (
-            exploded.groupBy("variable", "sample_class", "key")
-            .agg(*_agg_exprs("__y", "__w", tt, classes))
-            .collect()
-        )
-        by_var: dict[str, list] = {v: [] for v in self.variable_names}
-        for r in rows:
-            by_var[r["variable"]].append(r)
-
-        out = {}
-        metrics = _metric_names(tt, classes)
-        for v in numeric:
-            n_bins = len(splits_by_var.get(v, [])) + 1
-            conv = []
-            for r in by_var[v]:
-                d = r.asDict()
-                d["bin"] = int(r["key"]) if r["key"] is not None else None
-                conv.append(d)
-            out[v] = assemble_bin_stats(
-                [_DictRow(d) for d in conv], n_bins, tt, classes
-            )
-        for v in categorical:
-            cats, missing, specials = {}, {m: 0.0 for m in metrics}, {}
-            for r in by_var[v]:
-                vals = {
-                    m: (
-                        r[m]
-                        if r[m] is not None
-                        else (np.nan if m in ("min_y", "max_y") else 0.0)
-                    )
-                    for m in metrics
-                }
-                if r["sample_class"] == CLEAN:
-                    if r["key"] is not None:
-                        cats[r["key"]] = vals
-                elif r["sample_class"] == MISSING:
-                    missing = vals
-                else:
-                    specials[r["sample_class"].split(":", 1)[1]] = vals
-            out[v] = (cats, missing, specials)
-        return out
 
     # ------------------------------------------------------------------
     def _variable_metrics(self, v):

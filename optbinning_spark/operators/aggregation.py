@@ -68,22 +68,6 @@ def _agg_exprs(y_col: str, w_col: str | None, target_type: str, classes=None):
     raise ValueError(target_type)
 
 
-def _merge_exprs(metrics: list[str]):
-    """Second-stage merge of first-stage partial aggregates: every
-    metric is a sum except min_y/max_y (min/max) — the same algebra
-    Spark's own partial aggregation uses, exposed so a salted
-    two-phase groupBy can re-reduce."""
-    out = []
-    for m in metrics:
-        if m == "min_y":
-            out.append(F.min(m).alias(m))
-        elif m == "max_y":
-            out.append(F.max(m).alias(m))
-        else:
-            out.append(F.coalesce(F.sum(m), F.lit(0.0)).alias(m))
-    return out
-
-
 def _metric_names(target_type: str, classes=None) -> list[str]:
     if target_type == "binary":
         return ["n_nonevent", "n_event"]
@@ -415,7 +399,6 @@ def categorical_value_stats(
     target_type: str = "binary",
     classes=None,
     max_categories: int = 100_000,
-    salt_partitions: int | None = None,
 ):
     """Per-category sufficient statistics in ONE aggregation — this is
     simultaneously the event-rate ordering input (J4), the cat_cutoff
@@ -434,18 +417,6 @@ def categorical_value_stats(
     returned separately so callers can fold them into the "others"
     bin. At 100 TB with millions of categories the collect stays
     bounded; hot categories are absorbed by map-side partial agg.
-
-    ``salt_partitions``: power-law skew hardening. With a billion-key
-    power-law column Spark's in-memory hash aggregate can overflow and
-    fall back to sort-based aggregation, after which a hot category's
-    RAW rows all converge on one reducer. Setting ``salt_partitions=S``
-    switches to a salted two-phase plan: phase 1 groups by (category,
-    spark_partition_id() % S) — a hot key's rows land on up to S
-    reducers — and phase 2 re-reduces the <= S partial rows per
-    category with the sum/min/max merge algebra. Results are identical
-    (integer-weighted sums are exact; float sums match to
-    associativity). The reference's dict sketch (bsketch.py:300-336)
-    is unbounded and single-machine — this path has no counterpart.
     """
     c = F.col(col)
     sclass = sample_class_expr(c, "categorical", special_codes)
@@ -454,21 +425,9 @@ def categorical_value_stats(
         sclass.alias("sample_class"),
         F.when(sclass == CLEAN, c).alias("category"),
     ]
-    if salt_partitions and salt_partitions > 1:
-        grouped = (
-            df.groupBy(
-                *keys,
-                F.pmod(F.spark_partition_id(), F.lit(salt_partitions))
-                .alias("__salt"),
-            )
-            .agg(*_agg_exprs(y_col, w_col, target_type, classes))
-            .groupBy("sample_class", "category")
-            .agg(*_merge_exprs(metrics))
-        )
-    else:
-        grouped = df.groupBy(*keys).agg(
-            *_agg_exprs(y_col, w_col, target_type, classes)
-        )
+    grouped = df.groupBy(*keys).agg(
+        *_agg_exprs(y_col, w_col, target_type, classes)
+    )
 
     size_expr = (
         F.col("n_records")

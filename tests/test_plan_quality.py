@@ -177,9 +177,8 @@ def test_process_fit_overflow_falls_back_to_probe(spark, lineitem):
         bp = BinningProcess(
             ["l_quantity", "l_extendedprice"], prebinning_method="cart")
         if force_probe:
-            # widen past the narrow gate? no — flip the salt knob off
-            # the optimistic gate instead (needs the probe by design)
-            bp.cat_salt_threshold = 10**12
+            # skip the optimistic narrow attempt: straight to the probe
+            bp._optimistic_narrow_fit = lambda *a, **k: None
         bp.fit(lineitem, "y")
         return bp
 
@@ -189,6 +188,61 @@ def test_process_fit_overflow_falls_back_to_probe(spark, lineitem):
         ta = a._binners[v].binning_table.build(add_totals=False)
         tb = b._binners[v].binning_table.build(add_totals=False)
         assert ta.equals(tb)
+
+
+def _process_fit_actions(spark, bp, df, group):
+    """SQL executions behind a fit's jobs. Unlike call sites, this
+    tells apart two actions issued from the same line (the tripped and
+    the probe-routed stacked aggregation); AQE's per-stage jobs share
+    their action's execution id."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "process fit action counting")
+    try:
+        bp.fit(df, "y")
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    store = spark._jsparkSession.sharedState().statusStore()
+    it = store.executionsList().iterator()
+    ids = set()
+    while it.hasNext():
+        e = it.next()
+        keys = e.jobs().keys().iterator()
+        while keys.hasNext():
+            if int(keys.next()) in jobs:
+                ids.add(e.executionId())
+    return ids
+
+
+@pytest.mark.parametrize("method", ["cart", "uniform"])
+def test_process_fit_narrow_overflow_is_three_actions(spark, lineitem,
+                                                      method):
+    """A narrow fit whose high-cardinality numeric trips the optimistic
+    LIMIT pays exactly three actions: the tripped stacked aggregation,
+    the probe, and the probe-routed stacked aggregation."""
+    from optbinning_spark import BinningProcess
+
+    bp = BinningProcess(["l_quantity", "l_extendedprice"],
+                        prebinning_method=method)
+    actions = _process_fit_actions(spark, bp, lineitem, f"bpover_{method}")
+    assert len(actions) == 3, f"expected 3 actions, saw {actions}"
+
+
+@pytest.mark.parametrize("method", ["cart", "uniform"])
+def test_wide_process_fit_is_two_actions(spark, lineitem, method):
+    """A fit of at least eight variables is exactly two actions — the
+    probe and the stacked aggregation over the persisted working set —
+    whatever the prebinning method."""
+    from optbinning_spark import BinningProcess
+
+    names = ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+             "l_quantity", "l_extendedprice", "l_discount", "l_tax",
+             "l_linestatus"]
+    bp = BinningProcess(names, categorical_variables=["l_linestatus"],
+                        prebinning_method=method)
+    actions = _process_fit_actions(spark, bp, lineitem, f"bpwide_{method}")
+    assert len(actions) == 2, f"expected 2 actions, saw {actions}"
+    assert bp._target_type == "binary"
 
 
 def test_jaccard_single_scan(spark):
@@ -237,105 +291,6 @@ def test_dup_ngram_spans_single_scan_no_join(spark):
     plan = _plan(q)
     assert plan.count("Scan parquet") == 1, plan
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan, plan
-
-
-def test_salted_categorical_agg_two_stage_and_correct(spark):
-    """salt_partitions triggers a salted two-phase aggregation — phase
-    1 keyed by (category, partition-salt), phase 2 re-reducing per
-    category — so a power-law hot key spreads over S reducers instead
-    of one. Plan: two hash-partitioned exchanges, the first including
-    the salt key. Results: identical to the unsalted path on a skewed
-    fixture."""
-    from optbinning_spark.operators.aggregation import (
-        categorical_value_stats,
-    )
-
-    # power-law fixture: one category holds ~90% of rows
-    rows = []
-    for i in range(5000):
-        cat = "hot" if i % 10 else f"c{i % 97}"
-        rows.append((cat, i % 3 == 0 and 1 or 0))
-    df = spark.createDataFrame(rows, "cat string, y int").repartition(8)
-
-    plain = categorical_value_stats(df, "cat", "y", None)
-    salted = categorical_value_stats(df, "cat", "y", None,
-                                     salt_partitions=8)
-    assert plain[0] == salted[0]  # per-category stats identical
-    assert plain[1] == salted[1] and plain[2] == salted[2]
-
-    # plan shape: build the salted grouped df directly for inspection
-    from optbinning_spark.operators.aggregation import (
-        _agg_exprs, _merge_exprs, _metric_names)
-    from optbinning_spark.operators.preprocessing import (
-        CLEAN, sample_class_expr)
-
-    c = F.col("cat")
-    sclass = sample_class_expr(c, "categorical", None)
-    two_stage = (
-        df.groupBy(
-            sclass.alias("sample_class"),
-            F.when(sclass == CLEAN, c).alias("category"),
-            F.pmod(F.spark_partition_id(), F.lit(8)).alias("__salt"),
-        )
-        .agg(*_agg_exprs("y", None, "binary", None))
-        .groupBy("sample_class", "category")
-        .agg(*_merge_exprs(_metric_names("binary", None)))
-    )
-    plan = _plan(two_stage)
-    assert plan.count("Exchange hashpartitioning") >= 2, plan
-    # phase-1 grouping carries the partition-id salt key
-    assert "SPARK_PARTITION_ID" in plan.upper(), plan
-
-
-def test_auto_salt_engages_on_high_cardinality_categorical(spark):
-    """X7 auto-salt: the wide-fit probe's HLL cardinality flips the
-    stacked aggregation to the salted two-phase plan past
-    cat_salt_threshold with NO per-variable config — and the fit's
-    results are identical either way (the salted algebra is exact).
-    A skewed, high-cardinality fixture (hot key + ~600 distinct cats)
-    fits once below and once above the threshold."""
-    from optbinning_spark import BinningProcess
-
-    rows = []
-    for i in range(6000):
-        # ~600 distinct categories, one of them holding ~50% of rows
-        cat = "hot" if i % 2 else f"c{i % 600}"
-        rows.append((cat, float(i % 30), 1 if i % 3 == 0 else 0))
-    df = spark.createDataFrame(
-        rows, "cat string, num double, y int").repartition(8)
-
-    def fit(threshold):
-        bp = BinningProcess(
-            ["cat", "num"], categorical_variables=["cat"],
-            prebinning_method="quantile",
-            cat_salt_threshold=threshold)
-        bp.fit(df, "y")
-        return bp
-
-    salted = fit(50)       # 600 > 50 -> salted plan engages
-    unsalted = fit(10**9)  # never triggers
-    assert salted._stats_salt_partitions and salted._stats_salt_partitions > 1
-    assert unsalted._stats_salt_partitions is None
-    # round 6: the DEFAULT is off (cat_salt_threshold=None) — the salt
-    # only spreads reduce-side load, which partial aggregation already
-    # absorbs for the algebraic fit aggs (measured slower in every
-    # regime; see bench.py _salt_ab / binning_process.__init__)
-    from optbinning_spark import BinningProcess as _BP
-
-    dflt = _BP(["cat", "num"], categorical_variables=["cat"],
-               prebinning_method="quantile")
-    assert dflt.cat_salt_threshold is None
-    dflt.fit(df, "y")
-    assert dflt._stats_salt_partitions is None
-    # value-identical across the two physical plans
-    ts = salted.get_binned_variable("cat").binning_table.build()
-    tu = unsalted.get_binned_variable("cat").binning_table.build()
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(ts, tu)
-    ns = salted.get_binned_variable("num").binning_table.build()
-    nu = unsalted.get_binned_variable("num").binning_table.build()
-    pd.testing.assert_frame_equal(ns, nu)
 
 
 def test_sampling_ops_are_map_only(spark):

@@ -460,11 +460,19 @@ def test_monitoring_continuous_target_analysis(spark):
     assert ta["mean"].between(4, 6).all()
 
 
-def test_fused_process_fit_matches_fallback(spark):
-    """The two-job fused cart fit (probe + combined stacked agg) must
-    reproduce the multi-pass fallback exactly: same splits, same bin
-    tables — across small/high-cardinality numerics, categoricals,
-    special codes, user splits and weights."""
+def test_process_fit_matches_single_variable_fits(spark):
+    """Each variable of a process fit equals a single-variable
+    OptimalBinning fit with the same settings — same splits, same bin
+    table — across a user-split numeric with a special code, an
+    exact-path numeric, a categorical, and weights. The
+    high-cardinality numeric takes the bucketized route, whose bucket
+    edges come from the process probe's value sample and so differ
+    from the single-variable fit's; its table is checked against a raw
+    recount instead."""
+    import pandas as pd
+
+    from optbinning_spark.binning import OptimalBinning
+
     rng = np.random.RandomState(3)
     rows = []
     for i in range(6000):
@@ -475,46 +483,27 @@ def test_fused_process_fit_matches_fallback(spark):
         p = 0.1 + 0.5 * big / 1000 + 0.2 * (small > 20)
         y = int(rng.rand() < min(p, 0.95))
         w = float(1 + (i % 3))
-        rows.append((spec, big, cat, y, w))
+        rows.append((spec, small, big, cat, y, w))
     df = spark.createDataFrame(
-        rows, "xs double, xb double, cat string, y int, w double")
+        rows, "xs double, xm double, xb double, cat string, y int, "
+        "w double")
 
-    import optbinning_spark.operators.prebinning as PB
+    user = {"xs": {"user_splits": [10.0, 20.0, 30.0]}}
+    bp = BinningProcess(
+        ["xs", "xm", "xb", "cat"], categorical_variables=["cat"],
+        special_codes=[-9.0], binning_fit_params=user)
+    bp.fit(df, "y", sample_weight="w")
+    for v, kw in (("xs", user["xs"]), ("xm", {}),
+                  ("cat", {"dtype": "categorical"})):
+        ob = OptimalBinning(name=v, special_codes=[-9.0], **kw)
+        ob.fit(df, v, "y", sample_weight="w")
+        pb = bp.get_binned_variable(v)
+        if v != "cat":
+            assert list(pb.splits) == list(ob.splits), v
+        pd.testing.assert_frame_equal(
+            pb.binning_table.build(), ob.binning_table.build())
 
-    def fit(force_fallback):
-        bp = BinningProcess(
-            ["xs", "xb", "cat"],
-            special_codes=[-9.0],
-            binning_fit_params={"xs": {"user_splits": [10.0, 20.0, 30.0]}},
-        )
-        if force_fallback:
-            orig = bp._fused_fit_stats
-            bp._fused_fit_stats = lambda *a, **k: None
-        orig_buckets = PB.MAX_HISTOGRAM_BUCKETS
-        PB.MAX_HISTOGRAM_BUCKETS = 64  # xb overflows -> bucket path
-        try:
-            bp.fit(df, "y", sample_weight="w")
-        finally:
-            PB.MAX_HISTOGRAM_BUCKETS = orig_buckets
-        return bp
-
-    # patch per-var cap used by the fused path so xb goes bucketized in
-    # BOTH paths: fused uses 4096 (xb ~6000 distinct > cap already)
-    fused = fit(False)
-    fall = fit(True)
-    for v in ("xs", "cat"):
-        tf = fused._binners[v].binning_table.build(add_totals=False)
-        tb = fall._binners[v].binning_table.build(add_totals=False)
-        assert list(tf["bin"]) == list(tb["bin"])
-        np.testing.assert_allclose(
-            np.array(tf["count"], dtype=float),
-            np.array(tb["count"], dtype=float))
-        np.testing.assert_allclose(
-            np.array(tf["woe"], dtype=float),
-            np.array(tb["woe"], dtype=float), rtol=1e-12)
-    # xb: both bucketized but fused snaps to edges — verify exactness
-    # of the fused table against a raw recount instead of equality
-    ob = fused._binners["xb"]
+    ob = bp.get_binned_variable("xb")
     splits = list(ob.splits)
     assert splits, "xb should produce splits"
     tbl = ob.binning_table.build(add_totals=False)
@@ -523,8 +512,7 @@ def test_fused_process_fit_matches_fallback(spark):
     for s in splits:
         b = b + (F.col("xb") >= F.lit(float(s))).cast("int")
     chk = (
-        df.filter(F.col("xb") != -9.0)
-        .groupBy(b.alias("bin"))
+        df.groupBy(b.alias("bin"))
         .agg(F.sum("w").alias("n"))
         .orderBy("bin").collect()
     )

@@ -1,18 +1,14 @@
 """Crossover regression watch (VERDICT r7 ask #8).
 
-The engine hard-wires two measured round-6 decisions:
+The engine hard-wires a measured round-6 decision: n-gram hot-key
+counting defaults to ONE window (``use_window=True``) — measured ~2x
+faster than the two-phase groupBy+join in every regime
+(tools/ab_window_vs_agg.py).
 
-- n-gram hot-key counting defaults to ONE window (``use_window=True``)
-  — measured ~2x faster than the two-phase groupBy+join in every
-  regime (tools/ab_window_vs_agg.py);
-- categorical fits default to UNSALTED (``cat_salt_threshold=None``)
-  — map-side partial aggregation absorbs hot keys for algebraic aggs,
-  so the per-partition salt only added a shuffle stage.
-
-A Spark-version or data-shape change can silently flip either
+A Spark-version or data-shape change can silently flip that
 crossover. ``bench.py`` re-times both sides every round and flags
 ``regression_watch_failed`` in its contract line; this file makes the
-same checks HARD pytest failures when ``SPARK_GRAFT_SLOW=1`` (timing
+same check a HARD pytest failure when ``SPARK_GRAFT_SLOW=1`` (timing
 asserts are env-gated so host-contention noise cannot flake the
 default suite), plus an always-on value-identity check that both
 window modes compute the same answer.
@@ -77,53 +73,6 @@ def test_window_beats_two_phase_crossover(spark):
         f"window/two-phase crossover INVERTED: window {t_win:.2f}s vs "
         f"two-phase {t_agg:.2f}s — re-run tools/ab_window_vs_agg.py and "
         f"re-pick the use_window default")
-
-
-@pytest.mark.skipif(
-    os.environ.get("SPARK_GRAFT_SLOW") != "1",
-    reason="timing crossover watch — run with SPARK_GRAFT_SLOW=1; "
-    "bench.py runs the same watch every round (salt_ab.inverted)",
-)
-def test_unsalted_beats_salted_crossover(spark):
-    """The unsalted default must not have INVERTED (margin 1.25 over a
-    measured ~17% advantage) on a 200k-distinct categorical fit."""
-    from pyspark.sql import functions as F
-
-    from optbinning_spark import BinningProcess
-
-    li = (
-        spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
-        .select(
-            F.concat(F.lit("p"), F.col("l_partkey")).alias("pk_cat"),
-            (F.col("l_returnflag") == "R").cast("int").alias("y"),
-        )
-    )
-
-    def fit(thr):
-        def run():
-            bp = BinningProcess(variable_names=["pk_cat"],
-                                categorical_variables=["pk_cat"],
-                                cat_salt_threshold=thr)
-            bp.fit(li, "y")
-
-        import gc
-
-        best = None
-        for _ in range(3):
-            t0 = time.time()
-            run()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
-            gc.collect()
-        spark._jvm.System.gc()
-        return best
-
-    t_salted = fit(1)            # force salt on
-    t_unsalted = fit(1 << 40)    # force salt off (the default behavior)
-    assert t_unsalted <= t_salted * 1.25, (
-        f"salt crossover INVERTED: unsalted {t_unsalted:.2f}s vs salted "
-        f"{t_salted:.2f}s — re-examine cat_salt_threshold default")
 
 
 def test_canary_host_ratio_math():

@@ -17,8 +17,12 @@ Fix toggles (env):
                               broadcasts still pinned from Python)
     SPARK_GRAFT_PERIODIC_GC=30s   spark.cleaner.periodicGC.interval
     SPARK_GRAFT_NO_PERSIST=1  disable the wide-fit MEMORY_AND_DISK
-                              persist (binning_process.py)
+                              persist (binning_process._PERSIST)
     SPARK_GRAFT_NO_SPREAD=1   disable the wide-fit repartition spread
+                              (binning_process._SPREAD)
+
+The two fit toggles rebind binning_process's module constants in this
+process; the library itself reads no environment variables.
 
 Instrumentation per measurement: JVM GC cumulative time/count, heap
 used, and shuffle/block file count under the session's local dirs.
@@ -62,6 +66,16 @@ def jvm_stats(spark):
             "blockmgr_files": nfiles}
 
 
+def apply_fit_toggles():
+    """Rebind the wide-fit constants named by the env toggles."""
+    from optbinning_spark import binning_process as bp
+
+    if os.environ.get("SPARK_GRAFT_NO_PERSIST"):
+        bp._PERSIST = False
+    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
+        bp._SPREAD = False
+
+
 def run_query(spark, fn, sf_dir, reps=3):
     best = None
     for _ in range(reps):
@@ -82,6 +96,7 @@ def run_query(spark, fn, sf_dir, reps=3):
 def main():
     mode = sys.argv[1] if len(sys.argv) > 1 else "aged"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    apply_fit_toggles()
     spark = get_spark("aging_profile")
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
