@@ -4210,10 +4210,10 @@ def q_indices_bins_transform(spark, sf_dir):
     return df.select(
         "l_orderkey",
         "l_linenumber",
-        ob.transform_column_expr(
-            F.col("l_extendedprice"), metric="indices"
-        ).alias("bin_index"),
-        ob.transform_column_expr(F.col("l_extendedprice"), metric="bins").alias(
+        ob.transform_column_expr("l_extendedprice", metric="indices").alias(
+            "bin_index"
+        ),
+        ob.transform_column_expr("l_extendedprice", metric="bins").alias(
             "bin_label"
         ),
     )
@@ -4577,7 +4577,18 @@ def entry(spark: SparkSession) -> DataFrame:
 #: twins on the wide path) lead the window; the last four window slots
 #: (event_psi_monitor .. pack_sequences_bpe) move to the head of the
 #: tail.
+#:
+#: Transform-render rotation: the binning transforms now render one
+#: parsed SQL CASE per variable (the Column-built chain is deleted), so
+#: the three queries that transform through it (woe_transform and
+#: optimal_woe_transform on the binary path, multiclass_mean_woe_transform
+#: on the multiclass path) lead the window; the last three window slots
+#: (doc_contamination .. embedding_dedup_clusters) move to the head of
+#: the tail.
 _WINDOW = [
+    "woe_transform",
+    "optimal_woe_transform",
+    "multiclass_mean_woe_transform",
     "binning_process_summary",
     "wide_process_fit",
     "wide_fit_exact",
@@ -4625,9 +4636,6 @@ _WINDOW = [
     "continuous_binning_2d_pinned",
     "counterfactual_diverse_pinned",
     "curriculum_shards",
-    "doc_contamination",
-    "doc_split_assignment",
-    "embedding_dedup_clusters",
 ]
 
 #: Tail: the remaining r15-green entries (age 3 — they lead the next
@@ -4636,6 +4644,9 @@ _WINDOW = [
 #: tools/check_correctness full-registry runs even while out of the
 #: driver window.
 _TAIL = [
+    "doc_contamination",
+    "doc_split_assignment",
+    "embedding_dedup_clusters",
     "event_psi_monitor",
     "mixture_rates",
     "multimodal_frames",
@@ -4695,18 +4706,15 @@ _TAIL = [
     "event_rate_order",
     "prebin_counts",
     "counterfactual",
-    "multiclass_mean_woe_transform",
     "binning_2d_3x3",
     "sketch_binning_table",
     "scorecard_table_linear",
     "optimal_binning_table",
-    "optimal_woe_transform",
     "continuous_bin_stats",
     "categorical_optimal_binning",
     "scorecard_table",
     "multiclass_bin_counts",
     "scenario_binning_table",
-    "woe_transform",
     "mean_transform",
     "binning_2d_table",
     "continuous_binning_2d_table",

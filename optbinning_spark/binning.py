@@ -207,17 +207,19 @@ class _BaseOptimalBinning:
     ) -> DataFrame:
         self._check_fitted()
         expr = self.transform_column_expr(
-            F.col(x), metric=metric, metric_special=metric_special,
+            x, metric=metric, metric_special=metric_special,
             metric_missing=metric_missing,
         )
         return df.withColumn(out_col or f"{x}_{metric}", expr)
 
     def transform_column_expr(
-        self, col, metric: str = "woe", metric_special=0, metric_missing=0
+        self, x: str, metric: str = "woe", metric_special=0, metric_missing=0
     ):
+        """The transform of column ``x`` as one Column (one parsed SQL
+        CASE, see ``operators.transform``)."""
         self._check_fitted()
         return transform_expr(
-            col,
+            x,
             dtype=self._resolved_dtype,
             splits=self._splits,
             bin_categories=self._bin_categories,

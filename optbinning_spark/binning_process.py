@@ -961,8 +961,7 @@ class BinningProcess:
             m = p.get("metric", default_metric)
             b = self._binners[v]
             expr = b.transform_column_expr(
-                F.col(v).cast("double") if self._dtypes[v] == "numerical" else F.col(v),
-                metric=m,
+                v, metric=m,
                 metric_special=p.get("metric_special", metric_special),
                 metric_missing=p.get("metric_missing", metric_missing),
             )

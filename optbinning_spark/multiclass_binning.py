@@ -358,8 +358,10 @@ class MulticlassOptimalBinning(_BaseOptimalBinning):
             show_digits=self.show_digits,
         )
 
-    def transform_column_expr(self, col, metric="mean_woe", metric_special=0,
+    def transform_column_expr(self, x, metric="mean_woe", metric_special=0,
                               metric_missing=0):
+        """The transform of column ``x`` as one parsed SQL CASE
+        (``operators.transform.case_sql``)."""
         self._check_fitted()
         t = self._table
         if metric == "mean_woe":
@@ -373,20 +375,18 @@ class MulticlassOptimalBinning(_BaseOptimalBinning):
         else:
             raise ValueError(f"unknown multiclass metric {metric}")
         from .operators.preprocessing import normalize_special_codes
+        from .operators.transform import case_sql
 
-        groups = normalize_special_codes(self.special_codes)
-        expr = F.when(col.isNull() | F.isnan(col), F.lit(metric_missing))
-        for g, values in groups.items():
-            expr = expr.when(col.isin(values), F.lit(metric_special))
-        splits = list(self._splits)
-        for i, s in enumerate(splits):
-            expr = expr.when(col < float(s), F.lit(vals[i]))
-        return expr.otherwise(F.lit(vals[len(splits)]))
+        return F.expr(case_sql(
+            x, dtype="numerical", values=vals, missing=metric_missing,
+            specials=[(codes, metric_special) for codes in
+                      normalize_special_codes(self.special_codes).values()],
+            splits=self._splits))
 
     def transform(self, df, x, metric="mean_woe", metric_special=0,
                   metric_missing=0, out_col=None):
         expr = self.transform_column_expr(
-            F.col(x).cast("double"), metric, metric_special, metric_missing
+            x, metric, metric_special, metric_missing
         )
         return df.withColumn(out_col or f"{x}_{metric}", expr)
 

@@ -256,7 +256,7 @@ class SBOptimalBinning:
         reference transforms with the shared solution)."""
         self._check_fitted()
         expr = transform_expr(
-            F.col(x),
+            x,
             dtype="numerical",
             splits=self._splits,
             table=self._table,

@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 
 from .binning_process import BinningProcess
 from .operators.fastlit import sql_ident, sql_lit
+from .operators.preprocessing import normalize_special_codes
+from .operators.transform import case_sql
 
 _EPS = 1e-15
 
@@ -184,7 +186,7 @@ def _arrow_columns(df: DataFrame, cols, max_rows: int | None = None):
 
 
 def _design(cols, n_rows, k, order="C"):
-    """(X, y, w) from _arrow_columns' arrays: the first k are the
+    """(X, y, w) from fetched float64 columns: the first k are the
     features, stacked into an (n_rows, k) matrix in memory ``order``.
     The layout sets the BLAS summation order, hence the last ulp of
     the coefficients: each estimator keeps the layout it has always
@@ -280,10 +282,9 @@ class Scorecard:
         # so the WoE matrix has at most prod(n_bins) distinct rows.
         # Group identical (X, label) rows into one weighted row — the
         # weighted likelihood (logistic) / normal equations (linear)
-        # are unchanged, and LBFGS's many passes then scan a few
-        # hundred rows instead of the full table. One shuffle replaces
-        # per-iteration full scans; at 100 TB this is the difference
-        # between one aggregation and ~25 dataset passes.
+        # are unchanged. The input is scanned once, by that groupBy;
+        # the driver solve or MLlib then reads only the compressed
+        # design, whatever its size.
         kind0 = self.estimator
         if kind0 == "auto":
             kind0 = "logistic" if self._target_type == "binary" else "linear"
@@ -385,7 +386,7 @@ class Scorecard:
                 getattr(est, "intercept_", 0.0), dtype=float))
             return list(coef), float(intercept[0] if intercept.size else 0.0)
         if kind0 == "logistic":
-            woe = (
+            design = (
                 woe.groupBy(*self.selected_, y)
                 .agg(F.sum(wexpr).alias("__w"))
             )
@@ -395,19 +396,32 @@ class Scorecard:
             # NULL labels per group: Spark's sum SKIPS them in the
             # numerator while the denominator still counts their
             # weight, so a missing target would silently BIAS the
-            # per-group mean (not even poison it) — refuse loudly
-            # below instead, like every other estimator path
+            # per-group mean (not even poison it) — refused below
             ycol = F.col(y).cast("double")
-            woe = woe.groupBy(*self.selected_).agg(
+            design = woe.groupBy(*self.selected_).agg(
                 F.sum(wexpr).alias("__w"),
                 (F.sum(wexpr * F.col(y)) / F.sum(wexpr)).alias(y),
                 F.sum(F.when(ycol.isNull(), F.lit(1))
                       .otherwise(F.lit(0))).alias("__badlab"),
             )
-        w = "__w"
+        # The design is computed ONCE per fit: a lazy local checkpoint
+        # is materialized by the first action over it (the fetch below,
+        # else MLlib's first job), and both the fetch and every MLlib
+        # pass then read that materialization. Not cache(): AQE cannot
+        # coalesce a cached plan's partitions
+        # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is
+        # false), so a design of a few thousand rows kept
+        # spark.sql.shuffle.partitions partitions and every LBFGS
+        # iteration ran a multi-stage job; the checkpoint keeps the
+        # partition count AQE chose (one, at such sizes), so each
+        # iteration is one single-task job. Measured on the perfbench
+        # binning_fit scorecard design (seed 0, warm, 4 vCPU,
+        # local[4]): the MLlib fit 10 jobs / 45 tasks / 1.15-1.41 s ->
+        # 8 jobs / 8 tasks / 0.52-0.67 s, coefficients equal to 2e-15.
+        design = design.localCheckpoint(eager=False)
         kind = kind0
 
-        # Driver solve on the collected sufficient statistics when the
+        # Driver solve on the fetched sufficient statistics when the
         # compressed design is small (it is, by construction: at most
         # prod(n_bins) * n_labels rows). One fetch replaces the
         # per-LBFGS-iteration job storm; results match an unregularized
@@ -415,79 +429,87 @@ class Scorecard:
         # (high-cardinality interactions) fall back to MLlib.
         reg = float(self.estimator_params.get("regParam", 0.0))
         max_driver_rows = int(self.estimator_params.get("max_driver_rows", 100_000))
-        design = None
         if reg == 0.0:
             # deterministic order: the normal-equation sums are float
             # and order-dependent at the last ulp; a stable orderBy
             # makes consecutive fits bit-identical. Fetched as Arrow
-            # columns (_arrow_columns), not py4j Rows: the design can
-            # hold max_driver_rows rows, and at 20k rows Rows plus a
-            # float loop took ~10x the transfer time and raised the
-            # driver's memory peak by ~11 MB more (4 vCPU).
+            # columns, not py4j Rows: the design can hold
+            # max_driver_rows rows, and at 20k rows Rows plus a float
+            # loop took ~10x the transfer time and raised the driver's
+            # memory peak by ~11 MB more (4 vCPU).
             #
-            # Same loud-failure posture as the robust-estimator sample
-            # path above: a NULL label (for the linear estimator,
-            # counted per group by __badlab) or a NaN label (Spark's
-            # sum PROPAGATES NaN through the design compression) would
-            # bias or poison every coefficient — refuse both with the
-            # actionable message
-            null_msg = (
-                "null in the estimator design (WoE feature, label "
-                "or weight) — the target column carries missing "
-                "values; filter or impute the offending rows "
-                "before Scorecard.fit")
+            # The sort key puts the groups that would bias or poison
+            # every coefficient FIRST: a NULL (for the linear
+            # estimator's label, counted per group by __badlab) ahead
+            # of a NaN/Inf (Spark's sum PROPAGATES NaN through the
+            # compression), in a WoE feature, the label or the weight.
+            # On a clean design the key is 0 everywhere, so the row
+            # order is the (features, label) order. The first fetched
+            # row thus decides the refusal on both routes, including
+            # above the cap, where MLlib would otherwise fit biased
+            # group means (linear) or raise a raw Spark error
+            # (logistic).
             cols = [*self.selected_, y, "__w"]
+            nulls = [f"{sql_ident(c)} IS NULL" for c in cols]
             if kind != "logistic":
-                cols.append("__badlab")
-            got, n = _arrow_columns(
-                woe.orderBy(*self.selected_, y).limit(max_driver_rows + 1),
-                cols, max_driver_rows)
-            if n <= max_driver_rows:
-                if got is None or (kind != "logistic"
-                                   and (got.pop() > 0).any()):
-                    raise ValueError(null_msg)
-                design = _design(got, n, len(self.selected_))
-            del got
-        if design is not None:
-            X, yy, ww = design
-            if not (np.isfinite(X).all() and np.isfinite(yy).all()
-                    and np.isfinite(ww).all()):
+                nulls.append("`__badlab` > 0")
+            nonfinite = [
+                f"isnan({c}) OR abs({c}) = CAST('Infinity' AS DOUBLE)"
+                for c in (f"CAST({sql_ident(v)} AS DOUBLE)" for v in cols)]
+            bad_first = F.expr(
+                f"CASE WHEN {' OR '.join(nulls)} THEN 2"
+                f" WHEN {' OR '.join(nonfinite)} THEN 1 ELSE 0 END").desc()
+            tbl = (design.orderBy(bad_first, *self.selected_, y)
+                   .limit(max_driver_rows + 1).toArrow())
+            n = tbl.num_rows
+            first = {c: tbl.column(c)[0].as_py()
+                     for c in tbl.column_names} if n else {}
+            if (any(v is None for v in first.values())
+                    or first.get("__badlab", 0) > 0):
+                raise ValueError(
+                    "null in the estimator design (WoE feature, label "
+                    "or weight) — the target column carries missing "
+                    "values; filter or impute the offending rows "
+                    "before Scorecard.fit")
+            if not np.isfinite([float(first[c]) for c in first]).all():
                 raise ValueError(
                     "non-finite value in the estimator design (WoE "
                     "feature, label or weight) — the target column "
                     "carries NaN/Inf; filter or impute the offending "
                     "rows before Scorecard.fit")
-            if kind == "logistic":
-                return _driver_logistic(X, yy, ww)
-            if kind == "linear":
-                return _driver_wls(X, yy, ww)
-            raise ValueError(f"unknown estimator {kind}")
+            if n <= max_driver_rows:
+                X, yy, ww = _design(
+                    [tbl.column(c).to_numpy().astype(float) for c in cols],
+                    n, len(self.selected_))
+                del tbl
+                if kind == "logistic":
+                    return _driver_logistic(X, yy, ww)
+                if kind == "linear":
+                    return _driver_wls(X, yy, ww)
+                raise ValueError(f"unknown estimator {kind}")
+            del tbl
 
-        assembler = VectorAssembler(inputCols=self.selected_, outputCol="__features")
-        assembled = assembler.transform(woe).cache()
+        assembled = VectorAssembler(
+            inputCols=self.selected_, outputCol="__features").transform(design)
         common = dict(
             featuresCol="__features",
             labelCol=y,
+            weightCol="__w",
             standardization=False,
             regParam=reg,
             maxIter=self.estimator_params.get("maxIter", 100),
         )
-        if w is not None:
-            common["weightCol"] = w
-        try:
-            if kind == "logistic":
-                from pyspark.ml.classification import LogisticRegression
+        if kind == "logistic":
+            from pyspark.ml.classification import LogisticRegression
 
-                model = LogisticRegression(**common).fit(assembled)
-                return list(model.coefficients.toArray()), model.intercept
-            if kind == "linear":
-                from pyspark.ml.regression import LinearRegression
+            model = LogisticRegression(**common).fit(assembled)
+            return list(model.coefficients.toArray()), model.intercept
+        if kind == "linear":
+            from pyspark.ml.regression import LinearRegression
 
-                model = LinearRegression(**common).fit(assembled)
-                return list(model.coefficients.toArray()), model.intercept
-            raise ValueError(f"unknown estimator {kind}")
-        finally:
-            assembled.unpersist()
+            model = LinearRegression(**common).fit(assembled)
+            return list(model.coefficients.toArray()), model.intercept
+        raise ValueError(f"unknown estimator {kind}")
 
     # ------------------------------------------------------------------
     def _variable_bin_metric(self, v):
@@ -596,39 +618,19 @@ class Scorecard:
         return out
 
     def _case_sql(self, values: dict) -> list:
-        """One SQL CASE per selected variable mapping its raw value to
-        ``values[v][bin]``: missing (NULL, plus NaN if numerical) and
-        special codes -> 0.0, then first-match ``x < split`` (ELSE the
-        last bin) or ``x IN (categories)`` (ELSE 0.0). An empty IN list
-        never matches a non-NULL value, so its branch is left out."""
-        from .operators.preprocessing import normalize_special_codes
-
+        """One ``case_sql`` per selected variable mapping its raw value
+        to ``values[v][bin]``; missing and special values and unseen
+        categories score 0.0."""
         bp = self.binning_process
         cases = []
         for v in self.selected_:
-            b, vals = bp.get_binned_variable(v), values[v]
-            numerical = bp._dtypes[v] == "numerical"
-            c = f"CAST({sql_ident(v)} AS DOUBLE)" if numerical else sql_ident(v)
-            whens = [(f"{c} IS NULL OR isnan({c})" if numerical
-                      else f"{c} IS NULL", 0.0)]
-            whens += [(f"{c} IN ({', '.join(map(sql_lit, codes))})", 0.0)
-                      for codes in normalize_special_codes(
-                          b.special_codes).values() if codes]
-            if numerical:
-                splits = list(b._splits)
-                whens += [(f"{c} < {sql_lit(float(x))}", vals[i])
-                          for i, x in enumerate(splits)]
-                last = vals[len(splits)] if splits or vals else 0.0
-            else:
-                whens += [(f"{c} IN ({', '.join(map(sql_lit, cats))})",
-                           vals[i])
-                          for i, cats in enumerate(b._bin_categories or [])
-                          if cats]
-                last = 0.0
-            cases.append(
-                "CASE" + "".join(f" WHEN {cond} THEN {sql_lit(float(p))}"
-                                 for cond, p in whens)
-                + f" ELSE {sql_lit(float(last))} END")
+            b = bp.get_binned_variable(v)
+            cases.append(case_sql(
+                v, dtype=bp._dtypes[v],
+                values=[float(p) for p in values[v]], missing=0.0,
+                specials=[(codes, 0.0) for codes in normalize_special_codes(
+                    b.special_codes).values()],
+                splits=b._splits, bin_categories=b._bin_categories))
         return cases
 
     def _sum_sql(self, start: float, values: dict) -> str:

@@ -558,7 +558,7 @@ class BinningProcessSketch:
             out_cols.append(
                 binners[v]
                 .transform_column_expr(
-                    F.col(v), metric=metric,
+                    v, metric=metric,
                     metric_special=metric_special,
                     metric_missing=metric_missing,
                 )

@@ -9,8 +9,10 @@ fetched with one ``toArrow()`` and read as NumPy columns. Pinned here:
 - exactness: logistic and linear coefficients and ``score()`` are
   ``==`` to a reference built the Row way — ``collect()`` of the same
   ordered design plus a float loop — and the MLlib fallback still
-  takes over one row past ``max_driver_rows``;
-- the NULL-label and NaN-label refusals keep their messages;
+  takes over one row past ``max_driver_rows``, with coefficients
+  within ``rtol=1e-4`` of the driver solve;
+- the NULL-label and NaN-label refusals keep their messages on both
+  sides of ``max_driver_rows``;
 - the driver closure equals a dict union-find on random multigraphs,
   on string ids and on 0 edges, and reports the same ``stats``;
 - ``collect`` raises while the fit and the closure run, so a return
@@ -122,15 +124,23 @@ def test_estimator_design_equals_row_collect_reference(
         "optbinning_spark.scorecard." + solve.__name__, no_driver_solve)
     over = Scorecard(sc.binning_process, estimator=kind, **SCALING,
                      estimator_params={"max_driver_rows": len(rows) - 1})
-    assert set(over.fit(frame, target).coef_) == set(sel)
+    over.fit(frame, target)
+    assert list(over.coef_) == sel
+    np.testing.assert_allclose([over.coef_[v] for v in sel], coef, rtol=1e-4)
+    np.testing.assert_allclose(over.intercept_, intercept, rtol=1e-4)
 
 
+@pytest.mark.parametrize("cap", [100_000, 1], ids=["driver", "mllib"])
 @pytest.mark.parametrize("kind", ["logistic", "linear"])
 @pytest.mark.parametrize("bad,message", [
     (None, "null in the estimator design"),
     (float("nan"), "non-finite value in the estimator design"),
 ])
-def test_null_and_nan_labels_keep_their_refusals(spark, kind, bad, message):
+def test_null_and_nan_labels_keep_their_refusals(spark, kind, bad, message,
+                                                 cap):
+    """Refused on both sides of ``max_driver_rows``: above it the
+    offending group sorts first in the size-probe fetch, so MLlib never
+    fits biased group means or meets a NULL/NaN label."""
     label = "y" if kind == "logistic" else "yc"
     # both labels as doubles, so either can carry a NaN
     rows = [(*r[:4], float(r[4]), r[5]) for r in _rows(600)]
@@ -140,7 +150,8 @@ def test_null_and_nan_labels_keep_their_refusals(spark, kind, bad, message):
         rows, "id long, a double, b double, c string, y double, yc double")
     with pytest.raises(ValueError, match=message):
         Scorecard(BinningProcess(VARS, categorical_variables=["c"]),
-                  estimator=kind).fit(df, label)
+                  estimator=kind,
+                  estimator_params={"max_driver_rows": cap}).fit(df, label)
 
 
 def _dict_components(edges):

@@ -81,7 +81,7 @@ def test_transform_preserves_pushdown_through_case(spark, fitted):
     out = (
         df.withColumn(
             "w",
-            fitted.transform_column_expr(F.col("l_extendedprice"), metric="woe"),
+            fitted.transform_column_expr("l_extendedprice", metric="woe"),
         )
         .filter(F.col("l_quantity") > 30)
         .select("l_orderkey", "w")
@@ -243,6 +243,78 @@ def test_wide_process_fit_is_two_actions(spark, lineitem, method):
     actions = _process_fit_actions(spark, bp, lineitem, f"bpwide_{method}")
     assert len(actions) == 2, f"expected 2 actions, saw {actions}"
     assert bp._target_type == "binary"
+
+
+@pytest.mark.parametrize("kind,target", [("logistic", "y"),
+                                         ("linear", "yc")])
+def test_mllib_estimator_scans_once_and_runs_single_task_jobs(
+        spark, monkeypatch, kind, target):
+    """Above ``max_driver_rows`` the compressed design is materialized
+    once, by a lazy local checkpoint that keeps the partition count AQE
+    chose. Counted per job group: the estimator stage (WoE transform,
+    design compression, size-probe fetch, MLlib fit) scans its input
+    once, and every MLlib job runs one task at test scale (a cached
+    design kept spark.sql.shuffle.partitions partitions, so each LBFGS
+    iteration ran a job of several stages and tasks)."""
+    import numpy as np
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.regression import LinearRegression
+
+    from optbinning_spark import BinningProcess
+    from optbinning_spark.scorecard import Scorecard
+
+    rng = np.random.default_rng(11)
+    rows = []
+    for _ in range(3000):
+        a, b = float(rng.normal()), float(rng.exponential(3.0))
+        c = "pqrst"[int(rng.integers(0, 5))]
+        lo = 0.8 * a + 0.2 * b - 0.3 * (c == "p") - 0.5
+        rows.append((a, b, c, int(rng.random() < 1 / (1 + np.exp(-lo))),
+                     lo + float(rng.normal())))
+    sc = spark.sparkContext
+    scanned = sc.accumulator(0)
+
+    def count(r):
+        scanned.add(1)
+        return r
+
+    df = spark.createDataFrame(sc.parallelize(rows, 4).map(count),
+                               "a double, b double, c string, y int,"
+                               " yc double")
+    bp = BinningProcess(["a", "b", "c"], categorical_variables=["c"])
+    bp.fit(df, target)
+
+    est = LogisticRegression if kind == "logistic" else LinearRegression
+    fit = est.fit
+
+    def grouped_fit(self, *a, **kw):
+        sc.setJobGroup(f"mllib_{kind}", "MLlib estimator jobs")
+        try:
+            return fit(self, *a, **kw)
+        finally:
+            sc.setJobGroup(f"estimator_{kind}", "scorecard estimator")
+
+    monkeypatch.setattr(est, "fit", grouped_fit)
+    before = scanned.value
+    sc.setJobGroup(f"estimator_{kind}", "scorecard estimator")
+    try:
+        card = Scorecard(bp, estimator=kind,
+                         estimator_params={"max_driver_rows": 10})
+        card.fit(df, target)
+    finally:
+        sc.setJobGroup(None, None)
+    assert scanned.value - before == len(rows)
+
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup(f"estimator_{kind}")
+    jobs = tracker.getJobIdsForGroup(f"mllib_{kind}")
+    assert jobs, "the MLlib route did not run"
+    tasks = {}
+    for j in jobs:
+        stages = [tracker.getStageInfo(s)
+                  for s in tracker.getJobInfo(j).stageIds]
+        tasks[j] = sum(s.numCompletedTasks for s in stages if s is not None)
+    assert set(tasks.values()) == {1}, tasks
 
 
 def test_jaccard_single_scan(spark):
