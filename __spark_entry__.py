@@ -4585,7 +4585,21 @@ def entry(spark: SparkSession) -> DataFrame:
 #: on the multiclass path) lead the window; the last three window slots
 #: (doc_contamination .. embedding_dedup_clusters) move to the head of
 #: the tail.
+#:
+#: Single-fit rotation: the single-variable numerical fit now has one
+#: route for the binary, continuous and multiclass targets (the fused
+#: fit and the three multi-pass fallbacks are deleted) and proposes its
+#: splits with the proposer BinningProcess shares, so the two queries
+#: that fit through it (optimal_binning_table and
+#: continuous_binning_table, both on the histogram shape) and
+#: binning_table_fixed (the per-bin table on fixed splits that the
+#: splits-known shape aggregates; the query computes it directly) lead
+#: the window; the last three window slots (continuous_binning_2d_pinned
+#: .. curriculum_shards) move to the head of the tail.
 _WINDOW = [
+    "optimal_binning_table",
+    "continuous_binning_table",
+    "binning_table_fixed",
     "woe_transform",
     "optimal_woe_transform",
     "multiclass_mean_woe_transform",
@@ -4633,9 +4647,6 @@ _WINDOW = [
     "unknown_category_transform",
     "bpe_token_count",
     "cluster_balanced_sample",
-    "continuous_binning_2d_pinned",
-    "counterfactual_diverse_pinned",
-    "curriculum_shards",
 ]
 
 #: Tail: the remaining r15-green entries (age 3 — they lead the next
@@ -4644,6 +4655,9 @@ _WINDOW = [
 #: tools/check_correctness full-registry runs even while out of the
 #: driver window.
 _TAIL = [
+    "continuous_binning_2d_pinned",
+    "counterfactual_diverse_pinned",
+    "curriculum_shards",
     "doc_contamination",
     "doc_split_assignment",
     "embedding_dedup_clusters",
@@ -4661,7 +4675,6 @@ _TAIL = [
     "stratified_doc_sample",
     "binning_2d_woe_transform",
     "piecewise_transform",
-    "binning_table_fixed",
     "cart_splits",
     "mdlp_splits",
     "semantic_dedup_arrow",
@@ -4709,7 +4722,6 @@ _TAIL = [
     "binning_2d_3x3",
     "sketch_binning_table",
     "scorecard_table_linear",
-    "optimal_binning_table",
     "continuous_bin_stats",
     "categorical_optimal_binning",
     "scorecard_table",
@@ -4725,7 +4737,6 @@ _TAIL = [
     "embedding_topk",
     "binning_2d_median",
     "bpe_subword_count",
-    "continuous_binning_table",
     "counterfactual_mahalanobis_pinned",
     "doc_normalize",
 ]

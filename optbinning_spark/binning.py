@@ -7,11 +7,21 @@ DataFrame plus column names, ``transform`` returns the DataFrame with
 an appended metric column built from pure expressions (no UDF, no
 shuffle).
 
-Execution profile per fit (numerical feature):
-  job 1  - split proposal (min/max agg, quantile sketch, or histogram
-           agg for CART/MDLP)
-  job 2  - ONE groupBy(sample_class, bin) aggregation -> <= ~25 rows
-  driver - exact DP solve + binning-table build (microseconds-ms)
+Execution profile per numerical fit (binary, continuous and
+multiclass targets share ``_BaseOptimalBinning._fit_numerical``):
+  histogram    - cart/mdlp/quantile/uniform: ONE LIMIT-guarded
+                 groupBy(sample_class, distinct value) aggregation; the
+                 split proposal (``propose_splits``) and the per-prebin
+                 statistics both come from that collect (1 action).
+                 Past the distinct-value cap: a quantile-edge probe,
+                 then ONE groupBy(sample_class, bucket) aggregation with
+                 splits snapped to bucket edges (3 actions).
+  splits known - user_splits (1 action), quantile_exact (percentile
+                 aggregate, 2 actions) and uniform past the cap (the
+                 probe's min/max, 3 actions): ONE groupBy(sample_class,
+                 bin) aggregation once the splits are known.
+  (a multiclass fit first collects its class list: one more action)
+  driver       - exact DP solve + binning-table build (microseconds-ms)
 Transform is map-only. Nothing else touches the data; this is the
 plan shape that survives 100 TB.
 """
@@ -26,8 +36,14 @@ from pyspark.sql import functions as F
 
 from .core.auto_monotonic import resolve_trend
 from .core.solver import solve_binary, solve_continuous
-from .core.tree import cart_splits
-from .operators.aggregation import bin_stats, categorical_value_stats
+from .core.tree import cart_splits, mdlp_splits
+from .operators import prebinning
+from .operators.aggregation import (
+    bin_stats,
+    categorical_value_stats,
+    snap_splits_to_edges,
+    weighted_percentile,
+)
 from .operators.binning_table import (
     BinningTableBinary,
     BinningTableContinuous,
@@ -38,7 +54,10 @@ from .operators.binning_table import (
 )
 from .operators.fastlit import double_array_lit
 from .operators.prebinning import compute_prebins
+from .operators.preprocessing import clean_value_expr
 from .operators.transform import transform_expr
+
+_PREBINNING_METHODS = ("cart", "mdlp", "quantile", "uniform", "quantile_exact")
 
 
 def refine_pure_prebins(splits, count_vecs):
@@ -67,6 +86,65 @@ def refine_pure_prebins(splits, count_vecs):
         ]
         splits = new_splits
     return splits, vecs
+
+
+def uniform_splits(mn, mx, n_prebins: int) -> np.ndarray:
+    """Equal-width prebin splits over the clean value range [mn, mx]."""
+    if mn is None or mx is None or mn == mx:
+        return np.array([])
+    step = (mx - mn) / n_prebins
+    return np.unique(np.array([mn + i * step for i in range(1, n_prebins)]))
+
+
+def propose_splits(values, per_value, method, *, target_type,
+                   max_n_prebins, min_prebin_size, prebinning_kwargs,
+                   grid=None, lower_edges=None) -> np.ndarray:
+    """Driver split proposal from a per-value (or per-bucket) histogram:
+    ``values`` are the sorted distinct values (bucket maxima past the
+    cap) and ``per_value`` their metric arrays. ``grid`` is the probe's
+    raw quantile grid and ``lower_edges`` the per-bucket lower edges,
+    both given only for a bucketized histogram: quantile splits are then
+    picked from the grid, and every proposal is snapped to bucket edges
+    so the driver re-reduce stays exact. Shared by the single-variable
+    fit and ``BinningProcess``."""
+    classification = target_type != "continuous"
+    if method == "mdlp" and not classification:
+        raise ValueError("mdlp requires a binary target")
+    if len(values) < 2:
+        return np.array([])
+    if classification:
+        hist = np.column_stack(list(per_value.values()))
+    else:
+        hist = np.column_stack(
+            [per_value["n_records"], per_value["sum_y"], per_value["sum_y2"]])
+    if method == "uniform":
+        splits = uniform_splits(
+            float(values[0]), float(values[-1]), max_n_prebins)
+    elif method == "quantile":
+        tgt = np.linspace(0, 1, max_n_prebins + 1)[1:-1]
+        if grid is not None:
+            # the grid holds the k/n percentiles, k = 1..n-1, and its
+            # values are bucket boundaries: pick the grid percentile
+            # nearest each target probability
+            idx = np.clip(
+                np.round(tgt * (len(grid) + 1)).astype(int), 1, len(grid))
+            splits = np.unique([grid[i - 1] for i in idx])
+        else:
+            cnts = hist.sum(axis=1) if classification else hist[:, 0]
+            splits = np.unique(weighted_percentile(values, cnts, tgt))
+    elif method == "mdlp":
+        splits = mdlp_splits(values, hist, **prebinning_kwargs)
+    else:
+        total = hist.sum() if classification else hist[:, 0].sum()
+        kw = dict(max_leaf_nodes=max_n_prebins,
+                  min_samples_leaf=min_prebin_size * total)
+        kw.update(prebinning_kwargs)
+        splits = cart_splits(
+            values, hist,
+            task="classification" if classification else "regression", **kw)
+    if lower_edges is not None and splits.size:
+        splits = snap_splits_to_edges(splits, values, lower_edges)
+    return splits
 
 
 def _infer_dtype(df: DataFrame, col: str) -> str:
@@ -103,6 +181,12 @@ class _BaseOptimalBinning:
         fix_ub: float | None = None,
         prebinning_kwargs: dict | None = None,
     ):
+        if prebinning_method not in _PREBINNING_METHODS:
+            raise ValueError(
+                f"prebinning_method must be one of {_PREBINNING_METHODS}; "
+                f"got {prebinning_method!r}")
+        if prebinning_method == "mdlp" and self._target_type == "continuous":
+            raise ValueError("mdlp requires a binary target")
         self.name = name
         self.dtype = dtype
         self.prebinning_method = prebinning_method
@@ -348,175 +432,88 @@ class _BaseOptimalBinning:
             drop = drop | (cv > float(self.fix_ub))
         return proj.filter(cv.isNull() | ~drop)
 
+    def _fit_classes(self, df, y):
+        """Target classes the fit aggregates per class (multiclass)."""
+        return None
 
-    def _fused_fit(self, proj, wcol, task, classes=None,
-                   target_type=None) -> str:
-        """Single-aggregation fit: per-distinct-value sufficient stats
-        (+ special/missing rows) collected once; CART/MDLP/uniform
-        splits and exact per-prebin statistics both derive from that
-        histogram on the driver; the quantile method computes EXACT
-        weighted percentiles from the same histogram (reference
-        KBinsDiscretizer parity) or, on overflow, picks edges from the
-        probe's quantile grid (already bucket boundaries). Returns
-        'done', or 'skip' (user splits / quantile_exact — caller runs
-        the multi-pass path), or 'overflow' (cardinality probe failed —
-        caller runs the multi-pass path and skips the already-failed
-        exact probe)."""
-        method = self.prebinning_method
-        if self.user_splits is not None or method not in (
-            "cart", "mdlp", "uniform", "quantile"
-        ):
-            return "skip"
-        from .core.tree import mdlp_splits
-        from .operators.aggregation import bin_stats_from_values, value_stats
-        from .operators.prebinning import MAX_HISTOGRAM_BUCKETS
+    def _fit_numerical(self, df, x, y, w):
+        """Numerical fit in one of two shapes. Splits known first
+        (user_splits, quantile_exact): ONE bin_stats aggregation once
+        they are. Otherwise the histogram (``_histogram_splits``): the
+        driver proposes splits from it and re-buckets exact per-prebin
+        statistics, with no further scan."""
+        from .operators.aggregation import bin_stats_from_values
 
-        target_type = target_type or (
-            "continuous" if task == "regression" else "binary"
-        )
-        # Optimistic single-action fit (r18, guide §2.6 "fewer
-        # actions"): run the LIMIT-guarded distinct-value aggregation
-        # FIRST — for every column whose true cardinality fits the
-        # histogram cap (the calibrated regime: fit oracles pin
-        # moderate-cardinality columns by contract) the WHOLE fit is
-        # ONE Spark action, where the previous shape always paid a
-        # separate HLL/percentile probe action before it. The LIMIT
-        # backstop detects overflow; only then does the probe run
-        # (its quantile edges / min / max are only consumed by the
-        # bucketized path), so a high-cardinality fit pays 3 actions
-        # instead of 2 — the wasted work is one grouped shuffle whose
-        # per-partition width map-side partial aggregation bounds.
-        # Routing note vs the probe-first shape: a column is now
-        # routed by its TRUE cardinality, not the HLL estimate — the
-        # two differ only when the rsd=0.05 estimate misses by >10%
-        # (outputs verified byte-identical across the full registry at
-        # sf0.001/0.01/0.1).
-        from .operators.preprocessing import clean_value_expr
-
-        cap = MAX_HISTOGRAM_BUCKETS * 16
+        classes = self._fit_classes(df, y)
+        # Project to the 2-3 needed columns. No spread() here: the
+        # numeric fit aggregation is cheap per row, so the round-robin
+        # shuffle costs more than it buys (measured 2.4x slower at
+        # sf0.1) and adds an AQE stage job per action. Scan
+        # parallelism comes from input splits on a real cluster.
+        proj = self._apply_clean_filters(df.select(
+            F.col(x).cast("double").alias("__x"), F.col(y).alias("__y"),
+            *([F.col(w).alias("__w")] if w else []),
+        ))
+        wcol = "__w" if w else None
+        stat_kw = dict(special_codes=self.special_codes,
+                       target_type=self._target_type, classes=classes)
         cx = clean_value_expr(F.col("__x"), "numerical", self.special_codes)
-        self._probe_edges = None
-        lower_edges = None
-        vs = value_stats(
-            proj, "__x", "__y", wcol,
-            special_codes=self.special_codes,
-            target_type=target_type,
-            classes=classes,
-            max_values=cap,
-            guarded=False,  # no probe ran — the LIMIT is the guard
-        )
-        probe = None
-        if vs is None:
-            # Overflow: high cardinality. One probe action gets the
-            # quantile bucket edges + exact min/max, then ONE
-            # (sample_class, quantile bucket) aggregation — splits are
-            # snapped to bucket boundaries so the driver re-reduce
-            # stays exact (no further scan).
-            # probabilities passed as ONE array literal — a Python
-            # list here expands to one py4j round-trip per element
-            # (~2s of driver latency for 254 probs); the ndarray
-            # literal is a single call
-            probs = np.linspace(0, 1, MAX_HISTOGRAM_BUCKETS + 1)[1:-1]
+        hist = None
+        if self.user_splits is not None:
+            splits = np.unique(np.asarray(self.user_splits, dtype=float))
+        elif self.prebinning_method == "quantile_exact":
+            splits = compute_prebins(
+                proj.withColumn("__clean_x", cx), "__clean_x", "__y", wcol,
+                method="quantile_exact", max_n_prebins=self.max_n_prebins)
+        else:
+            splits, hist = self._histogram_splits(proj, wcol, cx, stat_kw)
+        splits = self._round_splits(splits)
+        if hist is None:
+            stats = bin_stats(proj, "__x", "__y", wcol, dtype="numerical",
+                              splits=splits, **stat_kw)
+        else:
+            stats = bin_stats_from_values(*hist, splits, self._target_type)
+        self._finalize_numerical(splits, stats)
+
+    def _histogram_splits(self, proj, wcol, cx, stat_kw):
+        """(splits, histogram) from ONE LIMIT-guarded value_stats
+        aggregation. Past the distinct-value cap, a probe (quantile
+        bucket edges + exact min/max) and ONE bucket_value_stats
+        aggregation replace it, the splits snapped to bucket edges —
+        except uniform splits, which are not bucket-aligned: they come
+        from the probe's min/max with no histogram (None), so the
+        caller aggregates per bin."""
+        from .operators.aggregation import bucket_value_stats, value_stats
+
+        method = self.prebinning_method
+        n_buckets = prebinning.MAX_HISTOGRAM_BUCKETS
+        hist = value_stats(proj, "__x", "__y", wcol,
+                           max_values=n_buckets * 16, **stat_kw)
+        grid = lower_edges = None
+        if hist is None:
+            # probabilities as ONE array literal: a Python list costs
+            # one py4j round-trip per element
+            probs = np.linspace(0, 1, n_buckets + 1)[1:-1]
             probe = proj.agg(
                 F.percentile_approx(cx, double_array_lit(probs),
                                     F.lit(2_000)).alias("edges"),
                 F.min(cx).alias("vmin"),
                 F.max(cx).alias("vmax"),
             ).first()
-            edges = sorted({float(e) for e in (probe["edges"] or [])})
-            self._probe_edges = edges
-            if not edges:
-                return "overflow"
             if method == "uniform":
-                # uniform splits are not bucket-aligned; the probe's
-                # exact min/max + one bin_stats job finishes the fit
-                prebin_splits = self._round_splits(np.unique(np.linspace(
-                    float(probe["vmin"]), float(probe["vmax"]),
-                    self.max_n_prebins + 1,
-                )[1:-1]))
-                stats = bin_stats(
-                    proj, "__x", "__y", wcol, dtype="numerical",
-                    splits=prebin_splits,
-                    special_codes=self.special_codes,
-                    target_type=target_type, classes=classes,
-                )
-                self._finalize_numerical(prebin_splits, stats)
-                return "done"
-            from .operators.aggregation import bucket_value_stats
-
-            values, per_value, missing, specials, lower_edges = (
-                bucket_value_stats(
-                    proj, "__x", "__y", wcol, edges=edges,
-                    special_codes=self.special_codes,
-                    target_type=target_type, classes=classes,
-                )
-            )
-        else:
-            values, per_value, missing, specials = vs
-        if target_type == "multiclass":
-            hist = np.column_stack(
-                [per_value[f"n_event_{i}"] for i in range(len(classes))]
-            )
-        elif task == "classification":
-            hist = np.column_stack(
-                [per_value["n_nonevent"], per_value["n_event"]]
-            )
-        else:
-            hist = np.column_stack(
-                [per_value["n_records"], per_value["sum_y"], per_value["sum_y2"]]
-            )
-        if len(values) < 2:
-            prebin_splits = np.array([])
-        elif method == "quantile":
-            tgt = np.linspace(0, 1, self.max_n_prebins + 1)[1:-1]
-            if lower_edges is not None:
-                # overflow: pick the probe-grid percentile nearest each
-                # target probability — grid values are bucket
-                # boundaries, so the driver re-reduce stays exact
-                raw = [float(e) for e in (probe["edges"] or [])]
-                N = MAX_HISTOGRAM_BUCKETS
-                idx = np.clip(
-                    np.round(tgt * N).astype(int), 1, len(raw))
-                prebin_splits = np.unique([raw[i - 1] for i in idx])
-            else:
-                from .operators.aggregation import weighted_percentile
-
-                cnts = (
-                    hist.sum(axis=1)
-                    if task == "classification"
-                    else hist[:, 0]
-                )
-                prebin_splits = np.unique(
-                    weighted_percentile(values, cnts, tgt))
-        elif method == "uniform":
-            prebin_splits = np.unique(
-                np.linspace(values[0], values[-1], self.max_n_prebins + 1)[1:-1]
-            )
-        elif method == "mdlp":
-            if task != "classification":
-                raise ValueError("mdlp requires a binary target")
-            prebin_splits = mdlp_splits(values, hist, **self.prebinning_kwargs)
-        else:
-            kw = dict(
-                max_leaf_nodes=self.max_n_prebins,
-                min_samples_leaf=self.min_prebin_size * float(
-                    hist.sum() if task == "classification" else hist[:, 0].sum()
-                ),
-            )
-            kw.update(self.prebinning_kwargs)
-            prebin_splits = cart_splits(values, hist, task=task, **kw)
-        if lower_edges is not None and prebin_splits.size:
-            from .operators.aggregation import snap_splits_to_edges
-
-            prebin_splits = snap_splits_to_edges(
-                prebin_splits, values, lower_edges
-            )
-        prebin_splits = self._round_splits(prebin_splits)
-        stats = bin_stats_from_values(
-            values, per_value, missing, specials, prebin_splits, target_type
-        )
-        self._finalize_numerical(prebin_splits, stats)
-        return "done"
+                return uniform_splits(
+                    probe["vmin"], probe["vmax"], self.max_n_prebins), None
+            grid = [float(e) for e in (probe["edges"] or [])]
+            *hist, lower_edges = bucket_value_stats(
+                proj, "__x", "__y", wcol, edges=sorted(set(grid)), **stat_kw)
+        splits = propose_splits(
+            hist[0], hist[1], method,
+            target_type=self._target_type,
+            max_n_prebins=self.max_n_prebins,
+            min_prebin_size=self.min_prebin_size,
+            prebinning_kwargs=self.prebinning_kwargs,
+            grid=grid, lower_edges=lower_edges)
+        return splits, hist
 
 
 class OptimalBinning(_BaseOptimalBinning):
@@ -553,65 +550,6 @@ class OptimalBinning(_BaseOptimalBinning):
             max_pvalue=self.max_pvalue,
             gamma=self.gamma,
         )
-
-    def _fit_numerical(self, df, x, y, w):
-        from .operators.preprocessing import clean_value_expr
-
-        # Project to the 2-3 needed columns. Column pruning means the
-        # slice is tiny relative to the table.
-        proj = df.select(
-            F.col(x).cast("double").alias("__x"), F.col(y).alias("__y"),
-            *([F.col(w).alias("__w")] if w else []),
-        )
-        proj = self._apply_clean_filters(proj)
-        # No spread() here: the numeric fit aggregation is cheap per
-        # row, so the round-robin shuffle costs more than it buys
-        # (measured 2.4x slower at sf0.1) and adds an AQE stage job
-        # per action, breaking the 2-action/<=4-job fit contract.
-        # Scan parallelism comes from input splits on a real cluster.
-        wcol = "__w" if w else None
-        # Fused single-job path: for histogram-driven split proposals
-        # the per-distinct-value stats feed the tree AND re-bucket into
-        # exact per-prebin stats on the driver — the whole fit is ONE
-        # aggregation (falls back below on cardinality overflow).
-        fused = self._fused_fit(proj, wcol, "classification")
-        if fused == "done":
-            return
-        # Multi-pass path: cache the projection for the 2-3 passes
-        # (split proposal + bin-stats); at scale this converts the
-        # repeated wide scans into one.
-        multi_pass = self.user_splits is None
-        if multi_pass:
-            proj = proj.cache()
-        try:
-            clean = proj.withColumn(
-                "__clean_x",
-                clean_value_expr(F.col("__x"), "numerical", self.special_codes),
-            )
-            if self.user_splits is not None:
-                prebin_splits = np.unique(np.asarray(self.user_splits, dtype=float))
-            else:
-                prebin_splits = compute_prebins(
-                    clean, "__clean_x", "__y", wcol,
-                    method=self.prebinning_method,
-                    max_n_prebins=self.max_n_prebins,
-                    min_prebin_size=self.min_prebin_size,
-                    task="classification",
-                    classes=[0, 1],
-                    skip_exact=fused == "overflow",
-                    bucket_edges=getattr(self, "_probe_edges", None),
-                )
-            prebin_splits = self._round_splits(prebin_splits)
-
-            stats = bin_stats(
-                proj, "__x", "__y", wcol,
-                dtype="numerical", splits=prebin_splits,
-                special_codes=self.special_codes, target_type="binary",
-            )
-        finally:
-            if multi_pass:
-                proj.unpersist()
-        self._finalize_numerical(prebin_splits, stats)
 
     def _finalize_numerical(self, prebin_splits, stats):
         """Driver-side solve + table build from collected BinStats
@@ -812,55 +750,6 @@ class ContinuousOptimalBinning(_BaseOptimalBinning):
     def __init__(self, *args, min_mean_diff: float = 0.0, **kw):
         super().__init__(*args, **kw)
         self.min_mean_diff = min_mean_diff
-
-    def _fit_numerical(self, df, x, y, w):
-        from .operators.preprocessing import clean_value_expr
-
-        proj = df.select(
-            F.col(x).cast("double").alias("__x"), F.col(y).alias("__y"),
-            *([F.col(w).alias("__w")] if w else []),
-        )
-        proj = self._apply_clean_filters(proj)
-        # No spread(): see _fit_numerical above — cheap per-row work,
-        # the repartition shuffle is a net loss + breaks the job contract.
-        wcol = "__w" if w else None
-        fused = self._fused_fit(proj, wcol, "regression")
-        if fused == "done":
-            return
-        multi_pass = self.user_splits is None
-        if multi_pass:
-            proj = proj.cache()
-        try:
-            clean = proj.withColumn(
-                "__clean_x",
-                clean_value_expr(F.col("__x"), "numerical", self.special_codes),
-            )
-            if self.user_splits is not None:
-                prebin_splits = np.unique(np.asarray(self.user_splits, dtype=float))
-            else:
-                method = self.prebinning_method
-                if method == "mdlp":
-                    raise ValueError("mdlp requires a binary target")
-                prebin_splits = compute_prebins(
-                    clean, "__clean_x", "__y", wcol,
-                    method=method,
-                    max_n_prebins=self.max_n_prebins,
-                    min_prebin_size=self.min_prebin_size,
-                    task="regression",
-                    skip_exact=fused == "overflow",
-                    bucket_edges=getattr(self, "_probe_edges", None),
-                )
-            prebin_splits = self._round_splits(prebin_splits)
-
-            stats = bin_stats(
-                proj, "__x", "__y", wcol,
-                dtype="numerical", splits=prebin_splits,
-                special_codes=self.special_codes, target_type="continuous",
-            )
-        finally:
-            if multi_pass:
-                proj.unpersist()
-        self._finalize_numerical(prebin_splits, stats)
 
     def _finalize_numerical(self, prebin_splits, stats):
         cnt = stats.clean["n_records"]

@@ -33,16 +33,22 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .binning import ContinuousOptimalBinning, OptimalBinning, _infer_dtype
-from .core.tree import cart_splits, mdlp_splits
+from .binning import (
+    ContinuousOptimalBinning,
+    OptimalBinning,
+    _infer_dtype,
+    propose_splits,
+    uniform_splits,
+)
+from .core.tree import cart_splits  # noqa: F401  (re-exported)
 from .multiclass_binning import MulticlassOptimalBinning
 from .operators.aggregation import (  # noqa: F401  (assemble_bin_stats is re-exported)
     _agg_exprs,
     _metric_names,
     assemble_bin_stats,
     bin_stats_from_values,
-    snap_splits_to_edges,
-    weighted_percentile,
+    row_metrics,
+    split_value_rows,
 )
 from .operators.fastlit import double_array_lit
 from .operators.preprocessing import (
@@ -294,21 +300,14 @@ class BinningProcess:
             return ContinuousOptimalBinning(**common)
         return MulticlassOptimalBinning(**common)
 
-    def _uniform_splits(self, mn, mx) -> np.ndarray:
-        """Equal-width prebin splits over the clean value range."""
-        if mn is None or mx is None or mn == mx:
-            return np.array([])
-        step = (mx - mn) / self.max_n_prebins
-        return np.unique(
-            np.array([mn + i * step for i in range(1, self.max_n_prebins)]))
-
     # ------------------------------------------------------------------
     def _fused_fit_stats(self, work, numeric, categorical, y, w, wide):
         """Whole-process fit: split proposal AND per-prebin statistics
         for every variable from ONE stacked aggregation grouped by
         (variable, sample_class, distinct-value-or-bucket, category) —
-        the multi-variable analog of the single-variable fused fit
-        (binning.py _fused_fit).
+        the multi-variable analog of the single-variable histogram fit
+        (binning.py ``_BaseOptimalBinning._fit_numerical``); both
+        propose splits with ``binning.propose_splits``.
 
         Narrow fits try that aggregation alone first (one action, see
         _optimistic_narrow_fit). Otherwise a probe aggregation
@@ -456,8 +455,8 @@ class BinningProcess:
         big, edges_by_var, raw_edges_by_var = [], {}, {}
         for v in todo:
             if method == "uniform":
-                fixed[v] = self._uniform_splits(
-                    probe[f"mn_{v}"], probe[f"mx_{v}"])
+                fixed[v] = uniform_splits(
+                    probe[f"mn_{v}"], probe[f"mx_{v}"], self.max_n_prebins)
                 continue
             raw = [float(e) for e in (probe[f"q_{v}"] or [])]
             edges = sorted(set(raw))
@@ -706,8 +705,6 @@ class BinningProcess:
         whose splits were known before the aggregation to them."""
         tt = self._target_type
         metrics = _metric_names(tt, self._classes)
-        task = "regression" if tt == "continuous" else "classification"
-        method = self.prebinning_method
 
         # decode int keys back to the name/string view the per-variable
         # reducers consume (one pass over the tiny collected result)
@@ -725,37 +722,11 @@ class BinningProcess:
             d["sample_class"] = code_names[vname][d["sample_class"]]
             by_var[vname].append(_DictRow(d))
 
-        def _vals(r):
-            return {
-                m: (
-                    r[m]
-                    if r[m] is not None
-                    else (np.nan if m in ("min_y", "max_y") else 0.0)
-                )
-                for m in metrics
-            }
-
         splits_by_var: dict[str, np.ndarray] = {}
         stats_by_var = {}
         for v in numeric:
-            rs = by_var[v]
-            clean_rows = [
-                r for r in rs
-                if r["sample_class"] == CLEAN and r["gv"] is not None
-            ]
-            clean_rows.sort(key=lambda r: r["gv"])
-            missing = {m: 0.0 for m in metrics}
-            specials: dict[str, dict[str, float]] = {}
-            for r in rs:
-                sc = r["sample_class"]
-                if sc == CLEAN:
-                    continue
-                if sc == MISSING:
-                    missing = _vals(r)
-                else:
-                    specials[sc.split(":", 1)[1] if ":" in sc else sc] = (
-                        _vals(r)
-                    )
+            clean_rows, per_value, missing, specials = split_value_rows(
+                by_var[v], metrics, "gv")
             if v in edges_by_var:
                 values = np.array(
                     [r["vmax"] for r in clean_rows], dtype=float)
@@ -765,68 +736,16 @@ class BinningProcess:
             else:
                 values = np.array([r["gv"] for r in clean_rows], dtype=float)
                 lower_edges = None
-            per_value = {
-                m: np.array(
-                    [
-                        (
-                            r[m]
-                            if r[m] is not None
-                            else (np.nan if m in ("min_y", "max_y") else 0.0)
-                        )
-                        for r in clean_rows
-                    ],
-                    dtype=float,
-                )
-                for m in metrics
-            }
             if v in fixed:
                 splits = fixed[v]
-            elif len(values) < 2:
-                splits = np.array([])
-            elif method == "uniform":
-                splits = self._uniform_splits(
-                    float(values[0]), float(values[-1]))
-            elif method == "quantile":
-                tgt = np.linspace(0, 1, self.max_n_prebins + 1)[1:-1]
-                if v in raw_edges_by_var:
-                    # grid percentiles ARE bucket boundaries — the
-                    # re-reduce below stays exact without snapping
-                    raw = raw_edges_by_var[v]
-                    idx = np.clip(
-                        np.round(tgt * _N_HIST).astype(int), 1, len(raw))
-                    splits = np.unique([raw[i - 1] for i in idx])
-                else:
-                    cnts = (
-                        sum(per_value[m] for m in metrics)
-                        if task == "classification"
-                        else per_value["n_records"]
-                    )
-                    splits = np.unique(
-                        weighted_percentile(values, cnts, tgt))
             else:
-                if task == "classification":
-                    hist = np.column_stack(
-                        [per_value[m] for m in metrics])
-                    total_w = hist.sum()
-                else:
-                    hist = np.column_stack([
-                        per_value["n_records"], per_value["sum_y"],
-                        per_value["sum_y2"],
-                    ])
-                    total_w = hist[:, 0].sum()
-                if method == "mdlp":
-                    splits = mdlp_splits(
-                        values, hist, **self._prebin_kwargs(v, {}))
-                else:
-                    splits = cart_splits(
-                        values, hist, task=task,
-                        **self._prebin_kwargs(v, dict(
-                            max_leaf_nodes=self.max_n_prebins,
-                            min_samples_leaf=self.min_prebin_size * total_w,
-                        )))
-                if lower_edges is not None and splits.size:
-                    splits = snap_splits_to_edges(
-                        splits, values, lower_edges)
+                splits = propose_splits(
+                    values, per_value, self.prebinning_method,
+                    target_type=tt,
+                    max_n_prebins=self.max_n_prebins,
+                    min_prebin_size=self.min_prebin_size,
+                    prebinning_kwargs=self._prebin_kwargs(v, {}),
+                    grid=raw_edges_by_var.get(v), lower_edges=lower_edges)
             splits_by_var[v] = splits
             stats_by_var[v] = bin_stats_from_values(
                 values, per_value, missing, specials, splits, tt
@@ -836,11 +755,12 @@ class BinningProcess:
             for r in by_var[v]:
                 if r["sample_class"] == CLEAN:
                     if r["key"] is not None:
-                        cats[r["key"]] = _vals(r)
+                        cats[r["key"]] = row_metrics(r, metrics)
                 elif r["sample_class"] == MISSING:
-                    missing = _vals(r)
+                    missing = row_metrics(r, metrics)
                 else:
-                    specials[r["sample_class"].split(":", 1)[1]] = _vals(r)
+                    specials[r["sample_class"].split(":", 1)[1]] = (
+                        row_metrics(r, metrics))
             stats_by_var[v] = (cats, missing, specials)
         return splits_by_var, stats_by_var
 

@@ -6,9 +6,9 @@ Objective is the summed one-vs-rest Jensen-Shannon divergence
 (multiclass_cp.py); per-class monotonic trends are resolved
 independently (multiclass_binning.py:671-789).
 
-Spark plan shape: identical to binary — one histogram agg for CART,
-one groupBy(sample_class, bin) agg with a per-class count column
-(A4), driver DP solve.
+Spark plan shape: the binary fit's (``_BaseOptimalBinning._fit_numerical``)
+with a per-class count column (A4) in every aggregation, after one
+distinct-class collect; driver DP solve.
 """
 
 from __future__ import annotations
@@ -19,13 +19,11 @@ from pyspark.sql import functions as F
 from .binning import _BaseOptimalBinning
 from .core.auto_monotonic import decide_trend
 from .core.solver import solve_multiclass
-from .operators.aggregation import bin_stats
 from .operators.binning_table import (
     format_bin_label,
     merge_segments,
     splits_from_segments,
 )
-from .operators.prebinning import compute_prebins
 
 _EPS = 1e-15
 
@@ -246,9 +244,7 @@ class MulticlassOptimalBinning(_BaseOptimalBinning):
             "(reference binning_process.py:109-111)"
         )
 
-    def _fit_numerical(self, df, x, y, w):
-        from .operators.preprocessing import clean_value_expr
-
+    def _fit_classes(self, df, y):
         classes = [
             r[0]
             for r in df.select(y).distinct().orderBy(y).collect()
@@ -257,47 +253,7 @@ class MulticlassOptimalBinning(_BaseOptimalBinning):
         if len(classes) > 100:
             raise ValueError("multiclass target with >100 classes")
         self.classes_ = classes
-
-        # fused single-job path (per-distinct-value class counts feed
-        # the tree AND re-bucket into exact prebin stats)
-        proj = df.select(
-            F.col(x).cast("double").alias("__x"), F.col(y).alias("__y"),
-            *([F.col(w).alias("__w")] if w else []),
-        )
-        proj = self._apply_clean_filters(proj)
-        fused = self._fused_fit(
-            proj, "__w" if w else None, "classification",
-            classes=classes, target_type="multiclass",
-        )
-        if fused == "done":
-            return
-
-        clean = df.withColumn(
-            "__clean_x",
-            clean_value_expr(F.col(x).cast("double"), "numerical", self.special_codes),
-        )
-        if self.user_splits is not None:
-            prebin_splits = np.unique(np.asarray(self.user_splits, dtype=float))
-        else:
-            prebin_splits = compute_prebins(
-                clean, "__clean_x", y, w,
-                method=self.prebinning_method,
-                max_n_prebins=self.max_n_prebins,
-                min_prebin_size=self.min_prebin_size,
-                task="classification",
-                classes=classes,
-                skip_exact=fused == "overflow",
-                bucket_edges=getattr(self, "_probe_edges", None),
-            )
-        prebin_splits = self._round_splits(prebin_splits)
-
-        stats = bin_stats(
-            df.withColumn("__x", F.col(x).cast("double")), "__x", y, w,
-            dtype="numerical", splits=prebin_splits,
-            special_codes=self.special_codes, target_type="multiclass",
-            classes=classes,
-        )
-        self._finalize_numerical(prebin_splits, stats)
+        return classes
 
     def _finalize_numerical(self, prebin_splits, stats):
         classes = self.classes_

@@ -76,6 +76,47 @@ def _metric_names(target_type: str, classes=None) -> list[str]:
     return [f"n_event_{i}" for i in range(len(classes))]
 
 
+def _metric_value(r, m):
+    """Metric ``m`` of one collected aggregate row: a NULL sum reads 0.0
+    and a NULL min/max reads NaN."""
+    v = r[m]
+    if v is not None:
+        return v
+    return np.nan if m in ("min_y", "max_y") else 0.0
+
+
+def row_metrics(r, metrics) -> dict:
+    """Decode one collected aggregate row (see ``_metric_value``)."""
+    return {m: _metric_value(r, m) for m in metrics}
+
+
+def split_value_rows(rows, metrics, key):
+    """Split collected per-(sample_class, ``key``) rows into the clean
+    rows with a non-NULL ``key`` (sorted by it), the per-value metric
+    arrays of those rows, the missing metrics and the per-group special
+    metrics."""
+    clean_rows = sorted(
+        (r for r in rows if r["sample_class"] == CLEAN and r[key] is not None),
+        key=lambda r: r[key],
+    )
+    per_value = {
+        m: np.array([_metric_value(r, m) for r in clean_rows], dtype=float)
+        for m in metrics
+    }
+    missing = {m: 0.0 for m in metrics}
+    specials: dict[str, dict[str, float]] = {}
+    for r in rows:
+        sc = r["sample_class"]
+        if sc == CLEAN:
+            continue
+        if sc == MISSING:
+            missing = row_metrics(r, metrics)
+        else:
+            specials[sc.split(":", 1)[1] if ":" in sc else sc] = (
+                row_metrics(r, metrics))
+    return clean_rows, per_value, missing, specials
+
+
 def value_stats(
     df: DataFrame,
     col: str,
@@ -86,24 +127,18 @@ def value_stats(
     target_type: str = "binary",
     classes=None,
     max_values: int = 50_000,
-    guarded: bool = False,
 ):
     """ONE aggregation over (sample_class, distinct clean value)
     producing per-distinct-value sufficient statistics PLUS the
-    special/missing stats — the fused fit path: the same collect feeds
-    the CART/MDLP split proposal, the per-prebin statistics (additive
+    special/missing stats — the histogram fit: the same collect feeds
+    the split proposal, the per-prebin statistics (additive
     re-bucketing on the driver), and the special/missing bin rows, so
     a whole numerical fit is a single Spark job.
 
     Returns (values, metric_dict_of_per_value_arrays, missing,
     specials) or None when the distinct-value cardinality exceeds
-    ``max_values`` (caller falls back to the bucketed multi-pass
-    path). ``guarded=True`` means the caller already verified the
-    cardinality with an HLL probe: the LIMIT backstop is skipped —
-    a plain collect is ONE job, while ``limit().collect()`` executes
-    in multiple scale-up waves — and the exact rows are used even if
-    the estimate was slightly low (the exact path is correct at any
-    size; only the probe bounds driver memory).
+    ``max_values``: a LIMIT bounds the collect, and on overflow the
+    caller probes quantile edges and runs ``bucket_value_stats``.
     """
     from .preprocessing import normalize_special_codes
 
@@ -112,52 +147,17 @@ def value_stats(
     v = F.when(sclass == CLEAN, c)
     n_groups = len(normalize_special_codes(special_codes))
     cap = max_values + n_groups + 2
-    agg = df.groupBy(sclass.alias("sample_class"), v.alias("__v")).agg(
-        *_agg_exprs(y_col, w_col, target_type, classes)
+    rows = (
+        df.groupBy(sclass.alias("sample_class"), v.alias("__v"))
+        .agg(*_agg_exprs(y_col, w_col, target_type, classes))
+        .limit(cap + 1)
+        .collect()
     )
-    if guarded:
-        rows = agg.collect()
-    else:
-        rows = agg.limit(cap + 1).collect()
-        if len(rows) > cap:
-            return None
-    metrics = _metric_names(target_type, classes)
-    clean_rows = [r for r in rows if r["sample_class"] == CLEAN and r["__v"] is not None]
-    clean_rows.sort(key=lambda r: r["__v"])
+    if len(rows) > cap:
+        return None
+    clean_rows, per_value, missing, specials = split_value_rows(
+        rows, _metric_names(target_type, classes), "__v")
     values = np.array([r["__v"] for r in clean_rows], dtype=float)
-    per_value = {
-        m: np.array(
-            [
-                (
-                    r[m]
-                    if r[m] is not None
-                    else (np.nan if m in ("min_y", "max_y") else 0.0)
-                )
-                for r in clean_rows
-            ],
-            dtype=float,
-        )
-        for m in metrics
-    }
-    missing = {m: 0.0 for m in metrics}
-    specials: dict[str, dict[str, float]] = {}
-    for r in rows:
-        sc = r["sample_class"]
-        if sc == CLEAN:
-            continue
-        vals = {
-            m: (
-                r[m]
-                if r[m] is not None
-                else (np.nan if m in ("min_y", "max_y") else 0.0)
-            )
-            for m in metrics
-        }
-        if sc == MISSING:
-            missing = vals
-        else:
-            group = sc.split(":", 1)[1] if ":" in sc else sc
-            specials[group] = vals
     return values, per_value, missing, specials
 
 
@@ -178,10 +178,9 @@ def bucket_value_stats(
     bucket boundaries and the driver re-reduce stays EXACT (a whole
     bucket is always on one side of a snapped split).
 
-    With this, a high-cardinality fit is two jobs total (probe +
-    this), the same as the exact-distinct path — no third bin-stats
-    scan. The shuffled state is <= (n_buckets + n_specials + 2) groups
-    regardless of input rows.
+    With this, a high-cardinality fit needs no bin-stats scan after the
+    split proposal. The shuffled state is <= (n_buckets + n_specials +
+    2) groups regardless of input rows.
     """
     from pyspark.ml.feature import Bucketizer
 
@@ -206,46 +205,10 @@ def bucket_value_stats(
         )
         .collect()
     )
-    metrics = _metric_names(target_type, classes)
-    clean_rows = [
-        r for r in rows if r["sample_class"] == CLEAN and r["__vmax"] is not None
-    ]
-    clean_rows.sort(key=lambda r: r["__b"])
+    clean_rows, per_value, missing, specials = split_value_rows(
+        rows, _metric_names(target_type, classes), "__b")
     values = np.array([r["__vmax"] for r in clean_rows], dtype=float)
     lower_edges = np.array([E[r["__b"]] for r in clean_rows], dtype=float)
-    per_value = {
-        m: np.array(
-            [
-                (
-                    r[m]
-                    if r[m] is not None
-                    else (np.nan if m in ("min_y", "max_y") else 0.0)
-                )
-                for r in clean_rows
-            ],
-            dtype=float,
-        )
-        for m in metrics
-    }
-    missing = {m: 0.0 for m in metrics}
-    specials: dict[str, dict[str, float]] = {}
-    for r in rows:
-        sc = r["sample_class"]
-        if sc == CLEAN:
-            continue
-        vals = {
-            m: (
-                r[m]
-                if r[m] is not None
-                else (np.nan if m in ("min_y", "max_y") else 0.0)
-            )
-            for m in metrics
-        }
-        if sc == MISSING:
-            missing = vals
-        else:
-            group = sc.split(":", 1)[1] if ":" in sc else sc
-            specials[group] = vals
     return values, per_value, missing, specials, lower_edges
 
 
@@ -364,14 +327,7 @@ def assemble_bin_stats(rows, n_bins, target_type, classes=None) -> BinStats:
     specials: dict[str, dict[str, float]] = {}
     for r in rows:
         sc = r["sample_class"]
-        vals = {
-            m: (
-                r[m]
-                if r[m] is not None
-                else (np.nan if m in ("min_y", "max_y") else 0.0)
-            )
-            for m in metrics
-        }
+        vals = row_metrics(r, metrics)
         if sc == CLEAN:
             b = r["bin"]
             if b is None:

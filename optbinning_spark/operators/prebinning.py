@@ -9,15 +9,19 @@ uniform via sklearn), mdlp.py (entropy splits). Spark design:
              bsketch.py/gk.py).
 - quantile_exact: exact ``percentile`` SQL aggregate — deterministic
              and DuckDB-oracle-checkable.
-- cart/mdlp: ONE histogram aggregation (value-bucketed by ~1k approx
-             quantiles for unbounded cardinality) -> driver-side
-             best-first CART / MDLP on the sufficient statistics.
-             A single-feature tree depends only on (value, class
-             weights), so this reproduces the reference's geometry
-             without sklearn and with a bounded collect.
+- cart/mdlp: ONE histogram aggregation (exact distinct values up to
+             16 x MAX_HISTOGRAM_BUCKETS, else MAX_HISTOGRAM_BUCKETS
+             approx-quantile buckets) -> driver-side best-first CART /
+             MDLP on the sufficient statistics. A single-feature tree
+             depends only on (value, class weights), so this
+             reproduces the reference's geometry without sklearn and
+             with a bounded collect.
 
-Every function takes an already-"clean" column (missing/special rows
-nulled by ``clean_value_expr``) so no extra filter pass is needed.
+The single-variable binners take only ``quantile_exact`` from here
+(their histogram fit proposes splits with ``binning.propose_splits``);
+the scenario, 2-D, piecewise and MDLP fitters use the rest. Every
+function takes an already-"clean" column (missing/special rows nulled
+by ``clean_value_expr``) so no extra filter pass is needed.
 """
 
 from __future__ import annotations
@@ -72,8 +76,6 @@ def value_histogram(
     classes: list | None = None,
     max_buckets: int = MAX_HISTOGRAM_BUCKETS,
     relative_error: float = 1e-4,
-    skip_exact: bool = False,
-    bucket_edges=None,
 ):
     """One aggregation producing the CART/MDLP sufficient statistics.
 
@@ -107,9 +109,7 @@ def value_histogram(
             F.sum(w * yv * yv).alias("s2"),
         ]
     rows = (
-        []
-        if skip_exact  # the caller already probed (fused fit overflow)
-        else clean.groupBy(F.col(col).alias("__v"))
+        clean.groupBy(F.col(col).alias("__v"))
         .agg(*exact_aggs)
         .limit(exact_cap + 1)
         .collect()
@@ -127,17 +127,9 @@ def value_histogram(
             )
         return values, stats
 
-    # the fused-fit probe may have already computed the quantile edges
-    # in its combined probe aggregation — reuse them (one fewer scan)
-    edges = (
-        bucket_edges
-        if bucket_edges is not None
-        else clean.approxQuantile(
-            col, list(np.linspace(0, 1, max_buckets + 1)[1:-1]),
-            relative_error,
-        )
-    )
-    edges = sorted(set(edges))
+    edges = sorted(set(clean.approxQuantile(
+        col, list(np.linspace(0, 1, max_buckets + 1)[1:-1]), relative_error,
+    )))
     if edges:
         # Bucketizer = JVM binary search against the edge array. A CASE
         # chain here would exceed the 64KB codegen method limit at
@@ -196,8 +188,6 @@ def compute_prebins(
     task: str = "classification",
     classes: list | None = None,
     total_weight: float | None = None,
-    skip_exact: bool = False,
-    bucket_edges=None,
 ) -> np.ndarray:
     """Dispatch split proposal. ``df`` must already have missing/special
     nulled in ``col`` (clean_value_expr)."""
@@ -211,7 +201,6 @@ def compute_prebins(
     if method in ("cart", "mdlp"):
         values, stats = value_histogram(
             df, col, y_col, w_col, task=task, classes=classes,
-            skip_exact=skip_exact, bucket_edges=bucket_edges,
         )
         if len(values) < 2:
             return np.array([])

@@ -1,6 +1,7 @@
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -253,9 +254,44 @@ def test_fused_value_stats_matches_bin_stats(binary_df):
             assert fused.specials[g][m] == direct.specials[g][m]
 
 
+def _recount_fit(binner, df, target_type, classes=None):
+    """The fit re-done in independent passes: CART prebins from a
+    pandas per-value histogram of ``df``'s (x, y), then per-prebin
+    statistics from ``bin_stats`` on those prebins, then the binner's
+    own driver solve. Returns the fitted ``binner``."""
+    from optbinning_spark.core.tree import cart_splits
+    from optbinning_spark.operators.aggregation import bin_stats
+
+    pdf = df.toPandas()
+    if target_type == "continuous":
+        pdf["y2"] = pdf["y"] * pdf["y"]
+        g = pdf.groupby("x").agg(n=("y", "size"), s1=("y", "sum"),
+                                 s2=("y2", "sum")).sort_index()
+        hist = g[["n", "s1", "s2"]].to_numpy(dtype=float)
+        total, task = hist[:, 0].sum(), "regression"
+    else:
+        g = pd.crosstab(pdf["x"], pdf["y"]).reindex(
+            columns=classes or [0, 1], fill_value=0).sort_index()
+        hist = g.to_numpy(dtype=float)
+        total, task = hist.sum(), "classification"
+    prebins = np.unique(cart_splits(
+        g.index.to_numpy(dtype=float), hist, task=task,
+        max_leaf_nodes=binner.max_n_prebins,
+        min_samples_leaf=binner.min_prebin_size * total))
+    stats = bin_stats(df, "x", "y", None, splits=prebins,
+                      target_type=target_type, classes=classes)
+    binner._resolved_dtype = "numerical"
+    if classes is not None:
+        binner.classes_ = classes
+    binner._finalize_numerical(prebins, stats)
+    binner._fitted = True
+    return binner
+
+
 def test_fused_fit_matches_multipass(spark):
-    """CART fit through the fused path equals the multi-pass path
-    (forced via cardinality overflow) on splits and table values."""
+    """The one-aggregation CART fit equals a multi-pass recount
+    (pandas histogram -> cart_splits -> bin_stats -> solve) on splits
+    and table values."""
     rows = []
     rng = np.random.RandomState(7)
     for i in range(3000):
@@ -266,18 +302,8 @@ def test_fused_fit_matches_multipass(spark):
 
     ob_fused = OptimalBinning(prebinning_method="cart")
     ob_fused.fit(df, "x", "y")
-
-    from optbinning_spark import binning as binning_mod
-
-    ob_multi = OptimalBinning(prebinning_method="cart")
-    orig = binning_mod._BaseOptimalBinning._fused_fit
-    try:
-        binning_mod._BaseOptimalBinning._fused_fit = (
-            lambda self, *a, **k: "skip"
-        )
-        ob_multi.fit(df, "x", "y")
-    finally:
-        binning_mod._BaseOptimalBinning._fused_fit = orig
+    ob_multi = _recount_fit(
+        OptimalBinning(prebinning_method="cart"), df, "binary")
 
     np.testing.assert_allclose(ob_fused.splits, ob_multi.splits)
     np.testing.assert_allclose(
@@ -287,7 +313,6 @@ def test_fused_fit_matches_multipass(spark):
 
 def test_fused_fit_matches_multipass_multiclass(spark):
     from optbinning_spark import MulticlassOptimalBinning
-    from optbinning_spark import binning as binning_mod
 
     rng = np.random.RandomState(3)
     rows = []
@@ -300,15 +325,9 @@ def test_fused_fit_matches_multipass_multiclass(spark):
 
     m_fused = MulticlassOptimalBinning(prebinning_method="cart")
     m_fused.fit(df, "x", "y")
-    orig = binning_mod._BaseOptimalBinning._fused_fit
-    try:
-        binning_mod._BaseOptimalBinning._fused_fit = (
-            lambda self, *a, **k: "skip"
-        )
-        m_multi = MulticlassOptimalBinning(prebinning_method="cart")
-        m_multi.fit(df, "x", "y")
-    finally:
-        binning_mod._BaseOptimalBinning._fused_fit = orig
+    m_multi = _recount_fit(
+        MulticlassOptimalBinning(prebinning_method="cart"), df,
+        "multiclass", classes=[0, 1, 2])
     np.testing.assert_allclose(m_fused.splits, m_multi.splits)
     assert m_fused.binning_table.build().equals(m_multi.binning_table.build())
     # multiclass surfaces the REAL solver status (the anytime joint
@@ -319,9 +338,6 @@ def test_fused_fit_matches_multipass_multiclass(spark):
 
 
 def test_fused_fit_matches_multipass_continuous(spark):
-    from optbinning_spark import ContinuousOptimalBinning
-    from optbinning_spark import binning as binning_mod
-
     rng = np.random.RandomState(8)
     rows = [(float(rng.randint(0, 70)), float(rng.normal(0, 1)))
             for _ in range(3000)]
@@ -330,15 +346,8 @@ def test_fused_fit_matches_multipass_continuous(spark):
 
     c_fused = ContinuousOptimalBinning(prebinning_method="cart")
     c_fused.fit(df, "x", "y")
-    orig = binning_mod._BaseOptimalBinning._fused_fit
-    try:
-        binning_mod._BaseOptimalBinning._fused_fit = (
-            lambda self, *a, **k: "skip"
-        )
-        c_multi = ContinuousOptimalBinning(prebinning_method="cart")
-        c_multi.fit(df, "x", "y")
-    finally:
-        binning_mod._BaseOptimalBinning._fused_fit = orig
+    c_multi = _recount_fit(
+        ContinuousOptimalBinning(prebinning_method="cart"), df, "continuous")
     np.testing.assert_allclose(c_fused.splits, c_multi.splits)
     t1, t2 = c_fused.binning_table.build(), c_multi.binning_table.build()
     assert list(t1["bin"]) == list(t2["bin"])
@@ -506,30 +515,39 @@ def test_binning_2d_one_sided_user_splits_rejected(spark):
         OptimalBinning2D(user_splits_x=[25.0])
 
 
-def test_fused_fit_single_action_routing(spark):
-    """r18 optimistic fused fit: a moderate-cardinality numerical fit
-    runs the guarded distinct-value aggregation as its ONLY data pass
-    (no separate probe action — observable as no probe edges and at
-    most 2 Spark jobs for the whole fit), while a forced overflow
-    falls back to probe + bucketized aggregation (probe edges set)
-    with results still exact (test_high_cardinality_bucket_fit_is_exact
-    covers the value equality)."""
+def test_fused_fit_single_action_routing(spark, monkeypatch):
+    """A moderate-cardinality numerical fit runs the guarded
+    distinct-value aggregation as its ONLY data pass (at most 2 Spark
+    jobs for the whole fit, no bucket aggregation), while a forced
+    overflow routes through the probe + bucketized aggregation
+    (test_high_cardinality_bucket_fit_is_exact covers the value
+    equality; test_plan_quality::test_fit_action_counts the actions)."""
+    from optbinning_spark import binning
+    from optbinning_spark.operators import aggregation
+
+    calls = []
+    for mod, name in ((aggregation, "value_stats"),
+                      (aggregation, "bucket_value_stats"),
+                      (binning, "bin_stats")):
+        fn = getattr(mod, name)
+        monkeypatch.setattr(
+            mod, name,
+            lambda *a, _fn=fn, _n=name, **k: calls.append(_n) or _fn(*a, **k))
+
     df = spark.read.parquet(
         "/root/testdata/sf0.001/lineitem.parquet").selectExpr(
         "l_quantity as x", 'cast(l_returnflag = "R" as int) as y')
     df.count()  # warm the scan so job counting sees only the fit
     st = spark.sparkContext._jsc.sc().statusTracker()
     n0 = len(st.getJobIdsForGroup(None))
-    ob = OptimalBinning().fit(df, "x", "y")
+    OptimalBinning().fit(df, "x", "y")
     n_jobs = len(st.getJobIdsForGroup(None)) - n0
-    assert ob._probe_edges is None  # exact path: probe never ran
+    assert calls == ["value_stats"]  # exact path: no probe, no buckets
     assert n_jobs <= 2, n_jobs  # one action (exchange + collect wave)
 
     import optbinning_spark.operators.prebinning as PB
-    orig = PB.MAX_HISTOGRAM_BUCKETS
-    PB.MAX_HISTOGRAM_BUCKETS = 2  # force cap (=32) below l_quantity's 50
-    try:
-        ob2 = OptimalBinning().fit(df, "x", "y")
-    finally:
-        PB.MAX_HISTOGRAM_BUCKETS = orig
-    assert ob2._probe_edges  # overflow path: probe ran, edges kept
+    calls.clear()
+    monkeypatch.setattr(PB, "MAX_HISTOGRAM_BUCKETS", 2)  # cap 32 < 50
+    ob2 = OptimalBinning().fit(df, "x", "y")
+    assert calls == ["value_stats", "bucket_value_stats"]
+    assert ob2.binning_table.count.sum() == df.count()

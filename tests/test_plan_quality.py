@@ -110,33 +110,52 @@ def _action_sites(tracker, jobs):
 
 
 def test_fit_action_counts(spark, lineitem):
-    """The r18 optimistic fused-fit contract: a moderate-cardinality
-    single-variable cart fit is ONE driver action (the LIMIT-guarded
-    distinct-value aggregation IS the whole data plane — no separate
-    probe); a high-cardinality fit detects overflow via the LIMIT and
-    pays the probe + bucketized aggregation on top (three actions —
-    the documented trade for the common case's single pass)."""
-    from optbinning_spark.binning import OptimalBinning
+    """Driver actions of every single-variable numerical fit route,
+    counted by call site. Histogram route: a moderate-cardinality fit
+    is ONE action (the LIMIT-guarded distinct-value aggregation IS the
+    whole data plane — no separate probe); a high-cardinality fit
+    detects overflow via the LIMIT and pays the probe + bucketized
+    aggregation on top (three actions — the documented trade for the
+    common case's single pass). Splits-known route: one bin_stats
+    action after the splits (user splits: none before; quantile_exact:
+    the percentile aggregate; uniform past the cap: the probe)."""
+    from optbinning_spark.binning import (
+        ContinuousOptimalBinning,
+        OptimalBinning,
+    )
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    sc.setJobGroup("fitcount", "fit job counting")
-    OptimalBinning(prebinning_method="cart").fit(
-        lineitem, "l_quantity", "y")  # 50 distinct: exact path
-    jobs = tracker.getJobIdsForGroup("fitcount")
-    sc.setJobGroup(None, None)
-    sites = _action_sites(tracker, jobs)
-    assert len(sites) == 1, f"expected 1 action, saw {sites}"
-    # and the action is at most 2 jobs (AQE: shuffle map + final)
-    assert len(jobs) <= 2, f"expected <=2 jobs, saw {len(jobs)}: {jobs}"
-
-    sc.setJobGroup("fitcount_hc", "high-cardinality fit job counting")
-    OptimalBinning(prebinning_method="cart").fit(
-        lineitem, "l_extendedprice", "y")  # ~6k distinct: overflow
-    jobs = tracker.getJobIdsForGroup("fitcount_hc")
-    sc.setJobGroup(None, None)
-    sites = _action_sites(tracker, jobs)
-    assert len(sites) == 3, f"expected 3 actions, saw {sites}"
+    cases = [
+        # (route, binner, x, y, actions); l_quantity has 50 distinct
+        # values (exact path), l_extendedprice ~6k (overflow)
+        ("exact_cart", OptimalBinning(prebinning_method="cart"),
+         "l_quantity", "y", 1),
+        ("user_splits", OptimalBinning(user_splits=[10.0, 25.0, 40.0]),
+         "l_quantity", "y", 1),
+        ("quantile_exact", OptimalBinning(prebinning_method="quantile_exact"),
+         "l_quantity", "y", 2),
+        ("overflow_cart", OptimalBinning(prebinning_method="cart"),
+         "l_extendedprice", "y", 3),
+        ("overflow_uniform", OptimalBinning(prebinning_method="uniform"),
+         "l_extendedprice", "y", 3),
+        ("continuous_exact",
+         ContinuousOptimalBinning(prebinning_method="cart"),
+         "l_quantity", "l_discount", 1),
+    ]
+    for route, binner, x, y, n_actions in cases:
+        sc.setJobGroup(f"fitcount_{route}", f"{route} fit job counting")
+        try:
+            binner.fit(lineitem, x, y)
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = tracker.getJobIdsForGroup(f"fitcount_{route}")
+        sites = _action_sites(tracker, jobs)
+        assert len(sites) == n_actions, (
+            f"{route}: expected {n_actions} actions, saw {sites}")
+        if route == "exact_cart":
+            # and the action is at most 2 jobs (AQE: shuffle map + final)
+            assert len(jobs) <= 2, f"expected <=2 jobs, saw {jobs}"
 
 
 def test_process_fit_is_one_action(spark, lineitem):

@@ -460,19 +460,8 @@ def test_monitoring_continuous_target_analysis(spark):
     assert ta["mean"].between(4, 6).all()
 
 
-def test_process_fit_matches_single_variable_fits(spark):
-    """Each variable of a process fit equals a single-variable
-    OptimalBinning fit with the same settings — same splits, same bin
-    table — across a user-split numeric with a special code, an
-    exact-path numeric, a categorical, and weights. The
-    high-cardinality numeric takes the bucketized route, whose bucket
-    edges come from the process probe's value sample and so differ
-    from the single-variable fit's; its table is checked against a raw
-    recount instead."""
-    import pandas as pd
-
-    from optbinning_spark.binning import OptimalBinning
-
+@pytest.fixture(scope="module")
+def mixed_df(spark):
     rng = np.random.RandomState(3)
     rows = []
     for i in range(6000):
@@ -482,21 +471,49 @@ def test_process_fit_matches_single_variable_fits(spark):
         spec = -9.0 if i % 97 == 0 else small
         p = 0.1 + 0.5 * big / 1000 + 0.2 * (small > 20)
         y = int(rng.rand() < min(p, 0.95))
+        yc = float(np.round(10 * p + rng.normal(), 6))
         w = float(1 + (i % 3))
-        rows.append((spec, small, big, cat, y, w))
-    df = spark.createDataFrame(
+        rows.append((spec, small, big, cat, y, yc, w))
+    return spark.createDataFrame(
         rows, "xs double, xm double, xb double, cat string, y int, "
-        "w double")
+        "yc double, w double")
 
+
+@pytest.mark.parametrize("method,target", [
+    ("cart", "binary"), ("mdlp", "binary"), ("quantile", "binary"),
+    ("uniform", "binary"), ("cart", "continuous"),
+])
+def test_process_fit_matches_single_variable_fits(mixed_df, method, target):
+    """Each variable of a process fit equals a single-variable fit with
+    the same settings — same splits, same bin table — across a
+    user-split numeric with a special code, an exact-path numeric
+    (its splits come from the proposer both fits share), a categorical,
+    and weights. The high-cardinality numeric takes the bucketized
+    route, whose bucket edges come from the process probe's value
+    sample and so differ from the single-variable fit's; its table is
+    checked against a raw recount instead."""
+    import pandas as pd
+
+    from optbinning_spark.binning import (
+        ContinuousOptimalBinning,
+        OptimalBinning,
+    )
+
+    df = mixed_df
+    y = "y" if target == "binary" else "yc"
+    cls = OptimalBinning if target == "binary" else ContinuousOptimalBinning
     user = {"xs": {"user_splits": [10.0, 20.0, 30.0]}}
     bp = BinningProcess(
         ["xs", "xm", "xb", "cat"], categorical_variables=["cat"],
-        special_codes=[-9.0], binning_fit_params=user)
-    bp.fit(df, "y", sample_weight="w")
+        special_codes=[-9.0], binning_fit_params=user,
+        prebinning_method=method)
+    bp.fit(df, y, sample_weight="w")
+    assert bp._target_type == target
     for v, kw in (("xs", user["xs"]), ("xm", {}),
                   ("cat", {"dtype": "categorical"})):
-        ob = OptimalBinning(name=v, special_codes=[-9.0], **kw)
-        ob.fit(df, v, "y", sample_weight="w")
+        ob = cls(name=v, special_codes=[-9.0], prebinning_method=method,
+                 **kw)
+        ob.fit(df, v, y, sample_weight="w")
         pb = bp.get_binned_variable(v)
         if v != "cat":
             assert list(pb.splits) == list(ob.splits), v
