@@ -4596,7 +4596,24 @@ def entry(spark: SparkSession) -> DataFrame:
 #: splits-known shape aggregates; the query computes it directly) lead
 #: the window; the last three window slots (continuous_binning_2d_pinned
 #: .. curriculum_shards) move to the head of the tail.
+#:
+#: Job-budget rotation: the banded pair generators now emit their pairs
+#: from one bucket aggregation, the distributed closure stops on its
+#: decode-validity check, and the PSI monitor scores its populations
+#: once, so the queries that run through them lead the window:
+#: dedup_clusters and dedup_clusters_dist (both closures),
+#: psi_variable_report (the monitor), and from the tail lsh_candidates
+#: and simhash_pairs (the two generators) and embedding_dedup_clusters
+#: (clusters_from_pairs over the closure). The last three window slots
+#: (unknown_category_transform .. cluster_balanced_sample) move to the
+#: head of the tail.
 _WINDOW = [
+    "dedup_clusters",
+    "dedup_clusters_dist",
+    "psi_variable_report",
+    "lsh_candidates",
+    "simhash_pairs",
+    "embedding_dedup_clusters",
     "optimal_binning_table",
     "continuous_binning_table",
     "binning_table_fixed",
@@ -4607,13 +4624,10 @@ _WINDOW = [
     "wide_process_fit",
     "wide_fit_exact",
     "wide_fit_contract",
-    "dedup_clusters",
-    "dedup_clusters_dist",
     "scorecard_scores",
     "scorecard_scores_logistic",
     "scorecard_scores_linear",
     "scorecard_scores_huber",
-    "psi_variable_report",
     "semantic_dedup",
     "incremental_dedup",
     "exact_dedup",
@@ -4644,9 +4658,6 @@ _WINDOW = [
     "quality_top_fraction",
     "scorecard_table_pdo",
     "sketch_binning_exact",
-    "unknown_category_transform",
-    "bpe_token_count",
-    "cluster_balanced_sample",
 ]
 
 #: Tail: the remaining r15-green entries (age 3 — they lead the next
@@ -4655,12 +4666,14 @@ _WINDOW = [
 #: tools/check_correctness full-registry runs even while out of the
 #: driver window.
 _TAIL = [
+    "unknown_category_transform",
+    "bpe_token_count",
+    "cluster_balanced_sample",
     "continuous_binning_2d_pinned",
     "counterfactual_diverse_pinned",
     "curriculum_shards",
     "doc_contamination",
     "doc_split_assignment",
-    "embedding_dedup_clusters",
     "event_psi_monitor",
     "mixture_rates",
     "multimodal_frames",
@@ -4670,7 +4683,6 @@ _TAIL = [
     "repetition_flags",
     "scorecard_table_rebased",
     "shard_assignment",
-    "simhash_pairs",
     "sketch_categorical_merge",
     "stratified_doc_sample",
     "binning_2d_woe_transform",
@@ -4684,7 +4696,6 @@ _TAIL = [
     "ivf_topk_trained",
     "piecewise_transform_fixed",
     "minhash_signatures",
-    "lsh_candidates",
     "pq_topk_pinned",
     "kmeans_refined_centroids",
     "dup_ngram_spans",

@@ -41,7 +41,7 @@ from .binning import (
     uniform_splits,
 )
 from .core.tree import cart_splits  # noqa: F401  (re-exported)
-from .multiclass_binning import MulticlassOptimalBinning
+from .multiclass_binning import CATEGORICAL_REFUSAL, MulticlassOptimalBinning
 from .operators.aggregation import (  # noqa: F401  (assemble_bin_stats is re-exported)
     _agg_exprs,
     _metric_names,
@@ -178,6 +178,8 @@ class BinningProcess:
         numeric = [v for v in self.variable_names if dtypes[v] == "numerical"]
         categorical = [v for v in self.variable_names if dtypes[v] == "categorical"]
         wide = len(self.variable_names) >= _WIDE_FIT
+        # a passed target type is refused before any Spark job
+        self._check_target(numeric, categorical)
 
         # normalized working frame: cleaned numeric cols (missing/special
         # -> NULL) so downstream passes need no per-variable filters.
@@ -239,6 +241,8 @@ class BinningProcess:
             if persisted is not None:
                 persisted.unpersist()
         classes = self._classes
+        # an inferred target type is refused before any finalize
+        self._check_target(numeric, categorical)
 
         # driver: per-variable solve via the single-variable finalizers
         for v in self.variable_names:
@@ -257,6 +261,19 @@ class BinningProcess:
         self._apply_selection()
         self._fitted = True
         return self
+
+    def _check_target(self, numeric, categorical):
+        """The single binners' named refusals of a target type: a
+        categorical variable with a multiclass target, and mdlp
+        prebinning of a numeric variable (one without user splits) with
+        a continuous target."""
+        tt = self._target_type
+        if tt == "multiclass" and categorical:
+            raise ValueError(CATEGORICAL_REFUSAL)
+        if tt == "continuous" and self.prebinning_method == "mdlp" and any(
+                self._fit_param(v, "user_splits", None) is None
+                for v in numeric):
+            raise ValueError("mdlp requires a binary target")
 
     # ------------------------------------------------------------------
     def _codes_for(self, v):

@@ -35,24 +35,38 @@ class ScorecardMonitoring:
         self._fitted = False
 
     def fit(self, actual: DataFrame, expected: DataFrame, y: str):
-        """One tagged union + aggregations; all tables derive from the
-        collected per-bin counts."""
+        """One tagged union of the scored populations, scored ONCE: the
+        union carries a lazy localCheckpoint, the score-edge pass
+        (``approxQuantile`` over its expected rows) materializes it,
+        and the per-(bin, population) aggregation — plus, for a
+        continuous target, the target-distribution aggregation — reads
+        that materialization. Neither population is scanned, joined or
+        scored twice. The edges equal those of the expected population
+        alone: the union keeps the expected frame's partitions in their
+        order, and the actual rows' partitions are empty after the
+        filter, so the per-partition quantile summaries and their merge
+        are unchanged. All tables derive from the collected per-bin
+        counts."""
         sc = self.scorecard
         self._y = y
 
-        a = sc.score(actual, "__score").withColumn("__pop", F.lit("A"))
-        e = sc.score(expected, "__score").withColumn("__pop", F.lit("E"))
-        both = a.select("__score", "__pop", F.col(y).alias("__y")).unionByName(
-            e.select("__score", "__pop", F.col(y).alias("__y"))
+        both = (
+            sc.score(actual, "__score")
+            .select("__score", F.lit("A").alias("__pop"),
+                    F.col(y).alias("__y"))
+            .unionByName(
+                sc.score(expected, "__score")
+                .select("__score", F.lit("E").alias("__pop"),
+                        F.col(y).alias("__y")))
+            .localCheckpoint(eager=False)
         )
         # score bins from the EXPECTED population quantiles (reference
         # uses expected as the baseline)
         probs = list(np.linspace(0, 1, self.psi_n_bins + 1)[1:-1])
-        edges = sorted(
-            set(
-                e.select("__score").approxQuantile("__score", probs, 1e-4)
-            )
-        )
+        edges = sorted(set(
+            both.filter(F.col("__pop") == "E")
+            .approxQuantile("__score", probs, 1e-4)
+        ))
         self._score_edges = edges
         from .operators.fastlit import sql_ident
         from .operators.preprocessing import numeric_bin_sql

@@ -191,6 +191,12 @@ class MulticlassBinningTable:
         return spark.createDataFrame(self.build(add_totals=False))
 
 
+CATEGORICAL_REFUSAL = (
+    "categorical feature with multiclass target is not supported "
+    "(reference binning_process.py:109-111)"
+)
+
+
 class MulticlassOptimalBinning(_BaseOptimalBinning):
     _target_type = "multiclass"
 
@@ -239,10 +245,7 @@ class MulticlassOptimalBinning(_BaseOptimalBinning):
         self.solver_node_budget = solver_node_budget
 
     def _fit_categorical(self, df, x, y, w):
-        raise ValueError(
-            "categorical feature with multiclass target is not supported "
-            "(reference binning_process.py:109-111)"
-        )
+        raise ValueError(CATEGORICAL_REFUSAL)
 
     def _fit_classes(self, df, y):
         classes = [

@@ -4,8 +4,8 @@ Designed for the 100 TB regime:
 - exact dedup is a hash groupBy (one shuffle on a 32-hex key);
 - MinHash signatures are computed scan-side with pure expressions
   (md5 per shingle, array_min) — no UDF, no shuffle;
-- LSH banding turns near-dup search into an equi-join on band keys
-  (shuffle on band hash, candidate pairs only);
+- LSH banding turns near-dup search into one aggregation on band keys
+  (shuffle on band hash; each bucket emits its own member pairs);
 - n-gram Jaccard verification joins only on shingles below a
   document-frequency cap, which bounds the join fan-out (the classic
   hot-shingle skew guard).
@@ -344,12 +344,17 @@ def lsh_candidate_pairs(
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate candidate pairs (id_a < id_b),
-    deduplicated across bands. One shuffle on band_key; the join is
-    within-bucket only. ``signatures`` accepts a pre-built
+    deduplicated across bands. ``signatures`` accepts a pre-built
     ``minhash_signatures``-shaped frame (id_col + mh0..mh{n-1}) so a
     caller that also needs other shingle-derived columns
     (duplicate_clusters' verify arrays) can feed both from one staged
     scan instead of re-tokenizing the corpus here.
+
+    Physical shape: ONE bucket aggregation (``_bucket_pairs``) — each
+    (band, band_key) bucket collects its sorted member ids, and the
+    pairs are generated inside the bucket row — then one distinct
+    across bands. The bands are read by that aggregation only, so the
+    minhash scan runs once without a materialized band index.
 
     ``max_bucket_size`` is the hot-bucket skew guard for the 100 TB
     regime: a band bucket of B docs emits B*(B-1)/2 pairs, so one
@@ -358,61 +363,56 @@ def lsh_candidate_pairs(
     a single reducer. Buckets larger than the cap are dropped entirely
     (the standard "too-common band" rule: members that frequent are
     either exact dups — handled upstream by exact_dedup_groups — or
-    not meaningfully similar). The cap is applied via a pre-join
-    groupBy(count) on the same key as the join, so AQE coalesces the
-    exchange. The default (1000, the conventional too-common cutoff:
-    a capped bucket still admits ~500k pairs) is ON because the
-    production path must be skew-safe without opt-in; pass None to
-    explicitly run uncapped."""
+    not meaningfully similar). The count that enforces the cap rides
+    the same aggregation. Memory: a bucket above the cap still holds
+    its member list (8 bytes per int64 id) in one aggregation buffer
+    before it is dropped — 8 MB for a bucket of 10^6 identical docs,
+    none of it ever expanded into pairs. The default (1000, the
+    conventional too-common cutoff: a capped bucket still admits
+    ~500k pairs) is ON because the production path must be skew-safe
+    without opt-in; pass None to explicitly run uncapped."""
     sig = signatures if signatures is not None else minhash_signatures(
         df, text_col, id_col, n_hashes, shingle_n)
     bands = lsh_bands(sig, id_col, n_hashes, band_size)
-    # Materialize the band index ONCE (r17): left as lineage, the
-    # split->shingle->salted-md5 minhash scan is evaluated FOUR times
-    # — the cap count, the cap join-back, and both sides of the
-    # band-bucket self-join all plan their own copy (the cap join and
-    # the self-join go broadcast, whose build sides Spark does not
-    # exchange-reuse against the probe sides; verified in the r17
-    # formatted plan: 4 parquet scans of the corpus). The checkpointed
-    # frame is (id, band, band_key) — a few small rows per doc, the
-    # same bytes the band self-join already shuffles — and every
-    # consumer reads it instead of re-hashing the corpus. Measured at
-    # sf0.1: candidate pairs 0.76 s -> ~0.4 s, identical output.
-    # Batch frames only: a streaming caller keeps pure lineage.
-    if not df.isStreaming:
-        bands = bands.localCheckpoint(eager=True)
-    bands = _cap_buckets(bands, max_bucket_size)
-    a = bands.alias("a")
-    b = bands.alias("b")
+    return _bucket_pairs(bands, id_col, max_bucket_size).distinct()
+
+
+def _bucket_pairs(bands: DataFrame, id_col: str,
+                  max_bucket_size: int | None,
+                  payload: str | None = None) -> DataFrame:
+    """Banded pair generation shared by MinHash-LSH and SimHash: ONE
+    ``groupBy(band, band_key)`` aggregation yields each bucket's size
+    and its sorted member list; buckets with 2 <= size <=
+    ``max_bucket_size`` (None = uncapped) emit every (id_a < id_b)
+    member pair in place through ``inline(flatten(transform(...)))``.
+    Rows (id_a, id_b), plus ``hamming`` = bit_count(xor) of the two
+    members' ``payload`` fingerprints when a payload column is given.
+    Pairs repeat across bands; callers dedup.
+
+    The size is count(*), so rows with a NULL id count toward the cap
+    but are never paired (collect_list skips a NULL id, and id_a <
+    id_b drops a NULL member of a payload struct)."""
+    ident = sql_ident(id_col)
+    if payload is None:
+        member, a, b, extra = ident, "x", "y", ""
+    else:
+        member = f"named_struct('i', {ident}, 'p', {sql_ident(payload)})"
+        a, b = "x.i", "y.i"
+        extra = ", 'hamming', bit_count(x.p ^ y.p)"
+    keep = F.col("__n") >= 2
+    if max_bucket_size is not None:
+        keep = keep & (F.col("__n") <= max_bucket_size)
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-
-
-def _cap_buckets(bands: DataFrame, max_bucket_size: int | None) -> DataFrame:
-    """Too-common-band guard shared by every banded pair generator
-    (MinHash-LSH and SimHash): drop buckets with more than
-    ``max_bucket_size`` members before the self-join. The count runs
-    on the same key as the join, so AQE coalesces the exchange;
-    None = uncapped."""
-    if max_bucket_size is None:
-        return bands
-    ok = (
         bands.groupBy("band", "band_key")
-        .agg(F.count("*").alias("__bsz"))
-        .filter(F.col("__bsz") <= max_bucket_size)
-        .drop("__bsz")
+        .agg(F.count("*").alias("__n"),
+             F.expr(f"sort_array(collect_list({member}))").alias("__m"))
+        .filter(keep)
+        .select(F.expr(
+            "inline(flatten(transform(__m, (x, k) -> transform("
+            "slice(__m, k + 2, size(__m) - k - 1), "
+            f"y -> named_struct('id_a', {a}, 'id_b', {b}{extra})))))"))
+        .filter(F.col("id_a") < F.col("id_b"))
     )
-    return bands.join(ok, ["band", "band_key"])
 
 
 def exact_dedup_groups(
@@ -803,19 +803,23 @@ def simhash_candidate_pairs(
     max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """SimHash near-duplicate pairs: band the fingerprint into
-    ``n_bands`` contiguous bit slices, equi-join docs sharing any
-    band slice, verify Hamming distance <= ``max_hamming``.
+    ``n_bands`` contiguous bit slices, pair docs sharing any band
+    slice, verify Hamming distance <= ``max_hamming``.
 
     By pigeonhole, any pair within Hamming distance <= n_bands - 1
     agrees on at least one full band, so with the default
-    max_hamming = n_bands - 1 the banded join is EXACT (recall 1.0)
-    while never comparing all pairs — the same bucket-join shape as
-    MinHash-LSH (one shuffle on the band key), with the verify step a
-    cheap bit_count(xor) instead of a shingle intersection.
+    max_hamming = n_bands - 1 the banding is EXACT (recall 1.0) while
+    never comparing all pairs — the same bucket shape as MinHash-LSH
+    (ONE bucket aggregation, ``_bucket_pairs``), with the
+    verify step a cheap bit_count(xor) of the two members'
+    fingerprints, which ride the member list, instead of a shingle
+    intersection.
 
     ``max_bucket_size``: same too-common-band guard as
     lsh_candidate_pairs (a degenerate slice bucket emits B^2/2
-    candidate pairs); capped by default, None = explicit uncapped.
+    candidate pairs); capped by default, None = explicit uncapped. A
+    bucket above the cap holds 16 bytes per member (id and
+    fingerprint) in one aggregation buffer before it is dropped.
     """
     if max_hamming > n_bands - 1:
         raise ValueError(
@@ -836,24 +840,9 @@ def simhash_candidate_pairs(
             for b in range(n_bands)
         ])).alias("b"),
     ).select(id_col, "simhash", "b.band", "b.band_key")
-    bands = _cap_buckets(bands, max_bucket_size)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    ham = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .filter(ham <= max_hamming)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            ham.alias("hamming"),
-        )
+        _bucket_pairs(bands, id_col, max_bucket_size, payload="simhash")
+        .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
 
@@ -1012,6 +1001,48 @@ def _cc_round_local_uf(edges: DataFrame) -> DataFrame:
         _cc_local_uf_kernel, "src long, dst long")
 
 
+def _star_check(e: DataFrame):
+    """Decode-validity proof and fingerprint of a closure edge set, in
+    ONE 2-level aggregation action. Returns (stars_ok, (count, chk)).
+
+    stars_ok: (a) every src has exactly ONE label (min == max), (b)
+    every label is SMALLER than its src (so each star's center is the
+    minimum of its node set), (c) no label is itself relabeled (depth
+    1 — no node is both a src and a dst). An empty edge set passes.
+    With per-round component preservation these conditions make the
+    decode exactly the min-label components of the ORIGINAL graph.
+
+    (count, chk): the row count and an exact SUM of row hashes —
+    multiset-safe, since a local-union-find round can emit a node once
+    per partition that sees it (xor would cancel duplicate pairs);
+    decimal(38,0) keeps the sum exact and overflow-free to ~10^19
+    rows."""
+    u = e.select(
+        F.col("src").alias("v"), F.col("dst").alias("lbl"),
+        F.lit(1).alias("s"),
+        F.xxhash64("src", "dst").cast("decimal(38,0)").alias("h"),
+    ).unionAll(e.select(
+        F.col("dst").alias("v"), F.lit(None).cast("long"), F.lit(0),
+        F.lit(None).cast("decimal(38,0)"),
+    ))
+    bad = F.when(
+        (F.col("is_src") == 1)
+        & ((F.col("mn") != F.col("mx")) | (F.col("mx") >= F.col("v"))
+           | (F.col("min_s") == 0)), 1).otherwise(0)
+    row = (
+        u.groupBy("v")
+        .agg(
+            F.min("lbl").alias("mn"), F.max("lbl").alias("mx"),
+            F.max("s").alias("is_src"), F.min("s").alias("min_s"),
+            F.sum("s").alias("n"), F.sum("h").alias("h"),
+        )
+        .agg(F.max(bad).alias("bad"), F.sum("n").alias("n"),
+             F.sum("h").alias("chk"))
+        .first()
+    )
+    return not row["bad"], (row["n"], row["chk"])
+
+
 def connected_components(
     pairs: DataFrame,
     src_col: str = "id_a",
@@ -1031,7 +1062,7 @@ def connected_components(
     propagation, which needs O(diameter) rounds and dies on long
     chain-shaped dup clusters. Each round is two shuffles (groupBy
     min + equi-join on the same key); lineage is truncated per round
-    with an eager checkpoint so the plan stays O(1) deep. With
+    with a checkpoint so the plan stays O(1) deep. With
     ``checkpoint_dir`` set, rounds checkpoint to RELIABLE storage
     (HDFS/S3 path on a real cluster — an executor loss replays from
     the last round, not the whole closure); the default None uses
@@ -1045,6 +1076,20 @@ def connected_components(
     shrinks the hub by pointing its heavy neighbors at the minimum,
     which is WHY the alternating-star algorithm, unlike label
     propagation, does not accumulate hub pressure across rounds.
+
+    Distributed route, int64 ids: local-union-find rounds run first
+    (``_cc_round_local_uf``: one exchange and one mapInArrow pass
+    each). Stopping rule: after every round one aggregation action
+    (``_star_check``) proves the decode valid — every node has one
+    label, smaller than itself, and no label is relabeled — and the
+    loop stops on the first round that passes, so a graph whose edges
+    fit one partition closes in ONE round. Fallback trigger: a round
+    that fails the proof and leaves the edge set's (count, hash sum)
+    fingerprint unchanged has reached a fixed point that is not a
+    star forest; the closure then runs the alternating-star loop
+    above from that (component-equivalent) edge set and sets
+    ``stats["star_fallback"]``. Other id types take the alternating-
+    star loop directly.
 
     ``driver_threshold``: an edge set that fits comfortably on the
     driver (default 1M edges ≈ 16 MB) is fetched with ONE
@@ -1062,7 +1107,7 @@ def connected_components(
 
     ``stats``: pass a dict to observe execution — filled with
     ``path`` ("driver" | "distributed"), ``edges``, and ``rounds``
-    (star rounds run; 0 on the driver path). This is how tests pin
+    (local-union-find plus star rounds run; 0 on the driver path). This is how tests pin
     the O(log^2 n) round bound instead of trusting it.
 
     Returns (node, component): one row per distinct node of ``pairs``,
@@ -1075,7 +1120,7 @@ def connected_components(
 
         def _ckpt(frame):
             # LAZY checkpoint (r17): the next action over the frame —
-            # always the 1-row count/convergence probe in this loop —
+            # always the 1-row check/convergence probe in this loop —
             # materializes the checkpoint AND computes the probe in
             # ONE job, where eager=True spent a separate scheduled job
             # per round just materializing (2 jobs/round -> 1; the
@@ -1120,87 +1165,37 @@ def connected_components(
                 pd.DataFrame({"node": ids, "component": labels}), schema)
         return spark.createDataFrame([], schema)
     stats["path"] = "distributed"
-    prev = None
     converged = False
     rounds = 0
     # Fast closure (r18): local-union-find rounds — one exchange + one
     # mapInArrow pass per round (the alternating-star round pays ~6
-    # exchanges, each a separate AQE job). The per-round output can
-    # carry cross-partition duplicates (a node is relabeled by every
-    # partition that sees it), so the stability probe uses an exact
-    # SUM of row hashes (multiset-safe — xor would cancel duplicate
-    # pairs) next to the count; decimal(38,0) keeps the sum exact and
-    # overflow-free to ~10^19 rows. Correctness does NOT rest on the
-    # probe: it is only the stopping heuristic — the decoded shape is
-    # verified explicitly below, and any failure falls back to the
-    # proven alternating-star loop (every round preserves components
-    # exactly, so the fallback input is equivalent). Gated on int64
-    # node ids (every engine caller); other id types take the star
-    # loop directly.
+    # exchanges, each a separate AQE job). After every round ONE
+    # aggregation action (_star_check) both proves the decode valid
+    # and fingerprints the edge set; the proof is the only stopping
+    # test. A round that leaves the fingerprint unchanged without
+    # passing the proof is a fixed point that is not a min-star
+    # forest, so it falls back to the proven alternating-star loop
+    # (every round preserves components exactly, so the fallback input
+    # is equivalent). Gated on int64 node ids (every engine caller);
+    # other id types take the star loop directly.
     from pyspark.sql.types import LongType
 
     fast = isinstance(e.schema["src"].dataType, LongType) and isinstance(
         e.schema["dst"].dataType, LongType)
     if fast:
+        prev = None
         for _ in range(max_iter):
             e = _ckpt(_cc_round_local_uf(e))
             rounds += 1
             stats["rounds"] = rounds
-            probe = e.agg(
-                F.count("*").alias("n"),
-                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)"))
-                .alias("chk"),
-            ).first()
-            cur = (probe["n"], probe["chk"])
-            if cur == prev:
+            stars_ok, cur = _star_check(e)
+            if stars_ok:
                 converged = True
                 break
-            prev = cur
-        if converged:
-            # decode-validity verification — ONE aggregation action
-            # over the converged ~component-count-sized edge set: (a)
-            # every src has exactly ONE distinct label, (b) every
-            # label is SMALLER than its src (so each star's center is
-            # the minimum of its node set), (c) no label is itself
-            # relabeled (depth 1 — no node is both a src and a dst).
-            # With per-round component preservation these three
-            # conditions make the decode exactly the min-label
-            # components of the ORIGINAL graph; the probe above is
-            # only a stopping heuristic, never load-bearing.
-            u = e.select(
-                F.col("src").alias("v"), F.col("dst").alias("lbl"),
-                F.lit(1).alias("s"),
-            ).unionAll(e.select(
-                F.col("dst").alias("v"), F.lit(None).cast("long"),
-                F.lit(0),
-            ))
-            shape = (
-                u.groupBy("v")
-                .agg(
-                    F.count_distinct("lbl").alias("nd"),
-                    F.max(F.when(F.col("v") <= F.col("lbl"), 1)
-                          .otherwise(0)).alias("ge"),
-                    F.max("s").alias("is_src"),
-                    F.max(1 - F.col("s")).alias("is_dst"),
-                )
-                .agg(
-                    F.max(F.when(F.col("is_src") == 1, F.col("nd")))
-                    .alias("max_nd"),
-                    F.min(F.when(F.col("is_src") == 1, F.col("nd")))
-                    .alias("min_nd"),
-                    F.max("ge").alias("ge"),
-                    F.max(F.col("is_src") * F.col("is_dst"))
-                    .alias("chain"),
-                )
-                .first()
-            )
-            stars_ok = (
-                shape["max_nd"] == 1 and shape["min_nd"] == 1
-                and shape["ge"] == 0 and shape["chain"] == 0
-            )
-            if not stars_ok:
-                converged = False
+            if cur == prev:
                 stats["star_fallback"] = True
+                break
+            prev = cur
     if not converged:
         # proven closure: alternating large-star / small-star from the
         # current (component-equivalent) edge set

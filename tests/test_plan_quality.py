@@ -601,3 +601,90 @@ def test_binning_2d_fit_is_single_partial_agg(spark, lineitem):
         F.count("*").alias("n"))
     assert uses_partial_aggregation(agg), _plan(agg)
     assert num_shuffles(agg) == 1, _plan(agg)
+
+
+def _group_jobs(spark, group, fn):
+    """Run ``fn`` under a job group; return (its result, the group's
+    job count). AQE runs each shuffle query stage as its own job, so
+    the count is the per-call scheduling overhead the budget pins."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("route,kw,budget,rounds", [
+    ("driver", {}, 9, 0),
+    ("distributed", {"driver_threshold": 0}, 14, 1),
+])
+def test_duplicate_clusters_job_budget(spark, route, kw, budget, rounds):
+    """Jobs per duplicate_clusters call, per closure: the banded pairs
+    are ONE bucket aggregation (no cap count, join-back, band
+    checkpoint or band self-join), and the distributed closure stops
+    on its decode-validity check — one local-union-find round here,
+    since the 28 candidate edges fit one partition."""
+    from optbinning_spark.pipeline.dedup import duplicate_clusters
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    stats = {}
+    rows, jobs = _group_jobs(
+        spark, f"dedup_budget_{route}",
+        lambda: duplicate_clusters(docs, n_hashes=8, band_size=2,
+                                   stats=stats, **kw).collect())
+    assert len(rows) == docs.count()
+    assert stats["path"] == route and stats["rounds"] == rounds, stats
+    assert "star_fallback" not in stats
+    assert jobs == budget, f"{route} closure ran {jobs} jobs"
+
+
+def test_scorecard_monitoring_job_budget(spark, lineitem):
+    """ScorecardMonitoring.fit scores the two populations once: the
+    score-edge pass materializes the checkpointed union, so the
+    expected frame (here a broadcast join, like the benchmark's) is not
+    scanned, joined and scored a second time."""
+    from optbinning_spark import BinningProcess
+    from optbinning_spark.monitoring import ScorecardMonitoring
+    from optbinning_spark.scorecard import Scorecard
+
+    card = Scorecard(BinningProcess(
+        ["l_quantity", "l_extendedprice", "l_discount"])).fit(lineitem, "y")
+    orders = spark.read.parquet(f"{SF}/orders.parquet")
+    df = lineitem.join(F.broadcast(orders),
+                       lineitem.l_orderkey == orders.o_orderkey)
+    mon, jobs = _group_jobs(
+        spark, "monitor_budget",
+        lambda: ScorecardMonitoring(card).fit(
+            df.filter("l_orderkey % 2 = 0"), df.filter("l_orderkey % 2 = 1"),
+            "y"))
+    assert mon.psi_total() >= 0
+    assert jobs == 6, f"the monitor fit ran {jobs} jobs"
+
+
+@pytest.mark.parametrize("generator", ["lsh", "simhash"])
+def test_banded_pairs_bucket_cap_is_inclusive(spark, generator):
+    """The too-common-band cap keeps a bucket of exactly
+    max_bucket_size members (all its pairs are emitted) and drops one
+    of max_bucket_size + 1 (none are). Identical texts share every
+    band bucket."""
+    from optbinning_spark.pipeline.dedup import (
+        lsh_candidate_pairs, simhash_candidate_pairs)
+
+    cap = 5
+
+    def pairs(n_docs):
+        docs = spark.createDataFrame(
+            [(i, "the same boilerplate text in every doc")
+             for i in range(n_docs)], "doc_id: long, text: string")
+        if generator == "lsh":
+            q = lsh_candidate_pairs(docs, n_hashes=8, band_size=2,
+                                    max_bucket_size=cap)
+        else:
+            q = simhash_candidate_pairs(docs, max_bucket_size=cap)
+        return sorted((r["id_a"], r["id_b"]) for r in q.collect())
+
+    assert pairs(cap) == [(a, b) for a in range(cap)
+                          for b in range(a + 1, cap)]
+    assert pairs(cap + 1) == []

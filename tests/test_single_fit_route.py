@@ -3,7 +3,10 @@ continuous and multiclass targets, and one split proposer shared with
 BinningProcess: the clean filters apply on every route, mdlp is refused
 on a continuous target on both fits, an unknown prebinning method is
 refused before any Spark job, and quantile splits picked from the
-probe's grid leave no empty prebin in either fit."""
+probe's grid leave no empty prebin in either fit. BinningProcess
+refuses the target types the single binners refuse (mdlp on a
+continuous target, a categorical variable with a multiclass target)
+before any Spark job when the type is passed."""
 
 import numpy as np
 import pytest
@@ -102,3 +105,51 @@ def test_quantile_grid_splits_leave_no_empty_prebin(spark, monkeypatch,
         counts = (stats.clean["n_records"] if target == "continuous"
                   else sum(stats.clean.values()))
         assert (counts > 0).all()
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a job group; return the group's job ids."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_process_mdlp_refused_on_passed_continuous_before_any_job(
+        spark, frame):
+    """A passed continuous target refuses mdlp before the stacked
+    aggregation or the probe run (it used to run both first)."""
+    bp = BinningProcess(["x"], prebinning_method="mdlp")
+
+    def fit():
+        with pytest.raises(ValueError, match="mdlp requires a binary target"):
+            bp.fit(frame, "yc", target_type="continuous")
+
+    assert _jobs_in(spark, "mdlp_passed_continuous", fit) == []
+
+
+def test_process_multiclass_categorical_refused(spark, frame):
+    """A categorical variable with a multiclass target raises the single
+    binner's ValueError: before any Spark job when the target type is
+    passed, and before any finalize when it is inferred (both used to
+    end in an AttributeError after the stacked aggregation)."""
+    from pyspark.sql import functions as F
+
+    df = frame.withColumn(
+        "c", F.when(F.col("x") < 30, "lo").otherwise("hi"))
+    bp = BinningProcess(["x", "c"])
+    msg = "categorical feature with multiclass target is not supported"
+    with pytest.raises(ValueError, match=msg):
+        MulticlassOptimalBinning().fit(df, "c", "y")
+
+    def passed():
+        with pytest.raises(ValueError, match=msg):
+            bp.fit(df, "y", target_type="multiclass")
+
+    assert _jobs_in(spark, "multiclass_categorical_passed", passed) == []
+    for kw in ({}, {"categorical_variables": ["x"]}):
+        with pytest.raises(ValueError, match=msg):
+            BinningProcess(["x", "c"], **kw).fit(df, "y")
