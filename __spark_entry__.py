@@ -4607,7 +4607,21 @@ def entry(spark: SparkSession) -> DataFrame:
 #: (clusters_from_pairs over the closure). The last three window slots
 #: (unknown_category_transform .. cluster_balanced_sample) move to the
 #: head of the tail.
+#: Solver-kernel rotation: the binary/continuous, scenario and
+#: multiclass partition DPs and the three concave/convex searches are
+#: now one DP and one budgeted shape search, so the queries that solve
+#: through the rewritten shape and multiclass paths lead the window
+#: (concave_binning_table, convex_binning_table and
+#: multiclass_binning_table from inside it, scenario_binning_table and
+#: categorical_optimal_binning from the tail); the last two window
+#: slots (scorecard_table_pdo, sketch_binning_exact) move to the head
+#: of the tail.
 _WINDOW = [
+    "concave_binning_table",
+    "convex_binning_table",
+    "multiclass_binning_table",
+    "scenario_binning_table",
+    "categorical_optimal_binning",
     "dedup_clusters",
     "dedup_clusters_dist",
     "psi_variable_report",
@@ -4640,24 +4654,19 @@ _WINDOW = [
     "ann_topk",
     "event_window_stats",
     "ks",
-    "multiclass_binning_table",
     "outlier_zscore",
     "quantile_splits",
     "regression_metrics",
     "uniform_binning_table",
     "binning_2d_pinned",
     "class_weight_agg",
-    "concave_binning_table",
     "gopher_flags",
     "indices_bins_transform",
     "lang_id",
-    "convex_binning_table",
     "doc_chunks",
     "multimodal_features",
     "outlier_iqr",
     "quality_top_fraction",
-    "scorecard_table_pdo",
-    "sketch_binning_exact",
 ]
 
 #: Tail: the remaining r15-green entries (age 3 — they lead the next
@@ -4666,6 +4675,8 @@ _WINDOW = [
 #: tools/check_correctness full-registry runs even while out of the
 #: driver window.
 _TAIL = [
+    "scorecard_table_pdo",
+    "sketch_binning_exact",
     "unknown_category_transform",
     "bpe_token_count",
     "cluster_balanced_sample",
@@ -4734,10 +4745,8 @@ _TAIL = [
     "sketch_binning_table",
     "scorecard_table_linear",
     "continuous_bin_stats",
-    "categorical_optimal_binning",
     "scorecard_table",
     "multiclass_bin_counts",
-    "scenario_binning_table",
     "mean_transform",
     "binning_2d_table",
     "continuous_binning_2d_table",
@@ -4844,7 +4853,7 @@ def _dp_cte_binary_shape(table, xcol, ycond, n_prebins, shape, p=""):
     """CTE chain like _dp_cte_binary but for the EXACT concave/convex
     trends (reference cp.py:433-457: e_a + e_c <= 2 e_b for EVERY bin
     triple a < b < c, reversed for convex). The engine solves these by
-    pruned DFS enumeration (core/solver.py _solve_shape_enum) with the
+    its budgeted shape search (core/solver.py _shape_search) with the
     r14 pinned selection (9dp-rounded objective, ties to the lowest
     boundary mask), so the oracle is the same mask enumeration with
     the all-triples constraint as a triple self-join on segment event
@@ -5443,7 +5452,7 @@ def _sql_enum_from_binrow(p):
     semantics with min_event_rate_diff = 0 (ties legal in both legs).
     IV argmax on the objective ROUNDED to 9dp, residual ties to the
     lowest mask — the exact total order the DP pins (core/solver.py
-    _dp_run carries a per-state minimal boundary mask), so exact-IV
+    _partition_dp carries a per-state minimal boundary mask), so exact-IV
     ties on integer counts no longer fall to float summation order;
     verified segment-identical to the DP on 8,000 stably-seeded
     profiles per trend (tests/test_wide_fit_oracle.py incl. the

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .core.auto_monotonic import resolve_trend
-from .core.solver import solve_binary, solve_continuous
+from .core.solver import check_trend, solve_binary, solve_continuous
 from .core.tree import cart_splits, mdlp_splits
 from .operators import prebinning
 from .operators.aggregation import (
@@ -58,6 +58,9 @@ from .operators.preprocessing import clean_value_expr
 from .operators.transform import transform_expr
 
 _PREBINNING_METHODS = ("cart", "mdlp", "quantile", "uniform", "quantile_exact")
+# trend modes the binners resolve themselves (core.auto_monotonic)
+# before the solve; every other trend must be one of core.solver.TRENDS
+AUTO_TRENDS = ("auto", "auto_heuristic", "auto_asc_desc")
 
 
 def refine_pure_prebins(splits, count_vecs):
@@ -187,6 +190,7 @@ class _BaseOptimalBinning:
                 f"got {prebinning_method!r}")
         if prebinning_method == "mdlp" and self._target_type == "continuous":
             raise ValueError("mdlp requires a binary target")
+        check_trend(monotonic_trend, also=AUTO_TRENDS)
         self.name = name
         self.dtype = dtype
         self.prebinning_method = prebinning_method
@@ -241,10 +245,14 @@ class _BaseOptimalBinning:
 
     @property
     def status(self) -> str:
-        """Solver status (reference binning.py:1178-1187). The DP
-        solver is exact, so a fitted model is always OPTIMAL."""
+        """Solver status (reference binning.py:1178-1187): OPTIMAL,
+        FEASIBLE (best partition found under the shape search's node
+        budget), UNKNOWN (budget exhausted, nothing proven) or
+        INFEASIBLE (no partition meets the constraints; the fit keeps
+        one bin). OPTIMAL when no solve ran."""
         self._check_fitted()
-        return "OPTIMAL"
+        sol = getattr(self, "solution_", None)
+        return sol.status if sol is not None else "OPTIMAL"
 
     def fit(self, df: DataFrame, x: str, y: str, sample_weight: str | None = None):
         self.name = self.name or x

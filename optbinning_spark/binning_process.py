@@ -34,12 +34,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .binning import (
+    AUTO_TRENDS,
     ContinuousOptimalBinning,
     OptimalBinning,
     _infer_dtype,
     propose_splits,
     uniform_splits,
 )
+from .core.solver import check_trend
 from .core.tree import cart_splits  # noqa: F401  (re-exported)
 from .multiclass_binning import CATEGORICAL_REFUSAL, MulticlassOptimalBinning
 from .operators.aggregation import (  # noqa: F401  (assemble_bin_stats is re-exported)
@@ -160,6 +162,10 @@ class BinningProcess:
     # ------------------------------------------------------------------
     def fit(self, df: DataFrame, y: str, sample_weight: str | None = None,
             target_type: str | None = None):
+        # every trend is checked before the first Spark job
+        check_trend(self.monotonic_trend, also=AUTO_TRENDS)
+        for params in self.binning_fit_params.values():
+            check_trend(params.get("monotonic_trend"), also=AUTO_TRENDS)
         # target-type and class-list inference ride the fit's own
         # actions (see _fused_fit_stats)
         self._target_type = target_type

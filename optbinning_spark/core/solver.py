@@ -1,44 +1,51 @@
-"""Optimal-binning solver: exact dynamic programming over prebins.
+"""Optimal-binning solver: one exact partition DP and one budgeted shape
+search over prebins.
 
 The reference (optbinning) formulates bin selection as a CP-SAT /
 MIP generalized-assignment problem over lower-triangular booleans
 (reference: optbinning/binning/cp.py:17-584, mip.py:16-471) solved by
 Google OR-Tools. OR-Tools is not available here, and it is also not
 needed: the search space is contiguous partitions of n <= ~20 prebins,
-which a dynamic program enumerates exactly. For the constraint
-families the reference supports (monotonic event-rate trends, bin
-size/count bounds, max p-value between consecutive bins, minimum
-event-rate difference), optimal substructure holds with a DP state of
-(last bin [j..i], number of bins used, trend phase), so this solver
-returns a *globally optimal* partition — the same optimum CP-SAT
-finds, without the dependency.
+which a dynamic program enumerates exactly.
 
-It also subsumes the reference's pre-binning refinement loop
-(binning.py:1085-1145): candidate merged bins with zero events or zero
-nonevents are simply infeasible states (for IV/JS), so "merge pure
-prebins" falls out of the optimization instead of being a separate
-pre-pass.
+arXiv:2001.08025 writes every target as one formulation, and so does
+this module: pick the contiguous partition of the prebins that
+maximizes a sum of per-bin terms V[j, i] (bin = prebins j..i) over the
+feasible bins, with a bin count in [lo, hi] and pairwise constraints
+between bins on a rate tensor rates[j, i, c]. The four public solvers
+only build that model's data:
 
-Tie policy (r14): every DP (_dp_run, _scenario_dp,
-_solve_multiclass_dp) AND the binary concave/convex DFS
-(_solve_shape_enum's complete-partition selection) compare candidates
-through _better_pinned — objective rounded to 9dp, residual ties to
-the lowest boundary mask — matching the SQL enumeration oracles'
-ORDER BY round(obj, 9) DESC, mask. Only _solve_multiclass_enum keeps
-strict first-found-wins ties: it is deterministic on its own and has
-no SQL twin (shaped-multiclass stays in the non-replayable tail).
+  target               rate components   peak/valley phase groups
+  binary, continuous   1                 one group
+  scenario             one per scenario  one group shared by all
+  multiclass           one per class     one per peak/valley class
 
-Supported monotonic trends: ascending, descending, auto_asc_desc,
-peak, valley, (auto / auto_heuristic via
-optbinning_spark.core.auto_monotonic), and EXACT concave/convex:
-the reference's all-triples curvature constraint
-(cp.py:433-457, e_a + e_c <= 2 e_b for every bin triple a < b < c)
-does not fit a last-bin DP state, so those two trends use a pruned
-depth-first partition enumeration with an O(1) incremental
-feasibility bound per appended bin (_solve_shape_enum).
+A trend (TRENDS) puts on a component either a fixed leg (ascending /
+descending, with the min-diff), a leg pair inside its phase group
+(peak / valley: one phase bit per group, first leg then second), or
+the all-triples curvature rule (concave / convex). _partition_dp
+solves everything but curvature exactly over states (phase mask, bins
+used, last bin [j..i]), optionally gated by a p-value edge predicate
+between consecutive bins; because candidate merged bins with zero
+events or nonevents are infeasible states, it also subsumes the
+reference's merge-pure-prebins refinement (binning.py:1085-1145).
+Curvature (e_a + e_c <= 2 e_b for EVERY bin triple, cp.py:433-457)
+does not fit a last-bin state, so any concave/convex component sends
+the solve to _shape_search, a depth-first partition enumeration with
+O(1) incremental pruning under a node budget.
+
+Tie policy: every comparison — between DP candidates, DP terminal
+states and completed partitions of the shape search — is
+_better_pinned: objective rounded to 9dp, then the lowest boundary
+mask, then the earlier candidate (a phase stay before a switch). That
+is the total order the SQL enumeration oracles replay with
+ORDER BY round(obj, 9) DESC, mask.
 """
 
 from __future__ import annotations
+
+import functools
+from operator import gt, sub
 
 import numpy as np
 
@@ -46,13 +53,40 @@ from .metrics import DIVERGENCES
 from .special_math import chi2_contingency_2xk, welch_ttest_from_stats
 
 NEG = -1e18
+# extension attempts of the shape search: fully enumerates a flat
+# 20-prebin profile (about 2-3 s)
+NODE_BUDGET = 2_000_000
+
+#: Every per-component trend the kernel solves. The binners accept
+#: these plus the auto modes they resolve themselves;
+#: peak_heuristic / valley_heuristic (the reference fixes the change
+#: point by a scan) are solved as the exact peak / valley.
+TRENDS = (None, "none", "ascending", "descending", "peak", "valley",
+          "peak_heuristic", "valley_heuristic", "concave", "convex")
+# first-leg direction of the legged trends (+1 ascending)
+_LEG = {"ascending": 1.0, "descending": -1.0, "peak": 1.0, "valley": -1.0,
+        "peak_heuristic": 1.0, "valley_heuristic": -1.0}
+_PHASED = ("peak", "valley", "peak_heuristic", "valley_heuristic")
+_CURVE = {"concave": 1.0, "convex": -1.0}
+# curvature implies unimodality: the DP relaxation of a shape search
+_RELAX = {"concave": "peak", "convex": "valley"}
+_MAX_GROUPS = 12
+
+
+def check_trend(trend, also=()) -> None:
+    """Raise a named ValueError unless ``trend`` is in TRENDS or in
+    ``also`` (the auto modes a caller resolves itself)."""
+    if trend not in TRENDS and trend not in also:
+        allowed = ", ".join(repr(t) for t in TRENDS + tuple(also))
+        raise ValueError(
+            f"unsupported monotonic_trend {trend!r}; allowed: {allowed}")
 
 
 def _better_pinned(val, cmask, best_val, best_mask):
-    """Pinned candidate comparison shared by every partition DP:
-    objective rounded to 9dp, residual ties break to the lowest
-    boundary mask (bit j-1 set = split between prebin j-1 and j) —
-    the same total order the SQL enumeration oracles apply via
+    """Pinned candidate comparison shared by the DP and the shape
+    search: objective rounded to 9dp, residual ties break to the lowest
+    boundary mask (bit j-1 set = split between prebin j-1 and j) — the
+    same total order the SQL enumeration oracles apply via
     ORDER BY round(obj, 9) DESC, mask. Exact-objective ties are
     common on integer counts (mathematically equal IV reached by
     different partitions); without the pin the winner fell to float
@@ -73,10 +107,8 @@ def _better_pinned(val, cmask, best_val, best_mask):
     accumulation. Comparing on exactly-representable scaled integers
     would close it where objectives permit (IV terms do not — they
     carry ln())."""
-    # float() first: callers pass numpy float64 scalars, and round()
-    # on a numpy scalar routes through np.round at ~25x the cost of
-    # rounding a Python float — the flat-profile DFS hits this branch
-    # on EVERY completed partition (all tie at 0), so it is hot
+    # float() first: round() on a numpy scalar routes through np.round
+    # at ~25x the cost of rounding a Python float
     val = float(val)
     best_val = float(best_val)
     d = val - best_val
@@ -96,9 +128,9 @@ class BinSolution:
     def __init__(self, segments, objective, status, trend):
         self.segments = segments  # list of (start, end) inclusive prebin spans
         self.objective = objective
-        # "OPTIMAL" | "FEASIBLE" (anytime best under budget) |
-        # "INFEASIBLE" (proven) | "UNKNOWN" (budget exhausted, nothing
-        # proven either way — multiclass enumeration only)
+        # "OPTIMAL" | "FEASIBLE" (best found under the node budget) |
+        # "INFEASIBLE" (proven; one bin over all prebins) | "UNKNOWN"
+        # (budget exhausted, nothing proven either way)
         self.status = status
         self.trend = trend
 
@@ -117,16 +149,9 @@ def _interval_sums(v: np.ndarray) -> np.ndarray:
     return np.where(j <= i, s, 0.0)
 
 
-def _pair_pvalues_binary(ev, ne, segs_a, segs_b):
-    """chi2 p-value between candidate bin a=(j,i) and b=(k,l)."""
-    out = np.empty((len(segs_a), len(segs_b)))
-    for a, (j, i) in enumerate(segs_a):
-        for b, (k, l) in enumerate(segs_b):
-            _, p = chi2_contingency_2xk(
-                np.array([[ne[j, i], ev[j, i]], [ne[k, l], ev[k, l]]])
-            )
-            out[a, b] = p
-    return out
+# ---------------------------------------------------------------------
+# model-data builders
+# ---------------------------------------------------------------------
 
 
 def solve_binary(
@@ -152,7 +177,8 @@ def solve_binary(
     Maximizes the total divergence between the event and non-event
     distributions over bins (reference objective, cp.py:140-174),
     optionally minus a ``gamma`` * largest-bin-share regularization
-    (reference's dominance term, cp.py:176-199 analog).
+    (reference's dominance term, cp.py:176-199 analog). ``max_pvalue``
+    bounds a chi2 test between consecutive bins.
     """
     ne = np.asarray(n_nonevent, dtype=float)
     ev = np.asarray(n_event, dtype=float)
@@ -171,8 +197,7 @@ def solve_binary(
         p = EV / max(total_ev, 1e-15)
         q = NE / max(total_ne, 1e-15)
         V = div_fn(p, q)
-    # event rate of candidate bin [j..i]
-    with np.errstate(divide="ignore", invalid="ignore"):
+        # event rate of candidate bin [j..i]
         ER = np.where(CNT > 0, EV / np.maximum(CNT, 1e-15), 0.0)
 
     feas = np.triu(np.ones((n, n), dtype=bool))
@@ -197,23 +222,16 @@ def solve_binary(
         # dominance regularization: penalize large bins
         V = np.where(feas, V - gamma * CNT / max(total, 1e-15), NEG)
 
-    def pval(j, i, k, l):
-        _, pv = chi2_contingency_2xk(
-            np.array([[NE[j, i], EV[j, i]], [NE[k, l], EV[k, l]]])
-        )
-        return pv
+    pv_ok = None
+    if max_pvalue is not None:
+        @functools.cache
+        def pv_ok(k, j, i):
+            _, pv = chi2_contingency_2xk(np.array(
+                [[NE[k, j - 1], EV[k, j - 1]], [NE[j, i], EV[j, i]]]))
+            return pv <= max_pvalue
 
-    return _solve_dp(
-        V=V,
-        RATE=ER,
-        feas=feas,
-        monotonic_trend=monotonic_trend,
-        min_n_bins=min_n_bins,
-        max_n_bins=max_n_bins,
-        min_rate_diff=min_event_rate_diff,
-        max_pvalue=max_pvalue,
-        pval_fn=pval if max_pvalue is not None else None,
-    )
+    return _solve_shared(V, ER[..., None], monotonic_trend, min_n_bins,
+                         max_n_bins, min_event_rate_diff, pv_ok)
 
 
 def solve_continuous(
@@ -231,11 +249,11 @@ def solve_continuous(
 ) -> BinSolution:
     """Optimal partition for a continuous target.
 
-    Objective: maximize sum over bins of share * |mean_bin - mean_total|
-    — the continuous-target "IV" the reference reports
-    (continuous_cp.py / binning_statistics.py:1629-1686). Monotonic
-    trends constrain bin means; max_pvalue uses a Welch t-test between
-    consecutive bins (binning_statistics.py:1987-2006).
+    Objective: maximize sum over bins of |mean_bin - mean_total| — the
+    continuous-target "IV" the reference reports (continuous_cp.py /
+    binning_statistics.py:1629-1686). Monotonic trends constrain bin
+    means; max_pvalue uses a Welch t-test between consecutive bins
+    (binning_statistics.py:1987-2006).
     """
     cnt = np.asarray(n_records, dtype=float)
     s1 = np.asarray(sums, dtype=float)
@@ -269,315 +287,17 @@ def solve_continuous(
     # extra bin adds a positive term, matching the reference optimum
     V = np.where(feas, np.abs(MEAN - mean_total), NEG)
 
-    def pval(j, i, k, l):
-        _, pv = welch_ttest_from_stats(
-            MEAN[j, i], STD[j, i], CNT[j, i], MEAN[k, l], STD[k, l], CNT[k, l]
-        )
-        return pv
+    pv_ok = None
+    if max_pvalue is not None:
+        @functools.cache
+        def pv_ok(k, j, i):
+            _, pv = welch_ttest_from_stats(
+                MEAN[k, j - 1], STD[k, j - 1], CNT[k, j - 1],
+                MEAN[j, i], STD[j, i], CNT[j, i])
+            return pv <= max_pvalue
 
-    return _solve_dp(
-        V=V,
-        RATE=MEAN,
-        feas=feas,
-        monotonic_trend=monotonic_trend,
-        min_n_bins=min_n_bins,
-        max_n_bins=max_n_bins,
-        min_rate_diff=min_mean_diff,
-        max_pvalue=max_pvalue,
-        pval_fn=pval if max_pvalue is not None else None,
-    )
-
-
-def _solve_dp(
-    *,
-    V: np.ndarray,
-    RATE: np.ndarray,
-    feas: np.ndarray,
-    monotonic_trend: str | None,
-    min_n_bins: int | None,
-    max_n_bins: int | None,
-    min_rate_diff: float,
-    max_pvalue: float | None,
-    pval_fn,
-) -> BinSolution:
-    n = V.shape[0]
-    lo = max(1, min_n_bins or 1)
-    hi = min(n, max_n_bins or n)
-
-    if monotonic_trend in (None, "none"):
-        return _dp_run(V, RATE, feas, lo, hi, None, min_rate_diff, max_pvalue, pval_fn)
-    if monotonic_trend == "auto_asc_desc":
-        a = _dp_run(V, RATE, feas, lo, hi, "ascending", min_rate_diff, max_pvalue, pval_fn)
-        d = _dp_run(V, RATE, feas, lo, hi, "descending", min_rate_diff, max_pvalue, pval_fn)
-        # pinned: compare at the shared 9dp precision, ascending wins
-        # rounded ties (oracle ORDER BY round(obj,9) DESC, asc-first)
-        return a if round(a.objective, 9) >= round(d.objective, 9) else d
-    if monotonic_trend in ("ascending", "descending", "peak", "valley"):
-        return _dp_run(
-            V, RATE, feas, lo, hi, monotonic_trend, min_rate_diff, max_pvalue, pval_fn
-        )
-    if monotonic_trend in ("concave", "convex"):
-        return _solve_shape_enum(
-            V, RATE, feas, lo, hi, monotonic_trend, max_pvalue, pval_fn
-        )
-    raise ValueError(f"unsupported monotonic_trend: {monotonic_trend}")
-
-
-def _solve_shape_enum(V, RATE, feas, lo, hi, shape, max_pvalue, pval_fn):
-    """Exact concave/convex solve (reference cp.py:433-457): the
-    constraint is e_a + e_c <= 2 * e_b for EVERY bin triple a < b < c
-    (concave; reversed for convex) — strictly stronger than
-    consecutive-triple curvature, so it does not fit the
-    last-bin-only DP state. Instead: depth-first enumeration of
-    partitions with O(1) incremental pruning — appending a bin with
-    rate r is feasible iff r <= m, where m = min over earlier pairs
-    (a, b) of (2 e_b - e_a); m updates as min(m, 2 r - max_rate).
-    Worst case (flat rates, nothing prunes) visits the full prefix
-    tree of 2^(n-1) partitions — n <= 20 prebins keeps that a
-    seconds-scale driver-side search; real rate profiles prune hard.
-
-    Flat/near-flat profiles defeat the pruning and the tree grows
-    ~4x per +2 prebins, so the DFS carries a node budget
-    (``node_budget`` extension attempts, 2e6 ≈ 2-3 s — enough to
-    fully enumerate a flat n=20).  On exhaustion the search stops
-    and returns the best
-    COMPLETE partition found so far with status "FEASIBLE" (anytime
-    behavior); if none was completed yet it falls back to the
-    peak/valley DP shape approximation (concave ⊂ peak, convex ⊂
-    valley) and keeps the result only if it satisfies the all-triples
-    constraint."""
-    n = V.shape[0]
-    sign = 1.0 if shape == "concave" else -1.0
-    best_val = NEG
-    best_segs = None
-    best_mask = 0
-    node_budget = 2_000_000
-    nodes = 0
-    exhausted = False
-    # stack frames: (start, i_next, segs, val, m, max_r, bmask);
-    # iterative DFS to dodge recursion limits at n=20. bmask carries
-    # the boundary mask incrementally (bit i = split between prebins
-    # i and i+1) so the pinned tie compare at completion is O(1) —
-    # flat profiles tie EVERY partition, so a per-completion mask
-    # rebuild would multiply the budgeted-search wall-clock
-    stack = [(0, 0, [], 0.0, np.inf, -np.inf, 0)]
-    while stack:
-        start, i0, segs, val, m, max_r, bmask = stack.pop()
-        if nodes >= node_budget:
-            exhausted = True
-            break
-        nodes += n - i0
-        for i in range(i0, n):
-            if not feas[start, i] or V[start, i] <= NEG / 2:
-                continue
-            r = sign * RATE[start, i]
-            if len(segs) >= 2 and r > m + 1e-12:
-                continue
-            if max_pvalue is not None and segs:
-                pj, pi = segs[-1]
-                if pval_fn(pj, pi, start, i) > max_pvalue:
-                    continue
-            nsegs = segs + [(start, i)]
-            nval = val + V[start, i]
-            nm = m if len(segs) < 1 else min(m, 2.0 * r - max_r)
-            nmax = max(max_r, r)
-            if i == n - 1:
-                if lo <= len(nsegs) <= hi:
-                    # same pinned total order as the DPs (9dp-rounded
-                    # objective, ties to the lowest boundary mask) so
-                    # the concave/convex search is SQL-oracle-
-                    # replayable despite its stack-pop visit order
-                    if best_segs is None or _better_pinned(
-                            nval, bmask, best_val, best_mask):
-                        best_val = nval
-                        best_segs = nsegs
-                        best_mask = bmask
-            elif len(nsegs) < hi:
-                stack.append((i + 1, i + 1, nsegs, nval, nm, nmax,
-                              bmask | (1 << i)))
-        # (loop body handles all extensions of this prefix)
-    if exhausted and best_segs is None:
-        # budget hit before any complete partition: approximate with
-        # the polynomial peak/valley DP and accept its answer only if
-        # it is genuinely concave/convex under the all-triples rule
-        approx = _dp_run(
-            V, RATE, feas, lo, hi,
-            "peak" if shape == "concave" else "valley",
-            0.0, max_pvalue, pval_fn,
-        )
-        if approx.status == "OPTIMAL":
-            rates = [sign * RATE[j, i] for j, i in approx.segments]
-            ok = all(
-                rates[a] + rates[c] <= 2.0 * rates[b] + 1e-12
-                for a in range(len(rates))
-                for b in range(a + 1, len(rates))
-                for c in range(b + 1, len(rates))
-            )
-            if ok:
-                return BinSolution(
-                    approx.segments, approx.objective, "FEASIBLE", shape)
-        return BinSolution([(0, n - 1)], 0.0, "INFEASIBLE", shape)
-    if best_segs is None:
-        return BinSolution([(0, n - 1)], 0.0, "INFEASIBLE", shape)
-    return BinSolution(
-        best_segs, float(best_val),
-        "FEASIBLE" if exhausted else "OPTIMAL", shape)
-
-
-def _dp_run(V, RATE, feas, lo, hi, trend, min_diff, max_pvalue, pval_fn):
-    """DP over states (phase, b, j, i): last bin spans prebins [j..i],
-    b bins used so far. phase 0 = first monotone leg, phase 1 = second
-    leg (peak/valley only). Returns the best partition of [0..n-1].
-
-    Exact-objective ties (common on integer counts: mathematically
-    equal IV reached by different partitions, where float summation
-    order used to decide the winner) are PINNED: candidates compare by
-    the objective rounded to 9dp, residual ties break to the lowest
-    boundary mask (bit j-1 set = split between prebin j-1 and j) —
-    the same total order the SQL enumeration oracle applies via
-    ORDER BY round(ivt, 9) DESC, mask. The reference sidesteps
-    alternate CP-SAT optima by asserting objective value only; the
-    driver-hash contract here asserts exact split identity, so the tie
-    must be pinned instead."""
-    n = V.shape[0]
-    if pval_fn is not None:
-        _raw_pval, _pcache = pval_fn, {}
-
-        def pval_fn(k, jm1, j, i):  # noqa: F811 — memoized wrapper
-            key = (k, jm1, j, i)
-            v = _pcache.get(key)
-            if v is None:
-                v = _pcache[key] = _raw_pval(k, jm1, j, i)
-            return v
-
-    n_phase = 2 if trend in ("peak", "valley") else 1
-    # f[phase][b][j] = best value for a partition of prebins [0..i]
-    # whose last bin is [j..i]; we roll over i implicitly by indexing
-    # full tables f[phase][b][j][i].
-    f = np.full((n_phase, hi + 1, n, n), NEG)
-    parent = -np.ones((n_phase, hi + 1, n, n, 3), dtype=np.int32)
-    # minimal boundary mask attaining f (tie-break carrier); the
-    # min-mask objective is decomposable because a partition's mask is
-    # always dominated by its highest bit (the last boundary), so
-    # preferring a smaller last-bin start — and recursively a smaller
-    # prefix mask — yields the global minimum.
-    msk = np.zeros((n_phase, hi + 1, n, n), dtype=np.int64)
-
-    for i in range(n):
-        if feas[0, i] and V[0, i] > NEG / 2:
-            f[0, 1, 0, i] = V[0, i]
-
-    def leg_ok(prev_rate, cur_rate, leg):
-        if leg == "asc":
-            return cur_rate - prev_rate >= min_diff
-        if leg == "desc":
-            return prev_rate - cur_rate >= min_diff
-        return True
-
-    first_leg = {
-        None: None,
-        "ascending": "asc",
-        "descending": "desc",
-        "peak": "asc",
-        "valley": "desc",
-    }[trend]
-    second_leg = {"peak": "desc", "valley": "asc"}.get(trend)
-
-    for b in range(2, hi + 1):
-        for j in range(1, n):
-            bbit = 1 << (j - 1)
-            # previous bin ends at j-1 and starts at k <= j-1
-            for i in range(j, n):
-                if not feas[j, i] or V[j, i] <= NEG / 2:
-                    continue
-                cur_rate = RATE[j, i]
-                for ph in range(n_phase):
-                    best_val, best_k, best_ph, best_m = NEG, -1, -1, 0
-                    for k in range(j):
-                        # stay in same phase
-                        leg = first_leg if ph == 0 else second_leg
-                        prev = f[ph, b - 1, k, j - 1]
-                        if prev > NEG / 2 and leg_ok(RATE[k, j - 1], cur_rate, leg):
-                            if max_pvalue is None or pval_fn(k, j - 1, j, i) <= max_pvalue:
-                                val = prev + V[j, i]
-                                # _better_pinned inlined for the hot
-                                # path: the mask is only materialized
-                                # on a take or a near-tie (<= 1e-9)
-                                d = val - best_val
-                                if d > 1e-9:
-                                    take = True
-                                elif d < -1e-9:
-                                    take = False
-                                else:
-                                    take = _better_pinned(
-                                        val,
-                                        int(msk[ph, b - 1, k, j - 1]) | bbit,
-                                        best_val, best_m)
-                                if take:
-                                    best_val, best_k, best_ph = val, k, ph
-                                    best_m = int(msk[ph, b - 1, k, j - 1]) | bbit
-                        # phase transition (peak/valley): 0 -> 1
-                        if ph == 1:
-                            prev0 = f[0, b - 1, k, j - 1]
-                            if prev0 > NEG / 2 and leg_ok(
-                                RATE[k, j - 1], cur_rate, second_leg
-                            ):
-                                if (
-                                    max_pvalue is None
-                                    or pval_fn(k, j - 1, j, i) <= max_pvalue
-                                ):
-                                    val = prev0 + V[j, i]
-                                    d = val - best_val
-                                    if d > 1e-9:
-                                        take = True
-                                    elif d < -1e-9:
-                                        take = False
-                                    else:
-                                        take = _better_pinned(
-                                            val,
-                                            int(msk[0, b - 1, k, j - 1]) | bbit,
-                                            best_val, best_m)
-                                    if take:
-                                        best_val, best_k, best_ph = val, k, 0
-                                        best_m = (
-                                            int(msk[0, b - 1, k, j - 1]) | bbit)
-                    if best_k >= 0:
-                        f[ph, b, j, i] = best_val
-                        msk[ph, b, j, i] = best_m
-                        parent[ph, b, j, i] = (best_ph, b - 1, best_k)
-
-    # collect best terminal state covering prebin n-1 (same pinned
-    # total order: rounded objective, then lowest boundary mask)
-    best = (NEG, None)
-    best_m = 0
-    for ph in range(n_phase):
-        for b in range(lo, hi + 1):
-            for j in range(n):
-                val = f[ph, b, j, n - 1]
-                if val <= NEG / 2:
-                    continue
-                m = int(msk[ph, b, j, n - 1])
-                if _better_pinned(val, m, best[0], best_m):
-                    best = (val, (ph, b, j))
-                    best_m = m
-    if best[1] is None:
-        # no feasible partition (e.g. every candidate bin pure):
-        # fall back to the single full-range bin regardless of V
-        return BinSolution([(0, n - 1)], 0.0, "INFEASIBLE", trend)
-
-    # backtrack
-    ph, b, j = best[1]
-    i = n - 1
-    segments = []
-    while j >= 0:
-        segments.append((j, i))
-        pph, pb, pk = parent[ph, b, j, i]
-        if pk < 0:
-            break
-        i = j - 1
-        ph, b, j = int(pph), int(pb), int(pk)
-    segments.reverse()
-    return BinSolution(segments, float(best[0]), "OPTIMAL", trend)
+    return _solve_shared(V, MEAN[..., None], monotonic_trend, min_n_bins,
+                         max_n_bins, min_mean_diff, pv_ok)
 
 
 def solve_scenarios(
@@ -602,7 +322,7 @@ def solve_scenarios(
     are enforced PER SCENARIO on each scenario's own counts/rates —
     the reference adds one constraint set per scenario; the peak/valley
     change point is shared across scenarios (its ``t`` variable is
-    global), which the shared DP phase reproduces exactly.
+    global), which the one shared phase group reproduces exactly.
     Scenarios are equally weighted when ``weights`` is None
     (binning_scenarios.py:348-349).
     """
@@ -634,163 +354,18 @@ def solve_scenarios(
         EVs.append(EV)
     V = np.where(feas, V, NEG)
 
-    lo = max(1, min_n_bins or 1)
-    hi = min(n, max_n_bins or n)
+    pv_ok = None
+    if max_pvalue is not None:
+        @functools.cache
+        def pv_ok(k, j, i):
+            return all(
+                chi2_contingency_2xk(np.array(
+                    [[NE[k, j - 1], EV[k, j - 1]], [NE[j, i], EV[j, i]]])
+                )[1] <= max_pvalue
+                for NE, EV in zip(NEs, EVs))
 
-    def leg_ok_all(k, jm1, j, i, leg):
-        if leg is None:
-            return True
-        for s in range(n_s):
-            prev, cur = ERs[s][k, jm1], ERs[s][j, i]
-            if leg == "asc" and cur - prev < min_event_rate_diff:
-                return False
-            if leg == "desc" and prev - cur < min_event_rate_diff:
-                return False
-        return True
-
-    def pval_ok(k, jm1, j, i):
-        if max_pvalue is None:
-            return True
-        for s in range(n_s):
-            _, pv = chi2_contingency_2xk(
-                np.array([[NEs[s][k, jm1], EVs[s][k, jm1]],
-                          [NEs[s][j, i], EVs[s][j, i]]])
-            )
-            if pv > max_pvalue:
-                return False
-        return True
-
-    if monotonic_trend == "auto_asc_desc":
-        a = _scenario_dp(V, feas, lo, hi, "ascending", leg_ok_all, pval_ok)
-        d = _scenario_dp(V, feas, lo, hi, "descending", leg_ok_all, pval_ok)
-        # pinned: compare at the shared 9dp precision, ascending wins
-        # rounded ties (oracle ORDER BY round(obj,9) DESC, asc-first)
-        return a if round(a.objective, 9) >= round(d.objective, 9) else d
-    if monotonic_trend in ("concave", "convex"):
-        # exact per-scenario curvature (reference cp.py:226-232 adds
-        # one concave/convex constraint set per scenario): run the
-        # shape enumerator with vector (m, max_r) state — one slot per
-        # scenario, all must stay feasible
-        sign = 1.0 if monotonic_trend == "concave" else -1.0
-        RATEs = np.stack([sign * er for er in ERs], axis=-1)  # [j,i,s]
-        return _solve_shape_enum_multi(
-            V, RATEs, feas, lo, hi, monotonic_trend, pval_ok
-        )
-    return _scenario_dp(V, feas, lo, hi, monotonic_trend, leg_ok_all, pval_ok)
-
-
-def _solve_shape_enum_multi(V, RATEs, feas, lo, hi, shape, pval_ok):
-    """Concave/convex DFS enumeration with one (m, max_rate) pruning
-    pair per scenario (see _solve_shape_enum for the single-scenario
-    derivation)."""
-    n = V.shape[0]
-    n_s = RATEs.shape[-1]
-    best_val, best_segs = NEG, None
-    inf = np.full(n_s, np.inf)
-    ninf = np.full(n_s, -np.inf)
-    stack = [(0, [], 0.0, inf, ninf)]
-    while stack:
-        start, segs, val, m, max_r = stack.pop()
-        for i in range(start, n):
-            if not feas[start, i] or V[start, i] <= NEG / 2:
-                continue
-            r = RATEs[start, i]
-            if len(segs) >= 2 and (r > m + 1e-12).any():
-                continue
-            if segs and not pval_ok(segs[-1][0], segs[-1][1], start, i):
-                continue
-            nsegs = segs + [(start, i)]
-            nval = val + V[start, i]
-            nm = m if len(segs) < 1 else np.minimum(m, 2.0 * r - max_r)
-            nmax = np.maximum(max_r, r)
-            if i == n - 1:
-                if lo <= len(nsegs) <= hi and nval > best_val:
-                    best_val, best_segs = nval, nsegs
-            elif len(nsegs) < hi:
-                stack.append((i + 1, nsegs, nval, nm, nmax))
-    if best_segs is None:
-        return BinSolution([(0, n - 1)], 0.0, "INFEASIBLE", shape)
-    return BinSolution(best_segs, float(best_val), "OPTIMAL", shape)
-
-
-def _scenario_dp(V, feas, lo, hi, trend, leg_ok_all, pval_ok):
-    """Phase DP like _dp_run but with transition predicates evaluated
-    across all scenarios."""
-    n = V.shape[0]
-    n_phase = 2 if trend in ("peak", "valley") else 1
-    first_leg = {
-        None: None, "none": None,
-        "ascending": "asc", "descending": "desc",
-        "peak": "asc", "valley": "desc",
-    }[trend]
-    second_leg = {"peak": "desc", "valley": "asc"}.get(trend)
-
-    f = np.full((n_phase, hi + 1, n, n), NEG)
-    parent = -np.ones((n_phase, hi + 1, n, n, 3), dtype=np.int32)
-    # minimal boundary mask attaining f (same pinned tie order as
-    # _dp_run; see _better_pinned)
-    msk = np.zeros((n_phase, hi + 1, n, n), dtype=np.int64)
-    for i in range(n):
-        if feas[0, i] and V[0, i] > NEG / 2:
-            f[0, 1, 0, i] = V[0, i]
-
-    for b in range(2, hi + 1):
-        for j in range(1, n):
-            bbit = 1 << (j - 1)
-            for i in range(j, n):
-                if not feas[j, i] or V[j, i] <= NEG / 2:
-                    continue
-                for ph in range(n_phase):
-                    best_val, best_k, best_ph, best_m = NEG, -1, -1, 0
-                    leg = first_leg if ph == 0 else second_leg
-                    for k in range(j):
-                        prev = f[ph, b - 1, k, j - 1]
-                        if (prev > NEG / 2 and leg_ok_all(k, j - 1, j, i, leg)
-                                and pval_ok(k, j - 1, j, i)):
-                            val = prev + V[j, i]
-                            cm = int(msk[ph, b - 1, k, j - 1]) | bbit
-                            if _better_pinned(val, cm, best_val, best_m):
-                                best_val, best_k, best_ph, best_m = val, k, ph, cm
-                        if ph == 1:
-                            prev0 = f[0, b - 1, k, j - 1]
-                            if (prev0 > NEG / 2
-                                    and leg_ok_all(k, j - 1, j, i, second_leg)
-                                    and pval_ok(k, j - 1, j, i)):
-                                val = prev0 + V[j, i]
-                                cm = int(msk[0, b - 1, k, j - 1]) | bbit
-                                if _better_pinned(val, cm, best_val, best_m):
-                                    best_val, best_k, best_ph, best_m = val, k, 0, cm
-                    if best_k >= 0:
-                        f[ph, b, j, i] = best_val
-                        msk[ph, b, j, i] = best_m
-                        parent[ph, b, j, i] = (best_ph, b - 1, best_k)
-
-    best = (NEG, None)
-    best_m = 0
-    for ph in range(n_phase):
-        for b in range(lo, hi + 1):
-            for j in range(n):
-                val = f[ph, b, j, n - 1]
-                if val <= NEG / 2:
-                    continue
-                m = int(msk[ph, b, j, n - 1])
-                if _better_pinned(val, m, best[0], best_m):
-                    best = (val, (ph, b, j))
-                    best_m = m
-    if best[1] is None:
-        return BinSolution([(0, n - 1)], 0.0, "INFEASIBLE", trend)
-    ph, b, j = best[1]
-    i = n - 1
-    segments = []
-    while j >= 0:
-        segments.append((j, i))
-        pph, pb, pk = parent[ph, b, j, i]
-        if pk < 0:
-            break
-        i = j - 1
-        ph, b, j = int(pph), int(pb), int(pk)
-    segments.reverse()
-    return BinSolution(segments, float(best[0]), "OPTIMAL", trend)
+    return _solve_shared(V, np.stack(ERs, axis=-1), monotonic_trend,
+                         min_n_bins, max_n_bins, min_event_rate_diff, pv_ok)
 
 
 def solve_multiclass(
@@ -800,37 +375,30 @@ def solve_multiclass(
     min_n_bins: int | None = None,
     max_n_bins: int | None = None,
     min_bin_size: float | None = None,
-    node_budget: int = 2_000_000,
+    node_budget: int = NODE_BUDGET,
 ) -> BinSolution:
     """Multiclass: maximize summed one-vs-rest JS divergence
-    (reference multiclass_cp.py). Monotonicity per class is applied as
-    a feasibility check on each class's one-vs-rest event rate during
-    a joint DP. Per-class trends: ascending / descending / peak /
-    valley / concave / convex / None (all eight reference values,
-    matching /root/reference/optbinning/binning/multiclass_binning.py
-    :98-106). Peak and valley carry per-class phase state — the
-    reference gives each such class its own change-point variable
-    (multiclass_cp.py decision_variables: y[c, i] / t[c]) with
-    pairwise-within-leg constraints and NO constraint across the
-    change point; the two-phase-per-class DP reproduces that exactly,
-    including the boundary freedom (a second-leg opener higher than
-    the first-leg close is reachable by extending phase 0 through it,
-    same argument as the binary peak DP). peak_heuristic /
-    valley_heuristic (reference fixes t[c] by a scan heuristic) are
-    subsumed by the exact peak/valley solve. Concave/convex use the
-    all-triples curvature rule (reference multiclass_cp.py mirrors
-    cp.py:433-457); that constraint does not fit last-bin DP state,
-    so any concave/convex class routes the whole solve to a pruned
-    joint DFS enumeration (_solve_multiclass_enum) which enforces
-    every class's trend exactly. Unknown trend values raise
-    ValueError (the reference validates the same set).
+    (reference multiclass_cp.py); each class's trend constrains its
+    one-vs-rest event rate. Per-class trends: every TRENDS value
+    (the reference's eight, multiclass_binning.py:98-106). Peak and
+    valley carry per-class phase state — the reference gives each such
+    class its own change-point variable (multiclass_cp.py
+    decision_variables: y[c, i] / t[c]) with pairwise-within-leg
+    constraints and NO constraint across the change point; one phase
+    group per class reproduces that exactly, including the boundary
+    freedom (a second-leg opener higher than the first-leg close is
+    reachable by extending phase 0 through it). Concave/convex use the
+    all-triples curvature rule (multiclass_cp.py mirrors
+    cp.py:433-457), so any such class sends the whole solve to the
+    shape search, which enforces every class's trend exactly. Unknown
+    trend values raise ValueError (the reference validates the same
+    set).
 
-    Limits: the phase-mask DP allocates 2**n_pv states for n_pv
-    peak/valley classes and is capped at n_pv <= 12; realistic
-    multiclass problems have <= a handful. ``node_budget`` caps the
-    joint enumeration's extension attempts (deterministic analog of
-    the reference CP solver's time_limit); exhaustion yields FEASIBLE
-    (anytime best) or UNKNOWN, never a false INFEASIBLE."""
+    Limits: the DP allocates 2**n_pv phase masks for n_pv peak/valley
+    classes and is capped at n_pv <= 12. ``node_budget`` caps the
+    shape search's extension attempts (deterministic analog of the
+    reference CP solver's time_limit); exhaustion yields FEASIBLE
+    (best found) or UNKNOWN, never a false INFEASIBLE."""
     M = np.asarray(n_event_by_class, dtype=float)  # [prebin, class]
     n, n_classes = M.shape
     if n == 0:
@@ -859,16 +427,7 @@ def solve_multiclass(
     V = np.where(feas, V, NEG)
 
     trends = list(monotonic_trends or [None] * n_classes)
-    # heuristic variants are change-point-fixed approximations in the
-    # reference; the exact peak/valley DP dominates them
-    trends = [
-        {"peak_heuristic": "peak", "valley_heuristic": "valley"}.get(t, t)
-        for t in trends
-    ]
-    trends = [None if t == "none" else t for t in trends]
-    _allowed = {None, "ascending", "descending", "peak", "valley",
-                "concave", "convex"}
-    bad = sorted({str(t) for t in trends if t not in _allowed})
+    bad = sorted({str(t) for t in trends if t not in TRENDS})
     if bad:
         raise ValueError(
             f"Invalid per-class monotonic trend(s) {bad}. Allowed: "
@@ -878,302 +437,314 @@ def solve_multiclass(
 
     lo = max(1, min_n_bins or 1)
     hi = min(n, max_n_bins or n)
-
-    if any(t in ("concave", "convex") for t in trends):
-        # all-triples curvature does not fit last-bin DP state; joint
-        # exact enumeration enforces every class's trend
-        return _solve_multiclass_enum(V, RATEc, feas, lo, hi, trends,
-                                      node_budget=node_budget)
-    return _solve_multiclass_dp(V, RATEc, feas, lo, hi, trends)
+    segments, objective, status = _solve_trends(
+        V, lo, hi, RATEc, trends, 0.0, None, False, node_budget)
+    return BinSolution(segments, objective, status, None)
 
 
-def _solve_multiclass_dp(V, RATEc, feas, lo, hi, trends):
-    """Phase-mask DP over (mask, n_bins, last-bin) for per-class
-    asc/desc (edge filter) and peak/valley (one phase bit per class).
-    Exact; 2**n_pv mask states, capped at n_pv <= 12 peak/valley
-    classes (realistic problems have <= a handful)."""
+def _solve_shared(V, rates, trend, min_n_bins, max_n_bins, min_diff, pv_ok):
+    """Solve with one trend shared by every rate component (binary,
+    continuous and scenario targets). auto_asc_desc solves both
+    directions and keeps descending only when it is better at the 9dp
+    precision the oracles compare (ascending wins rounded ties)."""
+    if trend == "auto_asc_desc":
+        a, d = (_solve_shared(V, rates, t, min_n_bins, max_n_bins,
+                              min_diff, pv_ok)
+                for t in ("ascending", "descending"))
+        return a if round(a.objective, 9) >= round(d.objective, 9) else d
+    check_trend(trend, also=("auto_asc_desc",))
     n = V.shape[0]
-    # classes whose trend needs phase state (first leg -> second leg)
-    pv = [c for c, t in enumerate(trends) if t in ("peak", "valley")]
-    n_pv = len(pv)
-    if n_pv > 12:
+    lo = max(1, min_n_bins or 1)
+    hi = min(n, max_n_bins or n)
+    segments, objective, status = _solve_trends(
+        V, lo, hi, rates, [trend] * rates.shape[-1], min_diff, pv_ok, True)
+    return BinSolution(segments, objective, status, trend)
+
+
+# ---------------------------------------------------------------------
+# the kernel
+# ---------------------------------------------------------------------
+
+
+def _solve_trends(V, lo, hi, rates, trends, min_diff, pv_ok, shared,
+                  node_budget=NODE_BUDGET):
+    """Route per-component ``trends`` to the DP, or to the shape search
+    when any component is concave/convex. ``shared``: every phased
+    component sits in ONE phase group (one change point for all);
+    otherwise each has its own. Returns (segments, objective,
+    status)."""
+    if any(t in _CURVE for t in trends):
+        return _shape_search(V, lo, hi, rates, trends, pv_ok, shared,
+                             node_budget)
+    return _partition_dp(V, lo, hi, rates, *_legs(trends, shared),
+                         min_diff, pv_ok)
+
+
+def _legs(trends, shared):
+    """(fixed legs, phase groups) of per-component trends: a fixed leg
+    is (component, +1 ascending / -1 descending); a phase group is a
+    list of such pairs giving each member's first leg."""
+    fixed = [(c, _LEG[t]) for c, t in enumerate(trends)
+             if t in _LEG and t not in _PHASED]
+    phased = [(c, _LEG[t]) for c, t in enumerate(trends) if t in _PHASED]
+    groups = [phased] if shared and phased else [[p] for p in phased]
+    return fixed, groups
+
+
+def _edge_tests(rates, fixed, groups, min_diff):
+    """Boolean [k, j, i] tensors of the leg tests between a previous bin
+    [k..j-1] and the bin [j..i]: the AND of the fixed legs, and per
+    phase group its (first leg, second leg) ANDs. A leg holds when
+    sign * (rate[j..i] - rate[k..j-1]) >= min_diff. Only components
+    that carry a leg get a tensor."""
+    n = rates.shape[0]
+    diff = {}
+    for c in {c for c, _ in fixed} | {c for g in groups for c, _ in g}:
+        prev = np.zeros((n, n))
+        prev[:, 1:] = rates[:, :-1, c]  # prev[k, j] = rate of [k..j-1]
+        diff[c] = rates[None, :, :, c] - prev[:, :, None]
+    ones = np.ones((n, n, n), dtype=bool)
+
+    def all_of(legs):
+        out = ones
+        for c, sign in legs:
+            out = out & ((diff[c] if sign > 0 else -diff[c]) >= min_diff)
+        return out
+
+    return all_of(fixed), [(all_of(g), all_of([(c, -s) for c, s in g]))
+                           for g in groups]
+
+
+def _pick(vals, masks):
+    """Pinned argmax along axis 0 for every trailing cell of ``vals``:
+    the candidate a scan of axis 0 through _better_pinned keeps (the
+    scan order is the caller's loop order). Only candidates within
+    2e-9 of a cell's maximum can win it (a wider gap survives the 9dp
+    rounding), so a cell with one such candidate takes it, exact ties
+    take the lowest mask, and the rest go through the scalar compare.
+    ``masks`` broadcasts against ``vals``. Returns (index, value)."""
+    best = vals.max(axis=0)
+    idx = vals.argmax(axis=0)
+    near = vals >= best - 2e-9
+    multi = (near.sum(axis=0) > 1) & (best > NEG / 2)
+    if multi.any():
+        masks = np.broadcast_to(masks, vals.shape)
+        for cell in zip(*np.nonzero(multi)):
+            col = (slice(None),) + cell
+            cand = np.flatnonzero(near[col])
+            v, m = vals[col][cand], masks[col][cand]
+            if (v == v[0]).all():
+                idx[cell] = cand[np.argmin(m)]
+                continue
+            w = 0
+            for c in range(1, len(cand)):
+                if _better_pinned(v[c], int(m[c]), v[w], int(m[w])):
+                    w = c
+            idx[cell] = cand[w]
+    return idx, np.take_along_axis(vals, idx[None], axis=0)[0]
+
+
+def _partition_dp(V, lo, hi, rates, fixed, groups, min_diff, pv_ok):
+    """Exact DP over states (phase mask, bins used b, last bin [j..i]).
+    Bit g of the phase mask is set once group g has switched to its
+    second leg; a bin entering mask nm from a predecessor mask pm
+    (a submask of nm) must pass the fixed legs and, per group, the
+    first leg (bit clear) or the second leg (bit set). There is no
+    constraint across the change point itself: a switch tests the
+    second leg against the last first-leg bin, exactly as a stay.
+
+    Each bin count b is one vectorized step over (k, j, i): the
+    candidates of state (nm, b, j, i) are (k, pm) in loop order k,
+    then pm (a stay, pm == nm, first); _pick applies the pinned order.
+    p-values are evaluated lazily, once per (k, j, i) triple, and only
+    for triples whose predecessor state is live."""
+    n = V.shape[0]
+    G = len(groups)
+    if G > _MAX_GROUPS:
         raise ValueError(
-            f"{n_pv} peak/valley class trends: DP phase space 2^{n_pv} "
+            f"{G} peak/valley class trends: DP phase space 2^{G} "
             "is too large; constrain trends or use asc/desc/None"
         )
-    n_masks = 1 << n_pv
-
-    n_ = n
-    fixed = [(c, tr) for c, tr in enumerate(trends)
-             if tr in ("ascending", "descending")]
-
-    def edge_allowed(k, jm1, j, i):
-        """Per-edge feasibility: None if a fixed asc/desc class is
-        violated; else per-pv-class allowed (00, 01, 11) bit moves.
-        Bit 0 = first leg (asc for peak, desc for valley)."""
-        for c, tr in fixed:
-            if tr == "ascending" and RATEc[j, i, c] < RATEc[k, jm1, c]:
-                return None
-            if tr == "descending" and RATEc[j, i, c] > RATEc[k, jm1, c]:
-                return None
-        allowed = []
-        for c in pv:
-            up = RATEc[j, i, c] >= RATEc[k, jm1, c]
-            down = RATEc[j, i, c] <= RATEc[k, jm1, c]
-            first, second = (up, down) if trends[c] == "peak" else (down, up)
-            if not (first or second):
-                return None
-            # (stay 0->0, switch 0->1, stay 1->1)
-            allowed.append((first, second, second))
-        return allowed
-
-    # f[mask, b, j, i]; parent stores (prev_mask, b-1, k)
-    f = np.full((n_masks, hi + 1, n_, n_), NEG)
-    parent = -np.ones((n_masks, hi + 1, n_, n_, 3), dtype=np.int32)
-    # minimal boundary mask attaining f (pinned tie order, see
-    # _better_pinned); phase-mask ties inside the bit transform are
-    # ALSO broken by _better_pinned on the predecessors' boundary
-    # masks — two compatible phase-masks at the same (b-1, k, j-1)
-    # can hold equal values over different segment histories, and a
-    # value-only >= there would carry a non-minimal boundary mask
-    # into cm, breaking the total order the oracles pin (r15 ADVICE
-    # #1; the fuzz covers peak/valley trends where this is reachable)
-    msk = np.zeros((n_masks, hi + 1, n_, n_), dtype=np.int64)
-    for i in range(n_):
-        if feas[0, i]:
-            f[0, 1, 0, i] = V[0, i]
-    for b in range(2, hi + 1):
-        for j in range(1, n_):
-            bbit = 1 << (j - 1)
-            for i in range(j, n_):
-                if not feas[j, i]:
-                    continue
-                vji = V[j, i]
-                for k in range(j):
-                    g = f[:, b - 1, k, j - 1]
-                    if not (g > NEG / 2).any():
-                        continue
-                    allowed = edge_allowed(k, j - 1, j, i)
-                    if allowed is None:
-                        continue
-                    # per-class (max,+) bit transform: h[nm] = best
-                    # predecessor value over compatible prev masks;
-                    # src[nm] tracks the achieving predecessor mask so
-                    # parent recovery is O(1) (no post-hoc rescan)
-                    gm = msk[:, b - 1, k, j - 1]
-                    h = list(g)
-                    src = list(range(n_masks))
-                    for p, (a00, a01, a11) in enumerate(allowed):
-                        bit = 1 << p
-                        nh = h[:]
-                        ns = src[:]
-                        for m in range(n_masks):
-                            if m & bit:
-                                v = h[m] if a11 else NEG
-                                v0 = h[m ^ bit] if a01 else NEG
-                                # dead-branch guards first: src is -1
-                                # on dead entries and must never index
-                                # gm; _better_pinned only runs on the
-                                # (rare) both-live compare
-                                if v0 <= NEG / 2:
-                                    nh[m], ns[m] = v, src[m]
-                                elif v <= NEG / 2:
-                                    nh[m], ns[m] = v0, src[m ^ bit]
-                                elif _better_pinned(
-                                        v0, int(gm[src[m ^ bit]]),
-                                        v, int(gm[src[m]])):
-                                    nh[m], ns[m] = v0, src[m ^ bit]
-                                else:
-                                    nh[m], ns[m] = v, src[m]
-                            elif not a00:
-                                nh[m], ns[m] = NEG, -1
-                        h, src = nh, ns
-                    for nm in range(n_masks):
-                        if h[nm] <= NEG / 2:
-                            continue
-                        val = h[nm] + vji
-                        cm = int(msk[src[nm], b - 1, k, j - 1]) | bbit
-                        if (f[nm, b, j, i] <= NEG / 2
-                                or _better_pinned(val, cm, f[nm, b, j, i],
-                                                  int(msk[nm, b, j, i]))):
-                            f[nm, b, j, i] = val
-                            msk[nm, b, j, i] = cm
-                            parent[nm, b, j, i] = (src[nm], b - 1, k)
-    best = (NEG, None)
-    best_m = 0
+    n_masks = 1 << G
+    vok = V > NEG / 2  # feasible bins ([j, i], upper triangle)
+    fixed_ok, legs = _edge_tests(rates, fixed, groups, min_diff)
+    edge = []  # edge[nm][k, j, i]: legs into phase mask nm
     for nm in range(n_masks):
-        for b in range(lo, hi + 1):
-            for j in range(n_):
-                val = f[nm, b, j, n_ - 1]
-                if val <= NEG / 2:
-                    continue
-                m = int(msk[nm, b, j, n_ - 1])
-                if _better_pinned(val, m, best[0], best_m):
-                    best = (val, (nm, b, j))
-                    best_m = m
-    if best[1] is None:
-        return BinSolution([(0, n_ - 1)], 0.0, "INFEASIBLE", None)
-    nm, b, j = best[1]
-    i = n_ - 1
-    segments = []
-    while j >= 0:
-        segments.append((j, i))
-        pm, pb, pk = parent[nm, b, j, i]
-        if pk < 0:
+        e = fixed_ok & vok[None]
+        for g, pair in enumerate(legs):
+            e = e & pair[(nm >> g) & 1]
+        edge.append(e)
+    subs = [[nm] + [pm for pm in range(n_masks) if pm != nm and pm & ~nm == 0]
+            for nm in range(n_masks)]
+    pv_state = None if pv_ok is None else np.zeros((n, n, n), dtype=np.int8)
+    any_edge = functools.reduce(np.logical_or, edge)
+    bits = np.zeros(n, dtype=np.int64)  # boundary bit of a bin starting at j
+    bits[1:] = np.left_shift(1, np.arange(n - 1, dtype=np.int64))
+
+    f = np.full((n_masks, hi + 1, n, n), NEG)
+    msk = np.zeros((n_masks, hi + 1, n, n), dtype=np.int64)
+    par_k = np.zeros((n_masks, hi + 1, n, n), dtype=np.int64)
+    par_m = np.zeros((n_masks, hi + 1, n, n), dtype=np.int64)
+    f[0, 1, 0] = np.where(vok[0], V[0], NEG)
+    for b in range(2, hi + 1):
+        # prev[pm, k, j]: best partition of [0..j-1] ending in [k..j-1]
+        prev = np.full((n_masks, n, n), NEG)
+        prev[:, :, 1:] = f[:, b - 1, :, :-1]
+        live = prev > NEG / 2
+        if not live.any():
             break
-        i = j - 1
-        nm, b, j = int(pm), int(pb), int(pk)
+        pmask = np.zeros((n_masks, n, n), dtype=np.int64)
+        pmask[:, :, 1:] = msk[:, b - 1, :, :-1]
+        pmask |= bits
+        if pv_state is not None:
+            need = live.any(axis=0)[:, :, None] & any_edge & (pv_state == 0)
+            for k, j, i in zip(*np.nonzero(need)):
+                pv_state[k, j, i] = 1 if pv_ok(int(k), int(j), int(i)) else 2
+        for nm in range(n_masks):
+            s = subs[nm]
+            e = edge[nm] if pv_state is None else edge[nm] & (pv_state == 1)
+            cand = np.where(live[s][..., None] & e[None],
+                            prev[s][..., None] + V, NEG)
+            # candidate order: k outer, then pm
+            cand = cand.transpose(1, 0, 2, 3).reshape(-1, n, n)
+            cmask = pmask[s].transpose(1, 0, 2).reshape(-1, n, 1)
+            idx, val = _pick(cand, cmask)
+            f[nm, b] = val
+            msk[nm, b] = np.take_along_axis(
+                np.broadcast_to(cmask, cand.shape), idx[None], axis=0)[0]
+            par_k[nm, b] = idx // len(s)
+            par_m[nm, b] = np.asarray(s)[idx % len(s)]
+
+    # terminal states covering prebin n-1, in (mask, b, j) order
+    ends = f[:, lo:hi + 1, :, n - 1].reshape(-1, 1)
+    if ends.size == 0 or ends.max() <= NEG / 2:
+        # no feasible partition (e.g. every candidate bin pure)
+        return [(0, n - 1)], 0.0, "INFEASIBLE"
+    idx, val = _pick(ends, msk[:, lo:hi + 1, :, n - 1].reshape(-1, 1))
+    nm, b, j = np.unravel_index(int(idx[0]), (n_masks, hi + 1 - lo, n))
+    b += lo
+    segments, i = [], n - 1
+    while True:
+        segments.append((int(j), i))
+        if b == 1:
+            break
+        nm, j, i = par_m[nm, b, j, i], par_k[nm, b, j, i], int(j) - 1
+        b -= 1
     segments.reverse()
-    return BinSolution(segments, float(best[0]), "OPTIMAL", None)
+    return segments, float(val[0]), "OPTIMAL"
 
 
-def _solve_multiclass_enum(V, RATEc, feas, lo, hi, trends,
-                           node_budget=2_000_000):
-    """Exact joint enumeration for multiclass solves with at least one
-    per-class concave/convex trend. The reference's multiclass CP
-    model applies the same all-triples curvature constraint as the
-    binary model (cp.py:433-457: e_a + e_c <= 2 e_b for every bin
-    triple a < b < c, per class, reversed for convex), which cannot be
-    carried in last-bin DP state — so, like the binary
-    _solve_shape_enum, we enumerate contiguous partitions depth-first
-    with O(1) incremental per-class pruning:
+def _phase_step(ph, legs, k, j, i):
+    """Phase mask after bin [j..i] follows bin [k..j-1]: each group stays
+    on its first leg while that leg holds and switches at the latest
+    possible bin; None when a leg fails."""
+    for g, (first, second) in enumerate(legs):
+        if not ph >> g & 1 and first[k][j][i]:
+            continue
+        if not second[k][j][i]:
+            return None
+        ph |= 1 << g
+    return ph
 
-    - ascending / descending: consecutive one-vs-rest-rate check;
-    - peak / valley: greedy latest-switch phase tracking — exact for
-      left-to-right feasibility (a sequence is unimodal iff after its
-      first strict decrease no increase occurs);
-    - concave / convex: the running bound m = min over earlier bin
-      pairs (a, b) of (2 e_b - e_a); appending rate r is feasible iff
-      r <= m, and m updates as min(m, 2 r - max_rate) (sign-flipped
-      for convex) — same rule as the binary enumeration.
 
-    Anytime under a node budget (2e6 extension attempts fully covers a
-    flat n = 20 prefix tree): on exhaustion the best COMPLETE
-    partition found is returned with status "FEASIBLE"; if none was
-    completed yet, the phase-mask DP is run with concave -> peak /
-    convex -> valley (curvature implies unimodality) and its answer is
-    kept only if it satisfies the all-triples rule for every shaped
-    class. When that relaxation is unavailable (mapped peak/valley
-    count over the DP's n_pv <= 12 cap) or its optimum fails the
-    triples check, the status is "UNKNOWN" — budget exhaustion is not
-    a proof of infeasibility."""
+def _shape_search(V, lo, hi, rates, trends, pv_ok, shared, node_budget):
+    """Exact solve with concave/convex components (reference
+    cp.py:433-457): e_a + e_c <= 2 * e_b for EVERY bin triple a < b < c
+    (concave; reversed for convex), which does not fit a last-bin DP
+    state. Depth-first enumeration of partitions with O(1) incremental
+    state per component: appending a bin of signed rate r to a curved
+    component is feasible iff r <= m, where m = min over earlier bin
+    pairs (a, b) of (2 e_b - e_a), updated as min(m, 2 r - max_rate);
+    fixed legs test the previous bin; phase groups switch to their
+    second leg at the latest possible bin (exact for left-to-right
+    feasibility: a sequence is unimodal iff after its first strict
+    break no reversal follows).
+
+    Flat profiles defeat the pruning (the tree is every 2^(n-1)
+    partition), so ``node_budget`` caps the extension attempts. On
+    exhaustion the best complete partition found is FEASIBLE; if none
+    was found, the DP relaxation (concave -> peak, convex -> valley) is
+    kept, as FEASIBLE, only if its optimum passes the all-triples
+    check; otherwise the status is UNKNOWN — exhaustion proves
+    nothing."""
     n = V.shape[0]
-    sgn = {"concave": 1.0, "convex": -1.0}
+    live = (V > NEG / 2).tolist()
+    Vl = V.tolist()
+    curved = [(c, _CURVE[t]) for c, t in enumerate(trends) if t in _CURVE]
+    signed = rates[:, :, [c for c, _ in curved]] * np.array(
+        [s for _, s in curved])
+    R, R2 = signed.tolist(), (2.0 * signed).tolist()
+    fixed, groups = _legs(trends, shared)
+    fixed_ok = legs = None
+    if fixed or groups:
+        fixed_ok, legs = _edge_tests(rates, fixed, groups, 0.0)
+        fixed_ok = fixed_ok.tolist()
+        legs = [(a.tolist(), b.tolist()) for a, b in legs]
+    inf = (np.inf,) * len(curved)
 
-    def init_state():
-        st = []
-        for tr in trends:
-            if tr in ("concave", "convex"):
-                st.append((np.inf, -np.inf))  # (m, max_rate), signed
-            elif tr in ("peak", "valley"):
-                st.append((0, None))  # (phase, last rate)
-            elif tr in ("ascending", "descending"):
-                st.append((None,))  # (last rate,)
-            else:
-                st.append(())
-        return tuple(st)
-
-    def step(state, nbins, j, i):
-        """Feasibility + new per-class state for appending bin [j..i]
-        as bin index nbins; None if any class's trend is violated.
-        Comparisons are exact (no epsilon), matching the mask DP's
-        edge filter and the reference CP constraints."""
-        out = []
-        for c, tr in enumerate(trends):
-            if tr is None:
-                out.append(())
-                continue
-            r = RATEc[j, i, c]
-            s = state[c]
-            if tr == "ascending":
-                if s[0] is not None and r < s[0]:
-                    return None
-                out.append((r,))
-            elif tr == "descending":
-                if s[0] is not None and r > s[0]:
-                    return None
-                out.append((r,))
-            elif tr in ("peak", "valley"):
-                ph, last = s
-                if last is None:
-                    out.append((0, r))
-                    continue
-                hold = r >= last if tr == "peak" else r <= last
-                drop = r <= last if tr == "peak" else r >= last
-                if ph == 0:
-                    out.append((0, r) if hold else (1, r))
-                elif drop:
-                    out.append((1, r))
-                else:
-                    return None
-            else:  # concave / convex
-                m, max_r = s
-                rr = sgn[tr] * r
-                if nbins >= 2 and rr > m + 1e-12:
-                    return None
-                nm = m if nbins < 1 else min(m, 2.0 * rr - max_r)
-                out.append((nm, max(max_r, rr)))
-        return tuple(out)
-
-    best_val, best_segs = NEG, None
+    best_val, best_mask, found = NEG, 0, False
     nodes = 0
     exhausted = False
-    stack = [(0, 0, [], 0.0, init_state())]
+    # frames: (start, bins so far, previous bin's start, value,
+    # curvature bounds m, running max rates, phase mask, boundary
+    # mask); the boundary mask (bit i = split after prebin i) keys the
+    # pinned compare and encodes the partition
+    stack = [(0, 0, -1, 0.0, inf, tuple(-x for x in inf), 0, 0)]
     while stack:
-        start, i0, segs, val, state = stack.pop()
+        start, nb, k, val, m, mx, ph, bmask = stack.pop()
         if nodes >= node_budget:
             exhausted = True
             break
-        nodes += n - i0
-        nbins = len(segs)
-        for i in range(i0, n):
-            if not feas[start, i] or V[start, i] <= NEG / 2:
+        nodes += n - start
+        # per-node invariants of the extension loop
+        live_s, r_s, r2_s, v_s = live[start], R[start], R2[start], Vl[start]
+        bound = tuple(y + 1e-12 for y in m) if nb >= 2 else None
+        edges = nb and (legs is not None or pv_ok is not None)
+        done = lo <= nb + 1 <= hi
+        grow = nb + 1 < hi
+        for i in range(start, n):
+            if not live_s[i]:
                 continue
-            nstate = step(state, nbins, start, i)
-            if nstate is None:
+            r = r_s[i]
+            if bound is not None and any(map(gt, r, bound)):
                 continue
-            nval = val + V[start, i]
+            nph = ph
+            if edges:
+                if legs is not None:
+                    if not fixed_ok[k][start][i]:
+                        continue
+                    nph = _phase_step(ph, legs, k, start, i)
+                    if nph is None:
+                        continue
+                if pv_ok is not None and not pv_ok(k, start, i):
+                    continue
+            nval = val + v_s[i]
             if i == n - 1:
-                if lo <= nbins + 1 <= hi and nval > best_val:
-                    best_val, best_segs = nval, segs + [(start, i)]
-            elif nbins + 1 < hi:
-                stack.append((i + 1, i + 1, segs + [(start, i)], nval, nstate))
-    shaped = [(c, tr) for c, tr in enumerate(trends)
-              if tr in ("concave", "convex")]
-    if exhausted and best_segs is None:
-        # budget hit before any complete partition: approximate with
-        # the polynomial mask DP (curvature implies unimodality) and
-        # keep the answer only if genuinely concave/convex per class
-        approx_trends = [
-            {"concave": "peak", "convex": "valley"}.get(t, t)
-            for t in trends
-        ]
-        n_pv_mapped = sum(1 for t in approx_trends if t in ("peak", "valley"))
-        if n_pv_mapped > 12:
-            # the mask-DP fallback would raise on its own 2^n_pv cap;
-            # report the exhaustion honestly instead of an unrelated
-            # phase-space error
-            return BinSolution([(0, n - 1)], 0.0, "UNKNOWN", None)
-        approx = _solve_multiclass_dp(V, RATEc, feas, lo, hi, approx_trends)
-        if approx.status == "OPTIMAL":
-            ok = True
-            for c, tr in shaped:
-                rates = [sgn[tr] * RATEc[j, i, c] for j, i in approx.segments]
-                ok &= all(
-                    rates[a] + rates[cc] <= 2.0 * rates[bb] + 1e-12
-                    for a in range(len(rates))
-                    for bb in range(a + 1, len(rates))
-                    for cc in range(bb + 1, len(rates))
-                )
-            if ok:
-                return BinSolution(
-                    approx.segments, approx.objective, "FEASIBLE", None)
-        # budget exhausted with nothing proven either way: the problem
-        # may well be feasible (e.g. >20 prebins with flat rates), so
-        # "INFEASIBLE" would be a lie — report UNKNOWN
-        return BinSolution([(0, n - 1)], 0.0, "UNKNOWN", None)
-    if best_segs is None:
-        return BinSolution([(0, n - 1)], 0.0, "INFEASIBLE", None)
-    return BinSolution(
-        best_segs, float(best_val),
-        "FEASIBLE" if exhausted else "OPTIMAL", None)
+                if done and (not found or _better_pinned(
+                        nval, bmask, best_val, best_mask)):
+                    best_val, best_mask, found = nval, bmask, True
+            elif grow:
+                stack.append((
+                    i + 1, nb + 1, start, nval,
+                    m if nb < 1 else tuple(map(min, m, map(sub, r2_s[i], mx))),
+                    tuple(map(max, mx, r)), nph, bmask | (1 << i)))
+    if found:
+        cuts = [i + 1 for i in range(n - 1) if best_mask >> i & 1]
+        segments = list(zip([0] + cuts, [c - 1 for c in cuts] + [n - 1]))
+        return (segments, float(best_val),
+                "FEASIBLE" if exhausted else "OPTIMAL")
+    if not exhausted:
+        return [(0, n - 1)], 0.0, "INFEASIBLE"
+    fixed, groups = _legs([_RELAX.get(t, t) for t in trends], shared)
+    if len(groups) <= _MAX_GROUPS:
+        segments, objective, status = _partition_dp(
+            V, lo, hi, rates, fixed, groups, 0.0, pv_ok)
+        sr = [R[j][i] for j, i in segments]
+        if status == "OPTIMAL" and all(
+                sr[a][c] + sr[e][c] <= 2.0 * sr[b][c] + 1e-12
+                for c in range(len(curved))
+                for a in range(len(sr))
+                for b in range(a + 1, len(sr))
+                for e in range(b + 1, len(sr))):
+            return segments, objective, "FEASIBLE"
+    return [(0, n - 1)], 0.0, "UNKNOWN"

@@ -16,9 +16,9 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from .binning import _BaseOptimalBinning
+from .binning import AUTO_TRENDS, _BaseOptimalBinning
 from .core.auto_monotonic import decide_trend
-from .core.solver import solve_multiclass
+from .core.solver import NODE_BUDGET, check_trend, solve_multiclass
 from .operators.binning_table import (
     format_bin_label,
     merge_segments,
@@ -201,19 +201,6 @@ class MulticlassOptimalBinning(_BaseOptimalBinning):
     _target_type = "multiclass"
 
     @property
-    def status(self) -> str:
-        """Solver status. Unlike the binary/continuous paths (exact
-        DP, always OPTIMAL once fitted), multiclass solves with
-        concave/convex per-class trends route through the anytime
-        joint enumeration, which can return FEASIBLE (best complete
-        partition under the node budget), UNKNOWN (budget exhausted,
-        nothing proven either way), or INFEASIBLE (proven) — surface
-        the real status instead of the base class's constant."""
-        self._check_fitted()
-        sol = getattr(self, "solution_", None)
-        return sol.status if sol is not None else "OPTIMAL"
-
-    @property
     def classes(self):
         """Target classes seen at fit (reference
         multiclass_binning.py classes property)."""
@@ -221,25 +208,27 @@ class MulticlassOptimalBinning(_BaseOptimalBinning):
         return np.asarray(self._table.classes)
 
     def __init__(self, *args, monotonic_trends=None,
-                 solver_node_budget: int = 2_000_000, **kw):
+                 solver_node_budget: int = NODE_BUDGET, **kw):
         """``monotonic_trends``: optional per-class list; each entry is
         one of the reference's eight values (None/'none', 'ascending',
         'descending', 'concave', 'convex', 'peak', 'valley',
         'peak_heuristic', 'valley_heuristic') or an auto mode resolved
         per class (reference multiclass_binning.py:98-106). All are
-        enforced exactly; invalid values raise ValueError at fit.
+        enforced exactly; an invalid value raises ValueError here.
         Limit: at most 12 classes may carry peak/valley trends
         simultaneously (the joint solve tracks one phase bit per such
         class — see core/solver.py solve_multiclass).
 
-        ``solver_node_budget``: node cap for the anytime joint
-        enumeration that concave/convex per-class trends route through
+        ``solver_node_budget``: node cap for the anytime shape search
+        that concave/convex per-class trends route through
         (this engine's analog of the reference's CP ``time_limit``,
         deterministic instead of wall-clock). If ``status`` reads
         FEASIBLE (best-under-budget) or UNKNOWN (exhausted, nothing
         proven), raising this is the lever that buys a proof."""
         kw.setdefault("monotonic_trend", "auto")
         super().__init__(*args, **kw)
+        for t in monotonic_trends or ():
+            check_trend(t, also=AUTO_TRENDS)
         # list of per-class trends, or None -> resolve per class
         self.monotonic_trends = monotonic_trends
         self.solver_node_budget = solver_node_budget
@@ -265,8 +254,6 @@ class MulticlassOptimalBinning(_BaseOptimalBinning):
         )
         cnt = M.sum(axis=1)
         # per-class trend resolution (one-vs-rest event rates)
-        auto_modes = ("auto", "auto_heuristic", "auto_asc_desc")
-
         def _auto_trend(c, mode):
             with np.errstate(divide="ignore", invalid="ignore"):
                 r = np.where(cnt > 0, M[:, c] / np.maximum(cnt, _EPS), 0.0)
@@ -280,10 +267,10 @@ class MulticlassOptimalBinning(_BaseOptimalBinning):
             # per-class list; auto entries resolved per class
             # (reference multiclass_binning.py:711-735)
             trends = [
-                _auto_trend(c, t) if t in auto_modes else t
+                _auto_trend(c, t) if t in AUTO_TRENDS else t
                 for c, t in enumerate(self.monotonic_trends)
             ]
-        elif self.monotonic_trend in auto_modes:
+        elif self.monotonic_trend in AUTO_TRENDS:
             trends = [
                 _auto_trend(c, self.monotonic_trend)
                 for c in range(len(classes))

@@ -23,7 +23,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .core.solver import solve_scenarios
+from .binning import _BaseOptimalBinning
+from .core.solver import check_trend, solve_scenarios
 from .operators.aggregation import _agg_exprs
 from .operators.binning_table import (
     BinningTableBinary,
@@ -61,6 +62,9 @@ class SBOptimalBinning:
         split_digits: int | None = None,
         show_digits: int = 2,
     ):
+        # auto_asc_desc is solved by solve_scenarios; the classifier
+        # auto modes of the single binners are not available here
+        check_trend(monotonic_trend, also=("auto_asc_desc",))
         self.name = name
         self.prebinning_method = prebinning_method
         self.max_n_prebins = max_n_prebins
@@ -217,11 +221,7 @@ class SBOptimalBinning:
         self._check_fitted()
         return self._splits
 
-    @property
-    def status(self) -> str:
-        """Solver status (reference binning.py:1178-1187)."""
-        self._check_fitted()
-        return "OPTIMAL"
+    status = _BaseOptimalBinning.status
 
     def binning_table_scenario(self, scenario_id: int):
         """Binning table of a single scenario (reference

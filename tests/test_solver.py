@@ -266,22 +266,25 @@ def test_dp_property_randomized_hypothesis():
     check()
 
 
-def test_shape_enum_node_budget_flat_profile():
+@pytest.mark.parametrize("target", ["binary", "scenario"])
+def test_shape_enum_node_budget_flat_profile(target):
     """Flat event rates defeat the concave/convex DFS pruning (the
     tree is the full 2^(n-1) prefix tree, ~4x per +2 prebins); the
     node budget must bound the solve to seconds and return a valid
-    (anytime) solution instead of hanging the driver."""
+    (anytime) solution instead of hanging the driver. The scenario
+    target (two flat scenarios) runs the same budgeted search."""
     import time
 
-    import numpy as np
-
-    from optbinning_spark.core.solver import solve_binary
+    from optbinning_spark.core.solver import solve_scenarios
 
     n = 26
-    ne = np.full(n, 100.0)
-    ev = np.full(n, 50.0)
     t0 = time.time()
-    sol = solve_binary(ne, ev, monotonic_trend="concave")
+    if target == "binary":
+        sol = solve_binary(np.full(n, 100.0), np.full(n, 50.0),
+                           monotonic_trend="concave")
+    else:
+        sol = solve_scenarios(np.full((n, 2), 100.0), np.full((n, 2), 50.0),
+                              monotonic_trend="concave")
     assert time.time() - t0 < 20.0
     assert sol.status in ("OPTIMAL", "FEASIBLE")
     # segments form a contiguous partition of [0, n)
@@ -290,6 +293,38 @@ def test_shape_enum_node_budget_flat_profile():
         assert c == b + 1
     # flat profile: IV is 0 for any partition
     assert abs(sol.objective) < 1e-9
+
+
+def test_shape_search_exhaustion_reports_unknown():
+    """Budget exhaustion proves nothing: with no complete partition
+    found and a DP relaxation (concave -> peak) whose optimum fails the
+    all-triples check, a binary concave solve reads UNKNOWN, as a
+    multiclass one does, not INFEASIBLE. The binary node budget has no
+    public lever, so the shape search is called with budget 0."""
+    from optbinning_spark.core import solver
+
+    # event rates 0.1, 0.15, 0.6, 0.2: a peak, but not concave
+    ev = np.array([10.0, 15.0, 60.0, 20.0])
+    ne = 100.0 - ev
+    with np.errstate(divide="ignore", invalid="ignore"):
+        peak = solve_binary(ne, ev, monotonic_trend="peak")
+    assert peak.n_bins == 4
+    full = solve_binary(ne, ev, monotonic_trend="concave")
+    assert full.status == "OPTIMAL" and full.n_bins < 4
+    V = np.full((4, 4), solver.NEG)
+    rates = np.zeros((4, 4, 1))
+    for j in range(4):
+        for i in range(j, 4):
+            e, t = ev[j:i + 1].sum(), 100.0 * (i + 1 - j)
+            p, q = e / ev.sum(), (t - e) / ne.sum()
+            V[j, i] = (p - q) * np.log(p / q)
+            rates[j, i, 0] = e / t
+    segments, objective, status = solver._shape_search(
+        V, 1, 4, rates, ["concave"], None, True, node_budget=0)
+    assert (segments, objective, status) == ([(0, 3)], 0.0, "UNKNOWN")
+    segments, objective, status = solver._shape_search(
+        V, 1, 4, rates, ["concave"], None, True, node_budget=10**6)
+    assert status == "OPTIMAL" and segments == full.segments
 
 
 def test_shape_enum_still_exact_below_budget():

@@ -167,7 +167,7 @@ def test_wide_fit_exact_oracle_is_deterministic_sf0001(n_runs):
 @pytest.mark.parametrize("n_profiles", [
     25, pytest.param(250, marks=pytest.mark.full)])
 def test_shape_enum_sql_matches_solver_fuzz(shape, n_profiles):
-    """The exact concave/convex solver (_solve_shape_enum, pruned DFS
+    """The exact concave/convex solver (_shape_search, pruned DFS
     with the r14 pinned selection) vs the same mask enumeration the
     concave/convex_binning_table oracles run: all-triples curvature
     with the engine's 1e-12 rate tolerance, round(iv,9) argmax, ties

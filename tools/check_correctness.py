@@ -2,15 +2,29 @@
 queries() entry on Spark and its oracle_sql() on DuckDB at sf0.01,
 compare row count, schema width, and order-insensitive values.
 
+The script imports the checkout it lives in (driver and Python
+workers). Spark runs every query on every run; a DuckDB oracle result
+is cached under ORACLE_CACHE (outside any checkout, so clones share
+it), keyed by the SHA-256 of the oracle's SQL text, the DuckDB version
+and the content of every input parquet, and a cached result prints as
+"(oracle cached)". Delete the directory to re-run every oracle.
+
 Usage: python tools/check_correctness.py [query_name ...]
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+import pickle
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the Python workers (mapInArrow kernels) import the same checkout
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 import duckdb
 import numpy as np
@@ -19,13 +33,38 @@ import pandas as pd
 import __spark_entry__ as entry_mod
 from optbinning_spark import get_spark
 
-import os
-
 SF_DIR = os.environ.get("SPARK_GRAFT_CHECK_SF", "/root/testdata/sf0.01")
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
+ORACLE_CACHE = os.path.join(
+    os.path.expanduser("~"), ".cache", "optbinning_spark", "oracles")
+
+
+def inputs_digest(sf_dir: str = SF_DIR) -> str:
+    """SHA-256 over the DuckDB version and every input parquet's bytes."""
+    h = hashlib.sha256(duckdb.__version__.encode())
+    for t in TABLES:
+        with open(f"{sf_dir}/{t}.parquet", "rb") as fh:
+            h.update(t.encode() + hashlib.sha256(fh.read()).digest())
+    return h.hexdigest()
+
+
+def oracle_df(con, sql: str, inputs: str) -> tuple[pd.DataFrame, bool]:
+    """The oracle's result and whether it came from the cache."""
+    key = hashlib.sha256((inputs + "\0" + sql).encode()).hexdigest()
+    path = os.path.join(ORACLE_CACHE, key + ".pkl")
+    if os.path.exists(path):
+        with open(path, "rb") as fh:
+            return pickle.load(fh), True
+    df = con.execute(sql).df()
+    os.makedirs(ORACLE_CACHE, exist_ok=True)
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "wb") as fh:
+        pickle.dump(df, fh)
+    os.replace(tmp, path)
+    return df, False
 
 
 def canon(df: pd.DataFrame, strict: bool = True) -> pd.DataFrame:
@@ -82,6 +121,7 @@ def main():
         )
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
+    inputs = inputs_digest()
     n_pass = n_fail = 0
     for name, fn in qs.items():
         if only and name not in only:
@@ -98,7 +138,7 @@ def main():
             n_pass += 1
             continue
         try:
-            odf = con.execute(oracles[name]).df()
+            odf, cached = oracle_df(con, oracles[name], inputs)
         except Exception as e:
             print(f"FAIL {name}: oracle error {str(e)[:300]}")
             n_fail += 1
@@ -120,7 +160,8 @@ def main():
             print("duck :", b[bad].head(3).to_dict("records"))
             n_fail += 1
             continue
-        print(f"PASS {name}: {len(a)} rows  ({time.time()-t0:.1f}s)")
+        note = "  (oracle cached)" if cached else ""
+        print(f"PASS {name}: {len(a)} rows  ({time.time()-t0:.1f}s){note}")
         n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     # keep the README's generated oracle-count honest (round-5 verdict:
@@ -129,9 +170,7 @@ def main():
         sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
         from update_readme_counts import generated_sentence
 
-        readme = open(os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "README.md")).read()
+        readme = open(os.path.join(ROOT, "README.md")).read()
         if generated_sentence() not in readme:
             print("NOTE: README oracle-count is stale — run "
                   "tools/update_readme_counts.py")
