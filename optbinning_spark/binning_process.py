@@ -49,6 +49,7 @@ from .operators.aggregation import (  # noqa: F401  (assemble_bin_stats is re-ex
     _metric_names,
     assemble_bin_stats,
     bin_stats_from_values,
+    check_binary_labels,
     row_metrics,
     split_value_rows,
 )
@@ -705,19 +706,25 @@ class BinningProcess:
             *(agg_cols if agg_cols is not None
               else _agg_exprs("__y", "__w", tt, classes)))
         if not bounded:
-            return grouped.collect()
-        # bounded collect: exact values are LIMIT-backstopped; buckets
-        # and special/missing groups are bounded by construction; the
-        # allowance covers 100k categories per categorical
-        small_n = len(numeric) - len(big)
-        cap = (
-            _PER_VAR_CAP * 2 * max(small_n, 1)
-            + (_N_HIST + 2) * max(len(big), 1)
-            + 100_000 * max(len(categorical), 1)
-            + 4 * len(self.variable_names)
-        ) * cap_mult
-        rows = grouped.limit(cap + 1).collect()
-        return None if len(rows) > cap else rows
+            rows = grouped.collect()
+        else:
+            # bounded collect: exact values are LIMIT-backstopped;
+            # buckets and special/missing groups are bounded by
+            # construction; the allowance covers 100k categories per
+            # categorical
+            small_n = len(numeric) - len(big)
+            cap = (
+                _PER_VAR_CAP * 2 * max(small_n, 1)
+                + (_N_HIST + 2) * max(len(big), 1)
+                + 100_000 * max(len(categorical), 1)
+                + 4 * len(self.variable_names)
+            ) * cap_mult
+            rows = grouped.limit(cap + 1).collect()
+            if len(rows) > cap:
+                return None
+        if agg_cols is None:
+            check_binary_labels(rows, tt)
+        return rows
 
     # ------------------------------------------------------------------
     def _reduce_stacked(self, rows, numeric, categorical, fixed,

@@ -22,6 +22,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .fastlit import sql_ident
 from .preprocessing import (
     CLEAN,
     MISSING,
@@ -43,13 +44,26 @@ class BinStats:
         self.n_bins = n_bins
 
 
+# A binary aggregation also counts the rows whose label is neither 0
+# nor 1 (NaN included; a NULL label is not counted): they fall in
+# neither class sum, so without this count a fit would silently drop
+# them. Every collect of a binary aggregation passes its rows through
+# ``check_binary_labels`` before the solve.
+N_BAD_LABEL = "__n_bad_label"
+
+
 def _agg_exprs(y_col: str, w_col: str | None, target_type: str, classes=None):
     w = F.col(w_col) if w_col else F.lit(1.0)
     y = F.col(y_col)
     if target_type == "binary":
+        q = sql_ident(y_col)
         return [
             F.coalesce(F.sum(F.when(y == 0, w)), F.lit(0.0)).alias("n_nonevent"),
             F.coalesce(F.sum(F.when(y == 1, w)), F.lit(0.0)).alias("n_event"),
+            # one parsed expression: a Column-built one costs ~10 more
+            # py4j round trips per aggregation
+            F.expr(f"count(CASE WHEN NOT ({q} = 0 OR {q} = 1) THEN 1 END)"
+                   ).alias(N_BAD_LABEL),
         ]
     if target_type == "continuous":
         return [
@@ -66,6 +80,19 @@ def _agg_exprs(y_col: str, w_col: str | None, target_type: str, classes=None):
             for i, c in enumerate(classes)
         ]
     raise ValueError(target_type)
+
+
+def check_binary_labels(rows, target_type: str = "binary") -> None:
+    """Refuse a binary fit whose collected aggregate ``rows`` counted
+    labels outside {0, 1} (see ``N_BAD_LABEL``)."""
+    if target_type != "binary":
+        return
+    n_bad = sum(r[N_BAD_LABEL] or 0 for r in rows)
+    if n_bad:
+        raise ValueError(
+            f"binary target: {n_bad} row(s) have a label outside {{0, 1}} "
+            "(NaN included); filter or recode them, or fit a continuous "
+            "or multiclass binner")
 
 
 def _metric_names(target_type: str, classes=None) -> list[str]:
@@ -155,6 +182,7 @@ def value_stats(
     )
     if len(rows) > cap:
         return None
+    check_binary_labels(rows, target_type)
     clean_rows, per_value, missing, specials = split_value_rows(
         rows, _metric_names(target_type, classes), "__v")
     values = np.array([r["__v"] for r in clean_rows], dtype=float)
@@ -205,6 +233,7 @@ def bucket_value_stats(
         )
         .collect()
     )
+    check_binary_labels(rows, target_type)
     clean_rows, per_value, missing, specials = split_value_rows(
         rows, _metric_names(target_type, classes), "__b")
     values = np.array([r["__vmax"] for r in clean_rows], dtype=float)
@@ -314,6 +343,7 @@ def bin_stats(
         .agg(*_agg_exprs(y_col, w_col, target_type, classes))
         .collect()
     )
+    check_binary_labels(rows, target_type)
     return assemble_bin_stats(rows, n_bins, target_type, classes)
 
 
@@ -397,6 +427,9 @@ def categorical_value_stats(
         .limit(max_categories + 16)  # non-clean rows ride along
         .collect()
     )
+    truncated = len(rows) >= max_categories + 16
+    if not truncated:
+        check_binary_labels(rows, target_type)
     cats: dict = {}
     missing = {m: 0.0 for m in metrics}
     specials: dict[str, dict[str, float]] = {}
@@ -412,14 +445,19 @@ def categorical_value_stats(
             specials[g] = vals
 
     tail = None
-    if len(cats) > max_categories or len(rows) >= max_categories + 16:
+    if len(cats) > max_categories or truncated:
         # truncated: recover the tail's aggregate as totals - collected
         additive = [m for m in metrics if m not in ("min_y", "max_y")]
+        clean = F.col("sample_class") == CLEAN
         tot = (
-            grouped.filter(F.col("sample_class") == CLEAN)
-            .agg(*[F.sum(m).alias(m) for m in additive])
+            grouped.agg(
+                *[F.sum(F.when(clean, F.col(m))).alias(m) for m in additive],
+                # the label check over every group, the tail's included
+                *([F.sum(N_BAD_LABEL).alias(N_BAD_LABEL)]
+                  if target_type == "binary" else []))
             .collect()[0]
         )
+        check_binary_labels([tot], target_type)
         tail = {
             m: float(tot[m] or 0.0) - sum(v[m] for v in cats.values())
             for m in additive
@@ -477,6 +515,7 @@ def stacked_bin_stats(
         .agg(*_agg_exprs(y_col, w_col, target_type, classes))
         .collect()
     )
+    check_binary_labels(rows, target_type)
     by_var: dict[str, list] = {v["name"]: [] for v in variables}
     for r in rows:
         by_var[r["variable"]].append(r)

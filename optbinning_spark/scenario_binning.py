@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from .binning import _BaseOptimalBinning
 from .core.solver import check_trend, solve_scenarios
-from .operators.aggregation import _agg_exprs
+from .operators.aggregation import _agg_exprs, check_binary_labels
 from .operators.binning_table import (
     BinningTableBinary,
     merge_segments as _merge_segments,
@@ -127,6 +127,7 @@ class SBOptimalBinning:
             .agg(*_agg_exprs(y, None, "binary"))
             .collect()
         )
+        check_binary_labels(rows)
 
         scenarios = sorted({r["__scenario"] for r in rows})
         self.scenarios_ = scenarios

@@ -405,9 +405,9 @@ class Scorecard:
                       .otherwise(F.lit(0))).alias("__badlab"),
             )
         # The design is computed ONCE per fit: a lazy local checkpoint
-        # is materialized by the first action over it (the fetch below,
-        # else MLlib's first job), and both the fetch and every MLlib
-        # pass then read that materialization. Not cache(): AQE cannot
+        # is materialized by the first action over it (the fetch
+        # below), and every MLlib pass then reads that
+        # materialization. Not cache(): AQE cannot
         # coalesce a cached plan's partitions
         # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is
         # false), so a design of a few thousand rows kept
@@ -429,65 +429,64 @@ class Scorecard:
         # (high-cardinality interactions) fall back to MLlib.
         reg = float(self.estimator_params.get("regParam", 0.0))
         max_driver_rows = int(self.estimator_params.get("max_driver_rows", 100_000))
-        if reg == 0.0:
-            # deterministic order: the normal-equation sums are float
-            # and order-dependent at the last ulp; a stable orderBy
-            # makes consecutive fits bit-identical. Fetched as Arrow
-            # columns, not py4j Rows: the design can hold
-            # max_driver_rows rows, and at 20k rows Rows plus a float
-            # loop took ~10x the transfer time and raised the driver's
-            # memory peak by ~11 MB more (4 vCPU).
-            #
-            # The sort key puts the groups that would bias or poison
-            # every coefficient FIRST: a NULL (for the linear
-            # estimator's label, counted per group by __badlab) ahead
-            # of a NaN/Inf (Spark's sum PROPAGATES NaN through the
-            # compression), in a WoE feature, the label or the weight.
-            # On a clean design the key is 0 everywhere, so the row
-            # order is the (features, label) order. The first fetched
-            # row thus decides the refusal on both routes, including
-            # above the cap, where MLlib would otherwise fit biased
-            # group means (linear) or raise a raw Spark error
-            # (logistic).
-            cols = [*self.selected_, y, "__w"]
-            nulls = [f"{sql_ident(c)} IS NULL" for c in cols]
-            if kind != "logistic":
-                nulls.append("`__badlab` > 0")
-            nonfinite = [
-                f"isnan({c}) OR abs({c}) = CAST('Infinity' AS DOUBLE)"
-                for c in (f"CAST({sql_ident(v)} AS DOUBLE)" for v in cols)]
-            bad_first = F.expr(
-                f"CASE WHEN {' OR '.join(nulls)} THEN 2"
-                f" WHEN {' OR '.join(nonfinite)} THEN 1 ELSE 0 END").desc()
-            tbl = (design.orderBy(bad_first, *self.selected_, y)
-                   .limit(max_driver_rows + 1).toArrow())
-            n = tbl.num_rows
-            first = {c: tbl.column(c)[0].as_py()
-                     for c in tbl.column_names} if n else {}
-            if (any(v is None for v in first.values())
-                    or first.get("__badlab", 0) > 0):
-                raise ValueError(
-                    "null in the estimator design (WoE feature, label "
-                    "or weight) — the target column carries missing "
-                    "values; filter or impute the offending rows "
-                    "before Scorecard.fit")
-            if not np.isfinite([float(first[c]) for c in first]).all():
-                raise ValueError(
-                    "non-finite value in the estimator design (WoE "
-                    "feature, label or weight) — the target column "
-                    "carries NaN/Inf; filter or impute the offending "
-                    "rows before Scorecard.fit")
-            if n <= max_driver_rows:
-                X, yy, ww = _design(
-                    [tbl.column(c).to_numpy().astype(float) for c in cols],
-                    n, len(self.selected_))
-                del tbl
-                if kind == "logistic":
-                    return _driver_logistic(X, yy, ww)
-                if kind == "linear":
-                    return _driver_wls(X, yy, ww)
-                raise ValueError(f"unknown estimator {kind}")
+        # deterministic order: the normal-equation sums are float and
+        # order-dependent at the last ulp; a stable orderBy makes
+        # consecutive fits bit-identical. Fetched as Arrow columns, not
+        # py4j Rows: the design can hold max_driver_rows rows, and at
+        # 20k rows Rows plus a float loop took ~10x the transfer time
+        # and raised the driver's memory peak by ~11 MB more (4 vCPU).
+        #
+        # The sort key puts the groups that would bias or poison every
+        # coefficient FIRST: a NULL (for the linear estimator's label,
+        # counted per group by __badlab) ahead of a NaN/Inf (Spark's
+        # sum PROPAGATES NaN through the compression), in a WoE
+        # feature, the label or the weight. On a clean design the key
+        # is 0 everywhere, so the row order is the (features, label)
+        # order. The first fetched row thus decides the refusal on
+        # every route, including MLlib's (regParam > 0, or above the
+        # cap), which would otherwise fit biased group means (linear)
+        # or raise a raw Spark error (logistic). MLlib needs only that
+        # first row (``limit(1)``); the fetch also materializes the
+        # checkpoint it then reads.
+        cols = [*self.selected_, y, "__w"]
+        nulls = [f"{sql_ident(c)} IS NULL" for c in cols]
+        if kind != "logistic":
+            nulls.append("`__badlab` > 0")
+        nonfinite = [
+            f"isnan({c}) OR abs({c}) = CAST('Infinity' AS DOUBLE)"
+            for c in (f"CAST({sql_ident(v)} AS DOUBLE)" for v in cols)]
+        bad_first = F.expr(
+            f"CASE WHEN {' OR '.join(nulls)} THEN 2"
+            f" WHEN {' OR '.join(nonfinite)} THEN 1 ELSE 0 END").desc()
+        tbl = (design.orderBy(bad_first, *self.selected_, y)
+               .limit(max_driver_rows + 1 if reg == 0.0 else 1).toArrow())
+        n = tbl.num_rows
+        first = {c: tbl.column(c)[0].as_py()
+                 for c in tbl.column_names} if n else {}
+        if (any(v is None for v in first.values())
+                or first.get("__badlab", 0) > 0):
+            raise ValueError(
+                "null in the estimator design (WoE feature, label "
+                "or weight) — the target column carries missing "
+                "values; filter or impute the offending rows "
+                "before Scorecard.fit")
+        if not np.isfinite([float(first[c]) for c in first]).all():
+            raise ValueError(
+                "non-finite value in the estimator design (WoE "
+                "feature, label or weight) — the target column "
+                "carries NaN/Inf; filter or impute the offending "
+                "rows before Scorecard.fit")
+        if reg == 0.0 and n <= max_driver_rows:
+            X, yy, ww = _design(
+                [tbl.column(c).to_numpy().astype(float) for c in cols],
+                n, len(self.selected_))
             del tbl
+            if kind == "logistic":
+                return _driver_logistic(X, yy, ww)
+            if kind == "linear":
+                return _driver_wls(X, yy, ww)
+            raise ValueError(f"unknown estimator {kind}")
+        del tbl
 
         assembled = VectorAssembler(
             inputCols=self.selected_, outputCol="__features").transform(design)

@@ -230,3 +230,27 @@ def test_driver_closure_on_zero_edges(spark, monkeypatch):
     # self-loops are dropped before the closure: 0 edges again
     assert _driver_closure(
         spark, monkeypatch, [(4, 4), (9, 9)], "id_a long, id_b long") == {}
+
+
+@pytest.mark.parametrize("kind", ["logistic", "linear"])
+@pytest.mark.parametrize("bad,message", [
+    (None, "null in the estimator design"),
+    (float("nan"), "non-finite value in the estimator design"),
+])
+def test_null_and_nan_labels_refused_with_regularization(spark, kind, bad,
+                                                         message):
+    """``regParam > 0`` always fits through MLlib; the bad-first fetch
+    (one row) still runs first, so 10% NULL or NaN labels raise the
+    same named refusals instead of MLlib's raw Spark error or a silent
+    fit on biased group means."""
+    label = "y" if kind == "logistic" else "yc"
+    rows = [(*r[:4], float(r[4]), r[5]) for r in _rows(1_500)]
+    for i in range(0, len(rows), 10):
+        rows[i] = (*rows[i][:4], bad, rows[i][5]) if label == "y" \
+            else (*rows[i][:5], bad)
+    df = spark.createDataFrame(
+        rows, "id long, a double, b double, c string, y double, yc double")
+    with pytest.raises(ValueError, match=message):
+        Scorecard(BinningProcess(VARS, categorical_variables=["c"]),
+                  estimator=kind,
+                  estimator_params={"regParam": 1e-6}).fit(df, label)

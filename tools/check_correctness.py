@@ -14,10 +14,13 @@ Usage: python tools/check_correctness.py [query_name ...]
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import pickle
+import shutil
 import sys
+import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -40,6 +43,7 @@ TABLES = [
 ]
 ORACLE_CACHE = os.path.join(
     os.path.expanduser("~"), ".cache", "optbinning_spark", "oracles")
+DUCKDB_MEMORY_LIMIT = "1GB"
 
 
 def inputs_digest(sf_dir: str = SF_DIR) -> str:
@@ -114,7 +118,15 @@ def main():
     only = set(sys.argv[1:])
     spark = get_spark(cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
+    # DuckDB's default memory limit is 80% of the host's RAM: the
+    # wide_fit_exact oracle held 3.2-4.7 GB RSS in this process at
+    # sf0.001, enough to starve the Spark JVM beside it on a 15 GB
+    # host. Cap it and give DuckDB a spill directory (an in-memory
+    # database would otherwise spill into the working directory).
+    spill = tempfile.mkdtemp(prefix="check_correctness_duckdb_")
+    atexit.register(shutil.rmtree, spill, ignore_errors=True)
+    con = duckdb.connect(config={"memory_limit": DUCKDB_MEMORY_LIMIT,
+                                 "temp_directory": spill})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
