@@ -43,7 +43,7 @@ TABLES = [
 ]
 ORACLE_CACHE = os.path.join(
     os.path.expanduser("~"), ".cache", "optbinning_spark", "oracles")
-DUCKDB_MEMORY_LIMIT = "1GB"
+DUCKDB_MEMORY_LIMIT = "6GB"
 
 
 def inputs_digest(sf_dir: str = SF_DIR) -> str:
@@ -123,6 +123,8 @@ def main():
     # sf0.001, enough to starve the Spark JVM beside it on a 15 GB
     # host. Cap it and give DuckDB a spill directory (an in-memory
     # database would otherwise spill into the working directory).
+    # That oracle needs the cap above 4 GB: at 1-4 GB (1-2 threads)
+    # it failed with DuckDB's "failed to pin block" out-of-memory.
     spill = tempfile.mkdtemp(prefix="check_correctness_duckdb_")
     atexit.register(shutil.rmtree, spill, ignore_errors=True)
     con = duckdb.connect(config={"memory_limit": DUCKDB_MEMORY_LIMIT,
