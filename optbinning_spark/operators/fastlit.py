@@ -66,11 +66,15 @@ def _assert_default_string_parser() -> None:
     Hive-compat setting true, ``\\uXXXX`` escapes and doubled
     backslashes parse as literal characters and silently produce wrong
     tokenization/shingles/vocab maps. Fail loudly instead — checked
-    once per active session (one conf round trip), never per render."""
+    once per active session (one conf round trip), never per render.
+
+    The session is the Python handle ``SparkSession.getActiveSession()``
+    returns, read directly: that call costs four py4j round trips, and
+    this runs on every render (40 commands per perfbench score op)."""
     try:
         from pyspark.sql import SparkSession
 
-        s = SparkSession.getActiveSession()
+        s = SparkSession._activeSession
     except Exception:
         return
     if s is None:

@@ -24,13 +24,14 @@ def get_spark(app_name: str = "optbinning_spark", cpus: int | None = None):
     the origin in the JVM (py4j round trips on every call), walks the
     Python stack, and tries ``import IPython``, which pulls about 26 MB
     into the driver. This engine builds plans from hundreds of Column
-    calls per fit, so the capture was about half of all py4j commands:
-    a warm perfbench ``binning_fit`` cycle (4 vCPU,
-    ``tools/py4j_ledger.py``) sent 7,377 commands with it and 3,628
-    without, and the driver's peak RSS after one ``OptimalBinning``
-    fit fell from 141 to 114 MB. Plans, jobs and results are the same. What is
-    lost: an error raised by a DataFrame API call no longer carries
-    the Python call site in its "DataFrame context" section.
+    calls per fit, so the capture was more than half of all py4j
+    commands: a warm perfbench ``binning_fit`` cycle (4 vCPU,
+    ``tools/py4j_ledger.py``) sent 6,027 commands with it and 2,577
+    without (not counting the ones that release freed proxies), and
+    the driver's peak RSS in a perfbench ``binning_fit`` run fell from
+    162 to 141 MB. Plans, jobs and results are the same. What is lost:
+    an error raised by a DataFrame API call no longer carries the
+    Python call site in its "DataFrame context" section.
 
     The conf is static, so it only applies to a session this function
     builds; a session that already exists (``getOrCreate`` returns it)

@@ -99,3 +99,23 @@ def test_score_plan_commands(monkeypatch, lineitem):
     sc.fit(lineitem, "y")
     n = _commands(monkeypatch, lambda: sc.score(lineitem))
     assert n <= BUDGET["score_plan"], n
+
+
+def test_string_literal_render_sends_no_command(spark, monkeypatch):
+    """``sql_str_lit`` checks the session's parser conf once, then
+    renders without a round trip (it runs once per rendered string)."""
+    from optbinning_spark.operators import fastlit
+
+    assert _commands(monkeypatch, lambda: fastlit.sql_str_lit("a'b")) == 0
+
+
+def test_string_literal_refuses_escaped_parser(spark, monkeypatch):
+    from optbinning_spark.operators import fastlit
+
+    monkeypatch.setattr(fastlit, "_parser_checked_sessions", set())
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    try:
+        with pytest.raises(RuntimeError, match="escapedStringLiterals"):
+            fastlit.sql_str_lit("x")
+    finally:
+        spark.conf.unset("spark.sql.parser.escapedStringLiterals")

@@ -10,11 +10,14 @@ cycles with py4j's ``send_command`` wrapped at runtime. Per operation
 it prints the median over those cycles of:
 
 - wall time, a ``gc.collect()`` after the operation included;
-- py4j commands sent, and the time spent inside them (an action blocks
-  inside py4j, so this includes the Spark jobs' busy time). The count
-  includes the one command per JVM object that a freed Python proxy
-  releases (the releases column counts those); the ``gc.collect()`` charges an operation's own garbage to
-  it instead of to whichever operation the collector next runs in;
+- py4j commands sent, not counting releases (the count that
+  ``tests/test_py4j_budget.py`` pins);
+- releases: the commands that release the JVM object a freed Python
+  proxy held, one per object. Their timing is set by when Python frees
+  the proxies; the ``gc.collect()`` charges an operation's own garbage
+  to it instead of to whichever operation the collector next runs in;
+- the time spent inside all those commands (an action blocks inside
+  py4j, so this includes the Spark jobs' busy time);
 - Spark jobs started (``statusTracker`` of a per-operation job group);
 - the ``optbinning_spark`` call sites that sent the most commands (the
   innermost library frame on the stack of each command), summed over
@@ -31,6 +34,7 @@ from __future__ import annotations
 
 import argparse
 import collections
+import contextlib
 import gc
 import os
 import shutil
@@ -73,13 +77,15 @@ class Ledger:
             if not ledger.active:
                 return send(conn, command, *args, **kwargs)
             ledger.sites[_call_site()] += 1
-            ledger.releases += command.startswith(MEMORY_COMMAND_NAME)
+            if command.startswith(MEMORY_COMMAND_NAME):
+                ledger.releases += 1
+            else:
+                ledger.commands += 1
             t = time.perf_counter()
             try:
                 return send(conn, command, *args, **kwargs)
             finally:
                 ledger.seconds += time.perf_counter() - t
-                ledger.commands += 1
 
         return send_command
 
@@ -95,8 +101,6 @@ def _call_site() -> str:
 
 
 def _null_span(name):
-    import contextlib
-
     return contextlib.nullcontext()
 
 
