@@ -19,12 +19,12 @@ the proxies are freed (0 or 200-370 of them in repeats of one fit).
 With them out, the counts repeat exactly.
 """
 
-import pyspark.sql.functions as F
 import pytest
 from py4j import protocol as proto
 from py4j.clientserver import ClientServerConnection
 
-SF = "/root/testdata/sf0.001"
+from tests.test_plan_quality import lineitem  # noqa: F401  (fixture)
+
 NARROW = ["l_quantity", "l_discount", "l_tax", "l_linenumber", "l_linestatus"]
 NARROW_CATEGORICAL = ["l_linestatus"]
 
@@ -36,14 +36,6 @@ BUDGET = {
     "narrow_process_fit": 588,
     "score_plan": 15,
 }
-
-
-@pytest.fixture(scope="module")
-def lineitem(spark):
-    return (
-        spark.read.parquet(f"{SF}/lineitem.parquet")
-        .withColumn("y", (F.col("l_returnflag") == "R").cast("int"))
-    )
 
 
 def _commands(monkeypatch, fn) -> int:
